@@ -930,78 +930,57 @@ object DedupOps {
     // truncated lineage and never reads them).
     val sym = sym0.localCheckpoint(eager = true)
     val symRdd = org.apache.spark.sql.graftshim.Shim.checkpointRdd(sym)
-    // Size-gated driver union-find (round 21, guide §1.2/§5): the
-    // distributed fixpoint's cost is ~all fixed per-round job overhead
-    // once the edge set is small — at sf0.1 each 5-exchange round costs
+    // Size-gated driver union-find (round 21): the distributed
+    // fixpoint's cost is ~all fixed per-round job overhead once the
+    // edge set is small — at sf0.1 each 5-exchange round costs
     // 0.4–1.6 s against graphs of a few thousand edges, and SIX queries
-    // run a fixpoint per bench pass. Below the gate the edge list is
-    // collected ONCE off the already-materialized checkpoint blocks
-    // (bounded: ≤ localMaxEdges × 16 B — the same bounded-collect
-    // contract as the PQ codebook build) and resolved with union-find
-    // on the driver; the result is exactly the per-component minimum
-    // label the fixpoint converges to, returned as a local relation.
-    // Above the gate (the true 100 TB dup graph) the distributed loop
-    // below runs unchanged. Gate conf: spark.graft.cc.localMaxEdges
-    // (default 4M edges ≈ 64 MB; 0 forces the distributed path — the
-    // convergence specs use it).
-    val localMax = sym.sparkSession.conf
-      .get("spark.graft.cc.localMaxEdges", "4000000").toLong
-    // Gate probe WITHOUT a dedicated count job (VERDICT r21 #3/#7): the
-    // eager localCheckpoint above just materialized sym's blocks, so
-    // the block manager already knows their size — estimate the edge
-    // count as storedBytes / 16 (a 2-long row occupies ≥ 24 B
-    // deserialized in memory and ≥ 16 B serialized on disk, so the
-    // estimate only ever OVER-counts edges; over-counting can only
-    // push a near-gate graph onto the distributed path — fails closed,
-    // never collects more than the gate's byte bound). Falls back to
-    // the old count() probe when the storage info is not yet visible
-    // (listener lag) or reads zero bytes (empty edge set).
-    val nEdges: Long = {
-      val ids = symRdd.map(_.id).toSet
-      val infos = sym.sparkSession.sparkContext.getRDDStorageInfo
-        .filter(i => ids(i.id))
-      val bytes = infos.map(i => i.memSize + i.diskSize).sum
-      if (infos.nonEmpty && bytes > 0) bytes / 16 else sym.count()
-    }
-    if (nEdges <= localMax) {
-      val edges = sym.select(col("src"), col("dst")).collect()
-      val parent = new java.util.HashMap[Long, Long](edges.length * 2)
+    // run a fixpoint per bench pass. Under the [[DriverLocal]] bound
+    // the edge list is collected ONCE off the already-materialized
+    // checkpoint blocks and resolved with union-find on the driver; the
+    // result is exactly the per-component minimum label the fixpoint
+    // converges to, returned as a local relation. Above the bound (the
+    // true 100 TB dup graph) the distributed loop below runs unchanged.
+    // Edge count without a dedicated count job (VERDICT r21 #3/#7): the
+    // eager localCheckpoint above just materialized sym's blocks, and a
+    // 2-long row held deserialized in memory occupies ≥ 16 B, so the
+    // stored bytes / 16 bound the edge count E from above; any other
+    // storage state (spilled, serialized, not yet visible) counts.
+    // Driver bytes per edge: the collected pair (16) and at most 4 LongMap
+    // slots of 12 B (the table is sized for 2E entries); per vertex
+    // (V ≤ E: sym holds both directions of every edge) the boxed parent
+    // (16), the key list and (doc_id, cluster) tuple list (~104) and the
+    // local relation's row (~72).
+    val s = sym.sparkSession
+    val edgesUb = DriverLocal.cachedBytes(s, symRdd.map(_.id).toSet)
+      .map(_ / 16).getOrElse(sym.count())
+    if (DriverLocal.admit(s, "cc", Some(edgesUb * (64 + 192)))) {
+      val edges = DriverLocal.collectLongs(sym.select(col("src"), col("dst")))
+      val parent = new scala.collection.mutable.LongMap[Long](edges.length)
       def find(x0: Long): Long = {
         var x = x0
-        var p = parent.get(x)
+        var p = parent(x)
         while (p != x) { // path halving
-          val gp = parent.get(p)
-          parent.put(x, gp); x = gp; p = parent.get(x)
+          val gp = parent(p)
+          parent(x) = gp; x = gp; p = parent(x)
         }
         x
       }
-      edges.foreach { r =>
-        val a = r.getLong(0); val b = r.getLong(1)
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
+      var i = 0
+      while (i < edges.length) {
+        val a = edges(i); val b = edges(i + 1)
+        if (!parent.contains(a)) parent(a) = a
+        if (!parent.contains(b)) parent(b) = b
         val ra = find(a); val rb = find(b)
         // union by min id: the root IS the component minimum so far
-        if (ra < rb) parent.put(rb, ra)
-        else if (rb < ra) parent.put(ra, rb)
+        if (ra < rb) parent(rb) = ra
+        else if (rb < ra) parent(ra) = rb
+        i += 2
       }
-      val out = new Array[org.apache.spark.sql.Row](parent.size)
-      val it = parent.keySet.iterator; var i = 0
-      while (it.hasNext) {
-        val v = it.next()
-        out(i) = org.apache.spark.sql.Row(v, find(v)); i += 1
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("cluster",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      val labels = sym.sparkSession.createDataFrame(
-        java.util.Arrays.asList(out: _*), schema)
+      import s.implicits._
+      val labels = parent.keys.toSeq.map(v => (v, find(v)))
+        .toDF("doc_id", "cluster")
       symRdd.foreach(r => try r.unpersist(blocking = false)
                           catch { case _: Exception => () })
-      System.err.println(s"[propagateMinLabels] local union-find: " +
-        s"${edges.length} edges (est $nEdges), ${parent.size} vertices " +
-        s"(gate $localMax)")
       return (labels, 0)
     }
     // Only vertices that appear in an edge can ever change label — the

@@ -1,0 +1,171 @@
+package graft.ops
+
+import scala.collection.mutable.ArrayBuilder
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
+
+/** Bounded driver-local execution: the one gate for every "small
+  * input runs on the driver" twin — the connected-components
+  * union-find ([[DedupOps.propagateMinLabels]]), the k-means Lloyd
+  * ([[SimOps]]) and the PageRank rounds ([[GraphOps]]). At fixture
+  * scale a distributed spelling's cost is fixed per-job overhead.
+  *
+  * Each site passes an estimate of its driver working set (rows × bytes
+  * per row: the collected primitive payload, plus the driver structures
+  * the site builds per row where it counts them) and [[admit]] decides
+  * against one bound under one key, `spark.graft.local.maxBytes`:
+  * unset, the driver heap / 8 (384 MiB at a 3 g heap), and never above
+  * `spark.driver.maxResultSize`; `0` forces every site onto its
+  * distributed path. No estimate (an unreadable input) fails closed
+  * to the distributed path. Estimates read metadata, never data:
+  * parquet footer counts ([[footerBytes]]; on-disk bytes say nothing
+  * about a projected, decompressed collect) or a materialized
+  * checkpoint's deserialized in-memory bytes ([[cachedBytes]]). Under
+  * the bound the site
+  * collects ONCE into primitive arrays built per partition from the
+  * executed plan's internal rows ([[collectLongs]],
+  * [[collectVectors]]) and runs its loop on the driver. */
+object DriverLocal {
+  val MaxBytesKey = "spark.graft.local.maxBytes"
+
+  /** The driver-local bound in bytes (see the object scaladoc). */
+  private def maxBytes(s: SparkSession): Long =
+    bound(s.conf.getOption(MaxBytesKey).map(_.trim.toLong),
+      Runtime.getRuntime.maxMemory,
+      s.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize",
+        "1g"))
+
+  /** `setting`, else `heap` / 8, and never above a positive
+    * `maxResultSize`: a collect whose results pass it aborts. */
+  private[ops] def bound(setting: Option[Long], heap: Long,
+                         maxResultSize: Long): Long = {
+    val b = setting.getOrElse(heap / 8)
+    if (maxResultSize > 0) math.min(b, maxResultSize) else b
+  }
+
+  /** The gate: true when `site` may run on the driver. Emits one
+    * decision line per call, the same format for every site. */
+  def admit(s: SparkSession, site: String, estimate: Option[Long])
+      : Boolean = {
+    val limit = maxBytes(s)
+    val local = limit > 0 && estimate.exists(_ <= limit)
+    System.err.println(s"[local] $site: estimate=" +
+      estimate.fold("none")(e => s"$e B") + s" bound=$limit B -> " +
+      (if (local) "driver" else "distributed"))
+    local
+  }
+
+  /** Σ over the parquet footers of `path` (a file or a one-level
+    * directory of part files) of rows × `rowBytes` + elements of the
+    * list column `listCol` × `elemBytes`. Metadata only. None when any
+    * footer is unreadable, so [[admit]] fails closed. */
+  def footerBytes(s: SparkSession, path: String, rowBytes: Long,
+                  listCol: String = "", elemBytes: Long = 0L)
+      : Option[Long] = try {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = s.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val st = fs.getFileStatus(p)
+    val files =
+      if (st.isDirectory) fs.listStatus(p).toSeq.filter { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      } else Seq(st)
+    Some(files.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try r.getFooter.getBlocks.asScala.map { b =>
+        val elems = if (listCol.isEmpty) 0L else b.getColumns.asScala
+          .filter(_.getPath.toDotString.startsWith(listCol + "."))
+          .map(_.getValueCount).sum
+        b.getRowCount * rowBytes + elems * elemBytes
+      }.sum
+      finally r.close()
+    }.sum)
+  } catch { case NonFatal(_) => None }
+
+  /** Stored bytes of the cached RDDs `ids` — only when every partition
+    * is cached, held deserialized in memory, with nothing on disk.
+    * Deserialized blocks are never compressed (`spark.rdd.compress`
+    * applies to serialized and disk blocks), so the figure cannot fall
+    * below the payload; otherwise None and the caller counts. */
+  def cachedBytes(s: SparkSession, ids: Set[Int]): Option[Long] = {
+    val infos = s.sparkContext.getRDDStorageInfo.filter(i => ids(i.id))
+    val whole = infos.nonEmpty && infos.forall(i =>
+      i.numCachedPartitions == i.numPartitions && i.diskSize == 0 &&
+        i.storageLevel.deserialized)
+    val bytes = infos.map(_.memSize).sum
+    if (whole && bytes > 0) Some(bytes) else None
+  }
+
+  /** One job: `f` folds each partition's internal rows into one value
+    * on the executor; the per-partition values come back to the
+    * driver. Runs under a SQL execution id like a Dataset action, so
+    * query listeners see the plan. */
+  private def collectParts[T: ClassTag](df: DataFrame)
+      (f: Iterator[InternalRow] => T): Array[T] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan.execute()
+        .mapPartitions(it => Iterator.single(f(it))).collect()
+    }
+  }
+
+  /** Appends `r`'s first `n` (long) columns to `b`. The driver loops
+    * have no slot for a null (read unchecked it is 0), so it fails. */
+  private def appendLongs(r: InternalRow, n: Int, b: ArrayBuilder.ofLong)
+      : Unit = {
+    var i = 0
+    while (i < n) {
+      if (r.isNullAt(i)) nullValue()
+      b += r.getLong(i); i += 1
+    }
+  }
+
+  private def nullValue(): Nothing = throw new IllegalArgumentException(
+    s"driver-local collect: null value; set $MaxBytesKey=0")
+
+  /** Every (long) column of `df`, row-major, in one array. */
+  def collectLongs(df: DataFrame): Array[Long] = {
+    val w = df.schema.length
+    require(df.schema.forall(_.dataType == LongType), df.schema.simpleString)
+    Array.concat(collectParts(df) { it =>
+      val b = new ArrayBuilder.ofLong
+      it.foreach(appendLongs(_, w, b)); b.result()
+    }.toIndexedSeq: _*)
+  }
+
+  /** `df` = (long keys…, array<double>): the keys row-major in one
+    * array (stride = key count) and each row's vector as a primitive
+    * `Array[Double]`, in the same row order. */
+  def collectVectors(df: DataFrame): (Array[Long], Array[Array[Double]]) = {
+    val nk = df.schema.length - 1
+    require(df.schema.init.forall(_.dataType == LongType) &&
+      (df.schema.last.dataType match {
+        case ArrayType(DoubleType, _) => true
+        case _ => false
+      }), df.schema.simpleString)
+    val parts = collectParts(df) { it =>
+      val ks = new ArrayBuilder.ofLong
+      val vs = new ArrayBuilder.ofRef[Array[Double]]
+      it.foreach { r =>
+        appendLongs(r, nk, ks)
+        if (r.isNullAt(nk)) nullValue()
+        val a = r.getArray(nk)
+        if ((0 until a.numElements).exists(a.isNullAt)) nullValue()
+        vs += a.toDoubleArray()
+      }
+      (ks.result(), vs.result())
+    }
+    (Array.concat(parts.toIndexedSeq.map(_._1): _*),
+     Array.concat(parts.toIndexedSeq.map(_._2): _*))
+  }
+}

@@ -55,60 +55,49 @@ object GraphOps {
     pr
   }
 
+  /** The driver-path gate, shared with [[prebuildShared]] so the
+    * bench's shared-build step does not materialize a message base no
+    * query will read when the driver loop is active. The working set
+    * is the raw (part, supplier) pair list: lineitem footer rows × 16 B
+    * (see [[DriverLocal]]). */
+  private def pagerankLocalGate(s: org.apache.spark.sql.SparkSession,
+                                d: String): Boolean =
+    DriverLocal.admit(s, "pagerank",
+      DriverLocal.footerBytes(s, s"$d/lineitem.parquet", rowBytes = 16))
+
   /** Driver-side twin of [[pagerank]] over the same derived graph —
     * exact by construction: every operation is int64 micro-unit
     * arithmetic (the object scaladoc's determinism argument), and the
     * per-destination message sums are commutative integer adds, so
-    * accumulation order cannot matter. Collects the distinct bipartite
-    * (part, supplier + Off) edge list once — bounded by the caller's
-    * inputBytes gate: distinct pairs ≤ corpus rows under the gate,
-    * 16 B each — then symmetrize → out-degrees → 3 synchronous message
-    * rounds run locally. Symmetrization cannot create duplicates (the
-    * id spaces are disjoint around Off), matching the distributed
-    * unionAll exactly; the round recurrence pr' = 150000 +
+    * accumulation order cannot matter. Collects the raw bipartite
+    * (part, supplier + Off) pairs once into one primitive array and
+    * deduplicates them on the driver (the distributed distinct would
+    * pay a full shuffle to deduplicate rows the driver is about to
+    * hold anyway), then symmetrize → out-degrees → 3 synchronous
+    * message rounds run locally. Symmetrization cannot create
+    * duplicates (the id spaces are disjoint around Off), matching the
+    * distributed unionAll exactly; the round recurrence pr' = 150000 +
     * (85 · Σ (pr DIV outdeg)) DIV 100 uses Java long division =
     * Spark's DIV on the (always positive) operands. */
-  /** The driver-path gate — shared with [[prebuildShared]] so the
-    * bench's shared-build step does not materialize a message base no
-    * query will read when the driver loop is active. */
-  private def pagerankLocalGate(s: org.apache.spark.sql.SparkSession,
-                                d: String): Boolean = {
-    val localMax = s.conf.get("spark.graft.pagerank.localMaxBytes",
-      String.valueOf(256L << 20)).toLong
-    localMax > 0 && inputBytes(s"$d/lineitem.parquet") <= localMax
-  }
-
   private def pagerankLocal(s: org.apache.spark.sql.SparkSession,
                             d: String): DataFrame = {
-    // RAW pair collect + driver-side dedup: the distributed distinct
-    // paid a full shuffle (plus AQE stages) to deduplicate rows the
-    // driver is about to hold anyway — a LinkedHashSet gives the same
-    // set semantics in the same bounded footprint (corpus rows under
-    // the gate × 16 B), and the scan+project collect is ONE job.
-    val raw = table(s, d, "lineitem")
-      .select(col("l_partkey").as("src"),
-              (col("l_suppkey") + Off).as("dst"))
-      .collect()
-    val seen = scala.collection.mutable.LinkedHashSet.empty[(Long, Long)]
-    raw.foreach(r => seen.add((r.getLong(0), r.getLong(1))))
+    val raw = DriverLocal.collectLongs(table(s, d, "lineitem")
+      .select(col("l_partkey"), col("l_suppkey") + Off))
+    val seen = scala.collection.mutable.HashSet.empty[(Long, Long)]
+    var i = 0
+    while (i < raw.length) { seen.add((raw(i), raw(i + 1))); i += 2 }
     val e0 = seen.toArray
     val edges = e0 ++ e0.map { case (a, b) => (b, a) }
-    val outdeg = scala.collection.mutable.HashMap
-      .empty[Long, Long].withDefaultValue(0L)
-    edges.foreach { case (srcN, _) => outdeg(srcN) += 1L }
-    var pr = scala.collection.mutable.HashMap.empty[Long, Long]
-    outdeg.keysIterator.foreach(n => pr(n) = 1000000L)
+    val outdeg = scala.collection.mutable.LongMap.empty[Long]
+    edges.foreach { case (srcN, _) =>
+      outdeg(srcN) = outdeg.getOrElse(srcN, 0L) + 1L }
+    var pr = outdeg.map { case (n, _) => (n, 1000000L) }
     for (_ <- 1 to 3) {
-      val acc = scala.collection.mutable.HashMap
-        .empty[Long, Long].withDefaultValue(0L)
+      val acc = scala.collection.mutable.LongMap.empty[Long]
       edges.foreach { case (srcN, dstN) =>
-        acc(dstN) += pr(srcN) / outdeg(srcN) }
-      val next = scala.collection.mutable.HashMap.empty[Long, Long]
-      acc.foreach { case (n, sm) => next(n) = 150000L + (85L * sm) / 100L }
-      pr = next
+        acc(dstN) = acc.getOrElse(dstN, 0L) + pr(srcN) / outdeg(srcN) }
+      pr = acc.map { case (n, sm) => (n, 150000L + (85L * sm) / 100L) }
     }
-    System.err.println(s"[pagerank] driver rounds: ${e0.length} distinct " +
-      s"edges, ${pr.size} nodes")
     import s.implicits._
     pr.toSeq.sortBy(_._1).toDF("node_id", "pr_micro").orderBy("node_id")
   }
@@ -271,20 +260,9 @@ object GraphOps {
     // (suppliers + Off); one symmetric edge per distinct (part, supplier)
     // lineitem pairing; 3 rounds. Output is every node's micro-unit rank.
     "q_graph_pagerank" -> ((s, d) => {
-      // Size-gated driver PageRank (round 22 — guide §1.2 step 1 /
-      // §5 bounded-collect, the cc.localMaxEdges pattern): the rank
-      // arithmetic is INTEGER micro-units by design (see the object
-      // scaladoc), i.e. every operation is commutative/associative
-      // int64 math a driver loop reproduces bit-identically — no
-      // float-order caveat. Below spark.graft.pagerank.localMaxBytes
-      // of lineitem parquet (256 MiB; 0 forces distributed — the law
-      // test pins both paths) the distinct bipartite edge list is
-      // collected ONCE (≤ distinct (part, supplier) pairs ≤ corpus
-      // rows under the gate, 16 B each) and symmetrization + degrees
-      // + the 3 message rounds run locally, replacing the persisted
-      // message-base build (scan + distinct + degree join + persist)
-      // plus 3 rounds of join+agg (each with its own exchange).
-      // Above the gate the distributed path runs unchanged.
+      // Under the [[DriverLocal]] bound the driver loop replaces the
+      // persisted message-base build plus 3 rounds of join+agg (each
+      // with its own exchange); above it the distributed path runs.
       if (pagerankLocalGate(s, d))
         pagerankLocal(s, d)
       else

@@ -144,74 +144,25 @@ object SimOps {
       // vector) stays distributed in [[pqCodes]].
       //
       // Every number is bit-identical to the distributed spelling:
-      //  - the argmin distance replicates SqL2Dist's in-order double
-      //    accumulation (functions/VectorExpressions.scala), with the
-      //    same (dist, cwid) tie-break the row_number window took;
-      //  - the codeword mean replicates sum(CAST(x AS DECIMAL(18,6)))
-      //    exactly — Spark's own Decimal.changePrecision(18, 6) for
-      //    the cast (HALF_UP, the Cast path), exact java BigDecimal
-      //    addition for the sum (decimal aggregation is exact), then
-      //    doubleValue / n like the double-divide the plan ran;
-      //  - a codeword that attracts no training subvectors drops out,
-      //    as before (its (m, cwid) group simply doesn't appear).
-      val trRows: Array[(Long, Int, Array[Double])] =
+      // the shared local Lloyd kernel ([[lloydLocal]]) replicates
+      // SqL2Dist's in-order double fold, the row_number window's
+      // (dist, cwid) order and the exact-decimal mean; a codeword that
+      // attracts no training subvectors drops out, as before (its
+      // (m, cwid) group simply doesn't appear). Subspaces are
+      // independent, so each m runs its own Lloyd.
+      val (keys, svs) = DriverLocal.collectVectors(
         pqSubvectors(s, d).filter(col("vec_id") < pqTrain)
-          .collect()
-          .map(r => (r.getLong(0), r.getInt(1),
-                     r.getSeq[Double](2).toArray))
-      def sqdLocal(a: Array[Double], b: Array[Double]): Double = {
-        val n = math.min(a.length, b.length)
-        var acc = 0.0; var i = 0
-        while (i < n) { val t = a(i) - b(i); acc += t * t; i += 1 }
-        acc
-      }
-      // CAST(double AS DECIMAL(18,6)) — Spark's own Decimal so the
-      // (BigDecimal construction + HALF_UP changePrecision) path is the
-      // engine's, not a lookalike.
-      def dec6(v: Double): java.math.BigDecimal = {
-        val dd = org.apache.spark.sql.types.Decimal(v)
-        dd.changePrecision(18, 6)
-        dd.toJavaBigDecimal
-      }
-      var cb: Map[Int, Seq[(Long, Array[Double])]] =
-        trRows.filter(_._1 < pqK)
-          .map(t => (t._2, (t._1, t._3))).groupBy(_._1).view
-          .mapValues(_.map(_._2).sortBy(_._1).toSeq).toMap
-      for (_ <- 1 to pqIters) {
-        val assigned = trRows.map { case (_, m, sv) =>
-          // Double.compare, not < : the row_number window this replaces
-          // ordered NaN LAST with the cwid tiebreak (Spark sort
-          // semantics), so an all-NaN row must still take the min-cwid
-          // codeword — a plain < would leave it unassigned and inject a
-          // phantom codeword id (r20 review). Distances are sums of
-          // squares, so -0.0 never arises.
-          var bd = Double.NaN; var bid = Long.MaxValue; var first = true
-          cb(m).foreach { case (cwid, cw) =>
-            val dist = sqdLocal(sv, cw)
-            val c = java.lang.Double.compare(dist, bd)
-            if (first || c < 0 || (c == 0 && cwid < bid)) {
-              bd = dist; bid = cwid; first = false
-            }
-          }
-          (m, bid, sv)
+          .select(col("vec_id"), col("m").cast("long"), col("sv")))
+      val ansi = ansiOn(s)
+      val rows = svs.indices.groupBy(i => keys(2 * i + 1)).toSeq
+        .sortBy(_._1).flatMap { case (m, idx) =>
+          val init = idx.filter(i => keys(2 * i) < pqK)
+            .map(i => (keys(2 * i), svs(i))).toArray
+          lloydLocal(idx.map(svs).toArray, init, pqIters, ansi)
+            .map { case (cwid, cw) => (m.toInt, cwid, cw.toSeq) }
         }
-        cb = assigned.groupBy(t => (t._1, t._2)).view.mapValues { g =>
-          val dim = g.head._3.length
-          Array.tabulate(dim) { p =>
-            var sum = java.math.BigDecimal.ZERO
-            g.foreach(r => sum = sum.add(dec6(r._3(p))))
-            sum.doubleValue / g.length
-          }
-        }.toMap.toSeq
-          .map { case ((m, cwid), cw) => (m, (cwid, cw)) }
-          .groupBy(_._1).view
-          .mapValues(_.map(_._2).sortBy(_._1).toSeq).toMap
-      }
       import s.implicits._
-      cb.toSeq
-        .flatMap { case (m, cws) =>
-          cws.map { case (id, cw) => (m, id, cw.toSeq) } }
-        .sortBy(t => (t._1, t._2))
+      rows
         .toDF("m", "cwid", "cw")
         .persist()
     })
@@ -827,36 +778,28 @@ object SimOps {
     * assignment pass reuses the cached centroids instead of re-running
     * two more corpus passes.
     *
-    * Size-gated driver-side Lloyd (round 22, VERDICT r21 top item —
-    * guide §1.2 step 1 / §5 bounded-collect): below
-    * spark.graft.kmeans.localMaxBytes of embeddings input (default
-    * 256 MiB; 0 forces the distributed path — the law test pins both)
-    * the vectors are collected ONCE and the 3 Lloyd iterations run on
-    * the driver with the exact arithmetic of the distributed plan —
-    * the same pattern, bound and bit-identity argument as the PQ
-    * codebook trainer above ([[pqCodebook]]): SqL2Dist's in-order
-    * double fold for distances, java.lang.Double.compare +
-    * min-cid tiebreak replicating the row_number window's
-    * (dist, cid) order with NaN last, Spark's own
-    * Decimal.changePrecision(18, 6) per element + exact BigDecimal
-    * summation + doubleValue/n for the per-dimension means. The
-    * distributed spelling paid ~8 fixed-overhead jobs and a
-    * (vec_id)-keyed window shuffle of n·k scored rows per build
-    * (~1.7 s/warm-pass of shared-build ledger at sf0.1) against 2 000
-    * vectors. Above the gate (true corpus scale) [[lloydFrames]] runs
-    * unchanged. Law test: KmeansLawSpec asserts local == distributed
-    * cells AND centroids on the real fixture. */
+    * Size-gated driver-side Lloyd (round 22): under the [[DriverLocal]]
+    * bound — the working set is vec_ids + vector elements × 8 B, from
+    * the embeddings footers — the vectors are collected ONCE and the 3
+    * Lloyd iterations run on the driver through the shared local
+    * kernel ([[lloydLocal]], also the PQ codebook trainer's) with the
+    * exact arithmetic of the distributed plan. The distributed
+    * spelling paid ~8 fixed-overhead jobs and a (vec_id)-keyed window
+    * shuffle of n·k scored rows per build (~1.7 s/warm-pass of
+    * shared-build ledger at sf0.1) against 2 000 vectors. Above the
+    * bound (true corpus scale) [[lloydFrames]] runs unchanged. Law
+    * test: KmeansLawSpec asserts local == distributed cells AND
+    * centroids on the real fixtures and on ragged/overflowing
+    * synthetic vectors. */
   private def ensureKmeans(s: SparkSession, d: String): Unit =
     if (!simCache.contains((s, d, "kmeans_cells"))) simCache.synchronized {
       if (!simCache.contains((s, d, "kmeans_cells")))
         graft.MemoLog.timed("sim.kmeans") {
-          val localMax = s.conf
-            .get("spark.graft.kmeans.localMaxBytes",
-                 String.valueOf(256L << 20)).toLong
+          val local = DriverLocal.admit(s, "kmeans",
+            DriverLocal.footerBytes(s, s"$d/embeddings.parquet",
+              rowBytes = 8, listCol = "embedding", elemBytes = 8))
           val (cells0, c2) =
-            if (localMax > 0 &&
-                graft.ops.inputBytes(s"$d/embeddings.parquet") <= localMax)
-              lloydLocalFrames(s, d)
+            if (local) lloydLocalFrames(s, d)
             else {
               val (a3, c2d) = lloydFrames(s, d)
               (a3.select(col("vec_id"), col("cid"), col("dist")), c2d)
@@ -871,80 +814,131 @@ object SimOps {
     }
 
   /** Driver-side 3-iteration Lloyd — the bounded-collect twin of
-    * [[lloydFrames]] (see [[ensureKmeans]] for the gate and the
-    * bit-identity argument). Returns (cells (vec_id, cid, dist),
-    * cents (cid, c)) as local relations with the same schemas the
-    * distributed frames carry. */
+    * [[lloydFrames]] (see [[ensureKmeans]] for the gate). Returns
+    * (cells (vec_id, cid, dist), cents (cid, c)) as local relations
+    * with the same schemas the distributed frames carry. */
   private def lloydLocalFrames(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     // the collect evaluates the SAME projection the distributed path
     // scans (cast to double via Spark's own Cast), so element values
     // are bit-identical by construction
-    val vecs: Array[(Long, Array[Double])] =
-      table(s, d, "embeddings")
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("v"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    def sqdLocal(a: Array[Double], b: Array[Double]): Double = {
-      val n = math.min(a.length, b.length)
-      var acc = 0.0; var i = 0
-      while (i < n) { val t = a(i) - b(i); acc += t * t; i += 1 }
-      acc
-    }
-    // CAST(double AS DECIMAL(18,6)) — Spark's own Decimal (BigDecimal
-    // construction + HALF_UP changePrecision), as in [[pqCodebook]]
-    def dec6(v: Double): java.math.BigDecimal = {
-      val dd = org.apache.spark.sql.types.Decimal(v)
-      dd.changePrecision(18, 6)
-      dd.toJavaBigDecimal
-    }
+    val (ids, vecs) = DriverLocal.collectVectors(table(s, d, "embeddings")
+      .select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("v")))
     // c0: the vectors with vec_id < 8, cid = vec_id (limit(8) in the
     // distributed plan is a no-op on unique ids — ≤ 8 rows by filter)
-    var cents: Seq[(Long, Array[Double])] =
-      vecs.filter(_._1 < 8).sortBy(_._1).take(8)
-        .map { case (vid, v) => (vid, v) }.toSeq
-    // assign: squared-L2 argmin with the row_number window's
-    // (dist, cid) order — Double.compare (NaN last) + min-cid tiebreak,
-    // exactly the pqCodebook argmin
-    def assignL(cs: Seq[(Long, Array[Double])])
-        : Array[(Long, Array[Double], Long, Double)] =
-      vecs.map { case (vid, v) =>
-        var bd = Double.NaN; var bid = Long.MaxValue; var first = true
-        cs.foreach { case (cid, c) =>
-          val dist = sqdLocal(v, c)
-          val cmp = java.lang.Double.compare(dist, bd)
-          if (first || cmp < 0 || (cmp == 0 && cid < bid)) {
-            bd = dist; bid = cid; first = false
-          }
-        }
-        (vid, v, bid, bd)
-      }
-    // means: per (cid, pos) exact-decimal sum / count — a cid that
-    // attracts no vectors drops out (its group is absent), as in the
-    // distributed groupBy
-    def meansL(assigned: Array[(Long, Array[Double], Long, Double)])
-        : Seq[(Long, Array[Double])] =
-      assigned.groupBy(_._3).view.mapValues { g =>
-        val dim = g.head._2.length
-        Array.tabulate(dim) { p =>
-          var sum = java.math.BigDecimal.ZERO
-          g.foreach(r => sum = sum.add(dec6(r._2(p))))
-          sum.doubleValue / g.length
-        }
-      }.toSeq.sortBy(_._1)
-    cents = meansL(assignL(meansL(assignL(cents))))
-    val a3 = assignL(cents)
+    val c0 = ids.indices.filter(ids(_) < 8).sortBy(ids(_)).take(8)
+      .map(i => (ids(i), vecs(i))).toArray
+    // two assign+mean rounds, then the final assignment (a3)
+    val cents = lloydLocal(vecs, c0, 2, ansiOn(s))
     import s.implicits._
-    val cells = a3.toSeq.map { case (vid, _, cid, dist) =>
-      (vid, cid, dist)
+    val cells = ids.indices.map { i =>
+      val (cid, dist) = argminLocal(vecs(i), cents)
+      (ids(i), cid, dist)
     }.toDF("vec_id", "cid", "dist")
-    val c2 = cents.sortBy(_._1)
-      .map { case (cid, c) => (cid, c.toSeq) }.toDF("cid", "c")
-    System.err.println(s"[sim.kmeans] driver Lloyd: ${vecs.length} " +
-      s"vectors, ${cents.size} centroids")
+    val c2 = cents.toSeq.map { case (cid, c) => (cid, c.toSeq) }
+      .toDF("cid", "c")
     (cells, c2)
   }
+
+  /** The local Lloyd kernel shared by the k-means twin and the PQ
+    * codebook trainer: `iters` rounds of assign ([[argminLocal]]) +
+    * mean ([[meansLocal]]) from `init`; returns the centroids sorted
+    * by id. A centroid that attracts no points drops out, as its
+    * (cid) group is absent from the distributed groupBy. */
+  private def lloydLocal(points: Array[Array[Double]],
+                         init: Array[(Long, Array[Double])], iters: Int,
+                         ansi: Boolean): Array[(Long, Array[Double])] = {
+    val cast = dec6(ansi)
+    (1 to iters).foldLeft(init) { (cents, _) =>
+      meansLocal(points, points.map(argminLocal(_, cents)._1), cast)
+    }
+  }
+
+  /** SqL2Dist's in-order double fold (functions/VectorExpressions):
+    * squared L2 over the common prefix of two vectors. */
+  private def sqdLocal(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var acc = 0.0; var i = 0
+    while (i < n) { val t = a(i) - b(i); acc += t * t; i += 1 }
+    acc
+  }
+
+  /** The nearest centroid (id, squared distance) in the row_number
+    * window's (dist, id) order. Double.compare, not < : the window
+    * orders NaN LAST with the id tiebreak (Spark sort semantics), so
+    * an all-NaN row must still take the min-id centroid — a plain <
+    * would leave it unassigned (r20 review). Distances are sums of
+    * squares, so -0.0 never arises. */
+  private def argminLocal(v: Array[Double],
+                          cents: Array[(Long, Array[Double])])
+      : (Long, Double) = {
+    var bd = Double.NaN; var bid = Long.MaxValue; var first = true
+    cents.foreach { case (id, c) =>
+      val dist = sqdLocal(v, c)
+      val cmp = java.lang.Double.compare(dist, bd)
+      if (first || cmp < 0 || (cmp == 0 && id < bid)) {
+        bd = dist; bid = id; first = false
+      }
+    }
+    (bid, bd)
+  }
+
+  /** Per (id, position) mean, as the distributed posexplode +
+    * groupBy(cid, pos) computes it: sum(CAST(x AS DECIMAL(18,6))) as an
+    * exact BigDecimal, then doubleValue / n, where n counts the member
+    * vectors that HAVE the position (ragged vectors average each
+    * position over its own members) and a null cast (see [[dec6]]) is
+    * skipped in the sum but counted in n. Sorted by id. */
+  private def meansLocal(points: Array[Array[Double]], ids: Array[Long],
+                         cast: Double => java.math.BigDecimal)
+      : Array[(Long, Array[Double])] =
+    points.indices.groupBy(ids(_)).toArray.sortBy(_._1).map {
+      case (id, members) =>
+        val dim = members.map(points(_).length).max
+        (id, Array.tabulate(dim) { p =>
+          var sum: java.math.BigDecimal = null; var n = 0
+          members.foreach { i =>
+            val v = points(i)
+            if (p < v.length) {
+              n += 1
+              val x = cast(v(p))
+              if (x != null) sum = if (sum == null) x else sum.add(x)
+            }
+          }
+          // every element null: the distributed mean is a NULL
+          // centroid element, which a double array cannot carry
+          if (sum == null) throw new ArithmeticException(
+            s"driver-local Lloyd: every element at position $p of " +
+            s"centroid $id casts to NULL DECIMAL(18,6); set " +
+            s"${DriverLocal.MaxBytesKey}=0 for the distributed plan")
+          sum.doubleValue / n
+        })
+    }
+
+  /** CAST(double AS DECIMAL(18,6)) by Spark's own Cast in the session's
+    * mode, as the distributed plan evaluates it: |v| ≥ 1e12, NaN or ±Inf
+    * raise its out-of-range error under ANSI and are null otherwise.
+    * One per Lloyd run (it reuses one input row: not thread-safe). */
+  private def dec6(ansi: Boolean): Double => java.math.BigDecimal = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
+      EvalMode, SpecificInternalRow}
+    import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType}
+    val cast = Cast(BoundReference(0, DoubleType, nullable = false),
+      DecimalType(18, 6), None,
+      if (ansi) EvalMode.ANSI else EvalMode.LEGACY)
+    val row = new SpecificInternalRow(Seq(DoubleType))
+    v => {
+      row.setDouble(0, v)
+      cast.eval(row) match {
+        case d: Decimal => d.toJavaBigDecimal
+        case _ => null
+      }
+    }
+  }
+
+  private def ansiOn(s: SparkSession): Boolean =
+    s.conf.get("spark.sql.ansi.enabled").toBoolean
 
   private def lloydFrames(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {

@@ -35,14 +35,14 @@ class GraphOpsSpec extends SparkTestBase {
 
   test("pagerank law: driver path == distributed path on the fixture") {
     // The same dual-path pinning as the union-find and k-means law
-    // tests: localMaxBytes=0 forces the distributed message rounds,
+    // tests: local.maxBytes=0 forces the distributed message rounds,
     // the default gate takes the driver loop; integer micro-unit
     // arithmetic must make them equal map-for-map.
     val dist = try {
-      spark.conf.set("spark.graft.pagerank.localMaxBytes", "0")
+      spark.conf.set(ops.DriverLocal.MaxBytesKey, "0")
       ops.GraphOps.queries("q_graph_pagerank")(spark, sf0001)
         .as[(Long, Long)].collect().toMap
-    } finally spark.conf.unset("spark.graft.pagerank.localMaxBytes")
+    } finally spark.conf.unset(ops.DriverLocal.MaxBytesKey)
     val local = ops.GraphOps.queries("q_graph_pagerank")(spark, sf0001)
       .as[(Long, Long)].collect().toMap
     assert(local.size == dist.size, s"${local.size} vs ${dist.size} nodes")
