@@ -497,7 +497,7 @@ object DedupOps {
           .select(col("doc_a").as("src"), col("doc_b").as("dst"))
         val sym = pairs.unionAll(
           pairs.select(col("dst").as("src"), col("src").as("dst")))
-        val (labels, _) = propagateMinLabels(sym)
+        val (labels, _) = propagateMinLabels(sym, "minhash_doc_clusters")
         docs
           .join(labels.withColumnRenamed("cluster", "c"),
                 Seq("doc_id"), "left")
@@ -508,7 +508,8 @@ object DedupOps {
           .select(col("doc_a").as("src"), col("doc_b").as("dst"))
         val sym = pairs.unionAll(
           pairs.select(col("dst").as("src"), col("src").as("dst")))
-        val (labels, _) = propagateMinLabels(sym)
+        val (labels, _) =
+          propagateMinLabels(sym, "minhash_doc_clusters:contracted")
         docs
           .join(shingledD2r(s, d), Seq("doc_id"), "left")
           .join(labels.withColumnRenamed("doc_id", "rep")
@@ -896,6 +897,8 @@ object DedupOps {
   /** Min-label propagation to a fixpoint over a symmetric edge list
     * (src, dst): every vertex ends labeled with the smallest vertex id
     * reachable from it. Returns (labels(doc_id, cluster), rounds run).
+    * `caller` names the query or shared build that asked, so its
+    * `[local] cc/<caller>` decision line and round log can be told apart.
     *
     * Pointer doubling, fused into the neighbor pass: each vertex's label
     * pointer (v → label(v)) is unioned into the edge list, so ONE
@@ -915,7 +918,8 @@ object DedupOps {
     * collapse to a handful of tasks without mutating session-global conf
     * from inside a query builder (a shared-session race if queries ever
     * fan out concurrently). */
-  private[graft] def propagateMinLabels(sym0: DataFrame, maxIter: Int = 50)
+  private[graft] def propagateMinLabels(sym0: DataFrame, caller: String,
+                                        maxIter: Int = 50)
       : (DataFrame, Int) = {
     // Truncate the edge list's lineage ONCE before iterating: persist()
     // caches the ROWS but the frame still carries its full logical plan,
@@ -953,7 +957,7 @@ object DedupOps {
     val s = sym.sparkSession
     val edgesUb = DriverLocal.cachedBytes(s, symRdd.map(_.id).toSet)
       .map(_ / 16).getOrElse(sym.count())
-    if (DriverLocal.admit(s, "cc", Some(edgesUb * (64 + 192)))) {
+    if (DriverLocal.admit(s, s"cc/$caller", Some(edgesUb * (64 + 192)))) {
       val edges = DriverLocal.collectLongs(sym.select(col("src"), col("dst")))
       val parent = new scala.collection.mutable.LongMap[Long](edges.length)
       def find(x0: Long): Long = {
@@ -1035,16 +1039,17 @@ object DedupOps {
       labels = next.select("doc_id", "cluster")
       converged = nChanged == 0L
       iter += 1
-      System.err.println(f"[propagateMinLabels] round $iter%d: " +
+      System.err.println(f"[propagateMinLabels $caller] round $iter%d: " +
         f"changed=$nChanged%d ${(System.nanoTime() - tr) / 1e9}%.2fs")
     }
-    System.err.println(f"[propagateMinLabels] converged=$converged " +
+    System.err.println(f"[propagateMinLabels $caller] converged=$converged " +
       f"rounds=$iter total=${(System.nanoTime() - t0) / 1e9}%.2fs")
     if (!converged)
       // Diverging silently from the recursive-CTE oracle would be a
       // debugging trap; a component with diameter > maxIter is loud.
       System.err.println(
-        s"[propagateMinLabels] WARNING: not converged after $maxIter rounds")
+        s"[propagateMinLabels $caller] WARNING: not converged after " +
+          s"$maxIter rounds")
     symRdd.foreach(r => try r.unpersist(blocking = false)
                         catch { case _: Exception => () })
     prevCp.foreach(r => cpRegistry.synchronized { cpRegistry += r })
@@ -1152,7 +1157,7 @@ object DedupOps {
           edges.select(col("dst").as("src"), col("src").as("dst")))
         // propagateMinLabels checkpoints sym once and releases the blocks
         // itself — no per-call persist to leak across invocations.
-        val (labels, _) = propagateMinLabels(sym)
+        val (labels, _) = propagateMinLabels(sym, "q_dedup_clusters")
         // Singletons (no edges) never entered the loop: cluster = own id.
         docs
           .join(labels.withColumnRenamed("cluster", "c"),
@@ -1165,7 +1170,8 @@ object DedupOps {
           .select(col("doc_a").as("src"), col("doc_b").as("dst"))
         val sym = edges.unionAll(
           edges.select(col("dst").as("src"), col("src").as("dst")))
-        val (labels, _) = propagateMinLabels(sym)
+        val (labels, _) =
+          propagateMinLabels(sym, "q_dedup_clusters:contracted")
         // coalesce chain: component label if the rep clustered, else the
         // rep (a shingled copy group is a J=1 clique whose min IS the
         // rep), else the doc's own id (unshingled ⇒ edgeless singleton).
@@ -1757,7 +1763,7 @@ object DedupOps {
         }
       val sym = edges.unionAll(
         edges.select(col("dst").as("src"), col("src").as("dst")))
-      val (labels, _) = propagateMinLabels(sym)
+      val (labels, _) = propagateMinLabels(sym, "q_dedup_multi_signal")
       doc2rep
         .join(labels.withColumnRenamed("doc_id", "rep")
                     .withColumnRenamed("cluster", "c"), Seq("rep"), "left")

@@ -356,7 +356,7 @@ object GraphOps {
       val e = copurchaseEdges(s, d)
       val sym = e.select(col("a").as("src"), col("b").as("dst"))
         .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
-      val (labels, _) = graft.ops.DedupOps.propagateMinLabels(sym)
+      val (labels, _) = graft.ops.DedupOps.propagateMinLabels(sym, "q_graph_cc")
       val lab = labels.select(col("doc_id").as("node_id"),
                               col("cluster").as("component"))
       // component sizes are a component-keyed aggregate of the (tiny

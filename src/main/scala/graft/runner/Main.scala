@@ -6,8 +6,15 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.{Failure, Random, Success, Try}
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.io.Metrics
 
@@ -27,12 +34,16 @@ import graft.io.Metrics
   *   - stderr stat block shaped like runner.cc:343–358.
   *
   * Architectural translation (not a port): the reference runs one fresh
-  * single-threaded DuckDB per file on a pthread pool; here one shared
-  * SparkSession serves j concurrent driver-side Futures, and Spark's own
-  * scheduler parallelizes within each query. S3 access goes through s3a
-  * (path-style, plain http — reference runner.cc:205–217). At cluster scale
-  * the same binary handles thousands of files: each file-query is an
-  * independent job, so executors stay saturated as long as ≥j files remain.
+  * DuckDB pinned to one thread per file on a pthread pool (runner.cc:
+  * 197–201); here one shared SparkSession serves j concurrent driver-side
+  * Futures, and each file's query is ONE Spark job of ONE task with no
+  * exchange ([[fileQuery]]) — the Spark form of one thread per file.
+  * Parallelism comes from `-j` alone, as in the reference; a single file
+  * with several splits scans them in that one task. S3 access goes
+  * through s3a (path-style, plain http — reference runner.cc:205–217). At
+  * cluster scale the same binary handles thousands of files: each
+  * file-query is an independent one-task job, so executors stay
+  * saturated as long as ≥j files remain.
   */
 object Main {
 
@@ -94,7 +105,7 @@ object Main {
     * parquet source: 6-predicate open-interval filter, group, min×4 + avg,
     * ORDER BY the avg NULLS LAST. Applied to the reference's Laghos schema
     * when present, else retargeted at the testdata lineitem schema. */
-  private def flagship(df: DataFrame): DataFrame = {
+  private[graft] def flagship(df: DataFrame): DataFrame = {
     val cols = df.columns.toSet
     if (Set("vertex_id", "x", "y", "z", "e").subsetOf(cols))
       df.filter(col("x") > 1.5 && col("x") < 1.6 &&
@@ -134,11 +145,58 @@ object Main {
     }
   }
 
+  /** The schema Spark's (non-merging) parquet inference gives `path` — a
+    * file, a directory or a glob — read from ONE footer on the driver
+    * instead of inference's schema job. Inference touches the first of
+    * `_common_metadata`, `_metadata` and the data files, each by path
+    * order (ParquetUtils.inferSchema), and honours the Spark-schema
+    * key-value metadata; the same file and converter are used here. */
+  private[graft] def footerSchema(spark: SparkSession,
+                                  path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val roots =
+      if (path.exists("{}[]*?\\".contains(_)))
+        Option(fs.globStatus(p)).toSeq.flatten
+      else Seq(fs.getFileStatus(p))
+    val summaries = Seq("_common_metadata", "_metadata")
+    // the file index's listing filter: hidden and `_` names are skipped,
+    // parquet's summary files are kept
+    def listed(n: String): Boolean = summaries.exists(n.startsWith) ||
+      !(n.startsWith("_") && !n.contains("=") || n.startsWith(".") ||
+        n.endsWith("._COPYING_"))
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filter(c => listed(c.getPath.getName)).flatMap(leaves)
+    val files = roots.flatMap(leaves).sortBy(_.getPath.toString)
+    val leaf = (summaries.flatMap(n => files.find(_.getPath.getName == n)) ++
+        files.filterNot(f => summaries.contains(f.getPath.getName)))
+      .headOption.getOrElse(throw new java.io.FileNotFoundException(
+        s"no parquet file under $path"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(leaf, conf), SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(leaf.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** `path` scanned under its [[footerSchema]]: no schema job. */
+  private[graft] def scan(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+
+  /** One source's flagship as one Spark job of one task: `coalesce(1)`
+    * makes the scan report a single partition, so the partial/final
+    * aggregate and the sort plan with no exchange. */
+  private[graft] def fileQuery(spark: SparkSession, path: String): DataFrame =
+    flagship(scan(spark, path).coalesce(1))
+
   /** Run one file's query; streams result batches to stdout (A11) and
     * returns the hit count. */
   private def runOne(spark: SparkSession, source: String): Long = {
     val path = source.stripPrefix("'").stripSuffix("'")
-    val result = flagship(spark.read.parquet(path))
+    val result = fileQuery(spark, path)
     val fields = result.schema.fields
     var hits = 0L
     val it = result.toLocalIterator()
@@ -198,6 +256,12 @@ object Main {
     // reference's read-op semantics (runner.cc:75–172)
     builder.config("spark.hadoop.fs.ghttp.impl",
                    "graft.io.GraftHttpFileSystem")
+    // Row-group pruning on min/max statistics only, as DuckDB's zone maps:
+    // parquet-mr's dictionary filter expands each surviving row group's
+    // x/y/z dictionaries into boxed sets, which high-cardinality doubles
+    // under open intervals never let it prune, and over ghttp each
+    // expansion opens and abandons a 1 MiB readahead window.
+    builder.config("spark.hadoop.parquet.filter.dictionary.enabled", "false")
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val metrics = new Metrics

@@ -23,19 +23,18 @@ class ContractionGateSpec extends SparkTestBase {
     "q_dedup_embed", "q_dedup_multi_signal", "q_split_leakage",
     "q_dedup_containment", "q_dedup_canonical", "q_dedup_semantic")
 
-  private lazy val copyDense: String = {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_gate_copydense_").toString
-    val stride = 10000000L
-    Seq("documents" -> "doc_id", "embeddings" -> "vec_id").foreach {
-      case (t, k) =>
-        val base = spark.read.parquet(s"$sf0001/$t.parquet")
-        (0 until 3).map(i => base.withColumn(k, col(k) + lit(i * stride)))
-          .reduce(_ unionAll _)
-          .write.mode("overwrite").parquet(s"$tmp/$t.parquet")
+  private lazy val copyDense: String =
+    withTempDir("graft_gate_copydense_", suite = true) { tmp =>
+      val stride = 10000000L
+      Seq("documents" -> "doc_id", "embeddings" -> "vec_id").foreach {
+        case (t, k) =>
+          val base = spark.read.parquet(s"$sf0001/$t.parquet")
+          (0 until 3).map(i => base.withColumn(k, col(k) + lit(i * stride)))
+            .reduce(_ unionAll _)
+            .write.mode("overwrite").parquet(s"$tmp/$t.parquet")
+      }
+      tmp
     }
-    tmp
-  }
 
   private def rows(name: String, dir: String, path: String)
       : Seq[String] = {

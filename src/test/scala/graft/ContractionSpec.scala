@@ -18,21 +18,20 @@ class ContractionSpec extends SparkTestBase {
 
   private val stride = 10000000L
 
-  lazy val dir: String = {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_copydense_").toString
-    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-    (0 until 3).map(i =>
-        docs.withColumn("doc_id", col("doc_id") + lit(i * stride)))
-      .reduce(_ unionAll _)
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
-    (0 until 3).map(i =>
-        emb.withColumn("vec_id", col("vec_id") + lit(i * stride)))
-      .reduce(_ unionAll _)
-      .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    tmp
-  }
+  lazy val dir: String =
+    withTempDir("graft_copydense_", suite = true) { tmp =>
+      val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      (0 until 3).map(i =>
+          docs.withColumn("doc_id", col("doc_id") + lit(i * stride)))
+        .reduce(_ unionAll _)
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      (0 until 3).map(i =>
+          emb.withColumn("vec_id", col("vec_id") + lit(i * stride)))
+        .reduce(_ unionAll _)
+        .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+      tmp
+    }
 
   /** Union-find; final root of each component is its min member id
     * (each union parents the larger root under the smaller). */
@@ -110,24 +109,23 @@ class ContractionSpec extends SparkTestBase {
   // referees q_dedup_minhash with a plain-Scala reimplementation
   // (integer math end-to-end — md5/min/mod, no shared DataFrame code).
 
-  lazy val vdir: String = {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_casevar_").toString
-    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-    docs
-      .unionAll(docs.withColumn("doc_id", col("doc_id") + lit(stride)))
-      .unionAll(docs.withColumn("doc_id", col("doc_id") + lit(2 * stride))
-        .withColumn("text", upper(col("text"))))
-      .unionAll(docs.withColumn("doc_id", col("doc_id") + lit(3 * stride))
-        .withColumn("text", concat(col("text"), lit("  "))))
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
-    (0 until 4).map(i =>
-        emb.withColumn("vec_id", col("vec_id") + lit(i * stride)))
-      .reduce(_ unionAll _)
-      .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    tmp
-  }
+  lazy val vdir: String =
+    withTempDir("graft_casevar_", suite = true) { tmp =>
+      val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      docs
+        .unionAll(docs.withColumn("doc_id", col("doc_id") + lit(stride)))
+        .unionAll(docs.withColumn("doc_id", col("doc_id") + lit(2 * stride))
+          .withColumn("text", upper(col("text"))))
+        .unionAll(docs.withColumn("doc_id", col("doc_id") + lit(3 * stride))
+          .withColumn("text", concat(col("text"), lit("  "))))
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      (0 until 4).map(i =>
+          emb.withColumn("vec_id", col("vec_id") + lit(i * stride)))
+        .reduce(_ unionAll _)
+        .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+      tmp
+    }
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -39,7 +39,7 @@ class DedupSimSpec extends SparkTestBase {
     // otherwise short-circuit on a 20k-edge graph
     spark.conf.set(ops.DriverLocal.MaxBytesKey, "0")
     val (labels, rounds) =
-      try ops.DedupOps.propagateMinLabels(sym, maxIter = 50)
+      try ops.DedupOps.propagateMinLabels(sym, "chain", maxIter = 50)
       finally spark.conf.unset(ops.DriverLocal.MaxBytesKey)
     val wrong = labels.filter($"cluster" =!= 0L).count()
     sym.unpersist()
@@ -60,11 +60,11 @@ class DedupSimSpec extends SparkTestBase {
     ).toDF("src", "dst")
     val sym = edges.unionAll(
       edges.select($"dst".as("src"), $"src".as("dst"))).persist()
-    val (local, lr) = ops.DedupOps.propagateMinLabels(sym)
+    val (local, lr) = ops.DedupOps.propagateMinLabels(sym, "law")
     assert(lr == 0, "expected the local union-find path under the gate")
     spark.conf.set(ops.DriverLocal.MaxBytesKey, "0")
     val (dist, dr) =
-      try ops.DedupOps.propagateMinLabels(sym)
+      try ops.DedupOps.propagateMinLabels(sym, "law")
       finally spark.conf.unset(ops.DriverLocal.MaxBytesKey)
     assert(dr > 0, "expected the distributed path when the gate is 0")
     val a = local.orderBy("doc_id").as[(Long, Long)].collect().toSeq
@@ -77,6 +77,17 @@ class DedupSimSpec extends SparkTestBase {
       30L -> 30L, 31L -> 30L))
   }
 
+  test("the cc decision line names its caller") {
+    val sym = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
+    val buf = new java.io.ByteArrayOutputStream()
+    val err = System.err
+    System.setErr(new java.io.PrintStream(buf, true))
+    try ops.DedupOps.propagateMinLabels(sym, "q_probe")
+    finally System.setErr(err)
+    assert(buf.toString.linesIterator.exists(
+      _.startsWith("[local] cc/q_probe: estimate=")), buf.toString)
+  }
+
   test("pointer doubling: 10k-leaf star converges in a constant round count") {
     val leaves = 10000L
     val edges = spark.range(1, leaves + 1)
@@ -85,7 +96,7 @@ class DedupSimSpec extends SparkTestBase {
       .persist()
     spark.conf.set(ops.DriverLocal.MaxBytesKey, "0")
     val (labels, rounds) =
-      try ops.DedupOps.propagateMinLabels(sym, maxIter = 10)
+      try ops.DedupOps.propagateMinLabels(sym, "star", maxIter = 10)
       finally spark.conf.unset(ops.DriverLocal.MaxBytesKey)
     val wrong = labels.filter($"cluster" =!= 0L).count()
     sym.unpersist()
@@ -188,15 +199,15 @@ class DedupSimSpec extends SparkTestBase {
     // chunks each at C=16) and one disjoint-vocabulary unique body. Every
     // chunk of a twin occurs in the other twin -> dup_frac exactly 1.0;
     // no chunk of the unique doc occurs elsewhere -> exactly 0.0.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_chunk_fixture").toString
-    val twin = (1 to 40).map(i => s"tok$i").mkString(" ")
-    val uniq = (1 to 40).map(i => s"only$i").mkString(" ")
-    Seq((1L, twin), (2L, twin), (3L, uniq)).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = ops.DedupOps.queries("q_dedup_chunk")(spark, dir)
-      .select($"doc_id".as[Long], $"dup_frac".as[Double]).collect().toMap
-    assert(out == Map(1L -> 1.0, 2L -> 1.0, 3L -> 0.0), s"got $out")
+    withTempDir("graft_chunk_fixture") { dir =>
+      val twin = (1 to 40).map(i => s"tok$i").mkString(" ")
+      val uniq = (1 to 40).map(i => s"only$i").mkString(" ")
+      Seq((1L, twin), (2L, twin), (3L, uniq)).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val out = ops.DedupOps.queries("q_dedup_chunk")(spark, dir)
+        .select($"doc_id".as[Long], $"dup_frac".as[Double]).collect().toMap
+      assert(out == Map(1L -> 1.0, 2L -> 1.0, 3L -> 0.0), s"got $out")
+    }
   }
 
   test("property: jaccard of identical shingle sets is 1") {
@@ -344,21 +355,21 @@ class DedupSimSpec extends SparkTestBase {
       (trainId, dup),
       (testId, dup)) ++ (1000L to 1020L).map(i =>
         (i, s"unique filler document number $i with words w$i x$i y$i z$i"))
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_leak_").toString
-    docs.toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("s0"))
-      .withColumn("n_chars", length($"text").cast("long"))
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    graft.ops.DedupOps.clearPairsCache()
-    try {
-      val out = SparkEntry.queries("q_split_leakage")(spark, tmp)
-        .select($"split_lo".as[String], $"split_hi".as[String],
-                $"n_pairs".as[Long], $"is_leak".as[Boolean]).collect()
-      val leak = out.filter(_._4)
-      assert(leak.exists(r => Set(r._1, r._2) == Set("test", "train") &&
-                              r._3 >= 1),
-        s"engineered train/test near-dup not reported: ${out.toSeq}")
-    } finally graft.ops.DedupOps.clearPairsCache()
+    withTempDir("graft_leak_") { tmp =>
+      docs.toDF("doc_id", "text")
+        .withColumn("lang", lit("en")).withColumn("source", lit("s0"))
+        .withColumn("n_chars", length($"text").cast("long"))
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      graft.ops.DedupOps.clearPairsCache()
+      try {
+        val out = SparkEntry.queries("q_split_leakage")(spark, tmp)
+          .select($"split_lo".as[String], $"split_hi".as[String],
+                  $"n_pairs".as[Long], $"is_leak".as[Boolean]).collect()
+        val leak = out.filter(_._4)
+        assert(leak.exists(r => Set(r._1, r._2) == Set("test", "train") &&
+                                r._3 >= 1),
+          s"engineered train/test near-dup not reported: ${out.toSeq}")
+      } finally graft.ops.DedupOps.clearPairsCache()
+    }
   }
 }

@@ -12,10 +12,13 @@ import graft.io.GraftHttpFileSystem
   * `auth` set, every request must carry the matching HMAC Authorization
   * header (GraftHttpFileSystem.signFor) or it is refused with 401 —
   * the server side of the credential surface the runner's -i/-k flags
-  * configure. */
+  * configure. `bytesServed` and `getsServed` count the body bytes and the
+  * GETs the server answered. */
 object TestHttpObjectServer {
   def serve(dir: String, auth: Option[(String, String)] = None,
             bytesServed: Option[java.util.concurrent.atomic.AtomicLong] =
+              None,
+            getsServed: Option[java.util.concurrent.atomic.AtomicLong] =
               None): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/", new HttpHandler {
@@ -35,6 +38,7 @@ object TestHttpObjectServer {
             ex.getResponseHeaders.add("Content-Length", bytes.length.toString)
             ex.sendResponseHeaders(200, -1)
           case _ =>
+            getsServed.foreach(_.incrementAndGet())
             Option(ex.getRequestHeaders.getFirst("Range")) match {
               case Some(r) =>
                 val spec = r.stripPrefix("bytes=").split("-", 2)
@@ -88,8 +92,8 @@ class HttpFsSpec extends SparkTestBase {
       assert(heads <= 1, s"$heads HEADs for one object — metadata cache miss")
       // scale posture over the wire: projection + filter pushdown mean the
       // scan must NOT fetch the whole object — footer + the 5 referenced
-      // column chunks only (the reference reads 208 KB of its multi-MB
-      // file the same way, README.md:89)
+      // column chunks only (the reference reads only the footer and the
+      // needed column chunks of its multi-MB file the same way)
       val fileSize = Files.size(Paths.get(sf0001, "lineitem.parquet"))
       assert(bytes > 0 && bytes < fileSize,
         s"read $bytes of $fileSize-byte object — column pruning not effective")

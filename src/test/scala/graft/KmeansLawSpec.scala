@@ -57,19 +57,17 @@ class KmeansLawSpec extends graft.SparkTestBase {
                             big: Option[Float] = None)
                            (body: String => Unit): Unit = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_kmeans_law_").toString
-    val r = new scala.util.Random(7)
-    val rows = (0 until n).map { i =>
-      val v = Array.fill(len(i))(r.nextFloat() * 2 - 1)
-      if (i == 20) big.foreach(b => v(0) = b)
-      (i.toLong, v.toSeq, i % 3)
+    withTempDir("graft_kmeans_law_") { dir =>
+      val r = new scala.util.Random(7)
+      val rows = (0 until n).map { i =>
+        val v = Array.fill(len(i))(r.nextFloat() * 2 - 1)
+        if (i == 20) big.foreach(b => v(0) = b)
+        (i.toLong, v.toSeq, i % 3)
+      }
+      rows.toDF("vec_id", "embedding", "label")
+        .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+      body(dir)
     }
-    rows.toDF("vec_id", "embedding", "label")
-      .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-    try body(dir)
-    finally org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(dir))
   }
 
   /** The condition of the first Spark error in `t`'s cause chain. */

@@ -209,11 +209,12 @@ class R15OpsSpec extends SparkTestBase {
       (b2, "one two three four five seven"),  // 3/4 shingles shared → near
       (b3, "zz yy xx ww vv uu")               // nothing shared → unique
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("r15inc").toString
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = ops.DedupOps.queries("q_dedup_incremental")(spark, dir)
-      .select($"status".as[String], $"n_docs".as[Long]).collect().toMap
-    assert(got == Map("exact_dup" -> 1L, "near_dup" -> 1L, "unique" -> 1L),
-      s"got $got")
+    withTempDir("r15inc") { dir =>
+      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = ops.DedupOps.queries("q_dedup_incremental")(spark, dir)
+        .select($"status".as[String], $"n_docs".as[Long]).collect().toMap
+      assert(got == Map("exact_dup" -> 1L, "near_dup" -> 1L, "unique" -> 1L),
+        s"got $got")
+    }
   }
 }

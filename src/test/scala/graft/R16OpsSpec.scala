@@ -124,30 +124,30 @@ class R16OpsSpec extends SparkTestBase {
        Seq(1000L -> "alpha beta gamma delta epsilon zeta",
            1001L -> "alpha beta gamma delta epsilon zeta extra tokens here now")
       ).toMap
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_hotboiler_").toString
-    import spark.implicits._
-    docs.toSeq.map { case (id, t) =>
-      (id, t, "en", "synth", t.length.toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val (expect, hot) = cappedContainmentBrute(docs)
-    assert(hot.size >= 8, "fixture drift: boilerplate shingles not hot")
-    // the capped contract must keep the real pair and drop all
-    // boilerplate-only pairs
-    assert(expect.map(p => (p._1, p._2)).toSet ==
-      Set((1000L, 1001L), (1001L, 1000L)))
-    for (path <- Seq("never", "always")) {
-      graft.ops.DedupOps.clearPairsCache()
-      System.setProperty("graft.dedup.contract", path)
-      try {
-        val got = ops.DedupOps.queries("q_dedup_containment")(spark, tmp)
-          .select($"doc_src".as[Long], $"doc_dst".as[Long],
-                  $"shared".as[Long], $"cmicro".as[Long]).collect().toSeq
-        assert(got == expect, s"path=$path")
-      } finally {
-        System.clearProperty("graft.dedup.contract")
+    withTempDir("graft_hotboiler_") { tmp =>
+      import spark.implicits._
+      docs.toSeq.map { case (id, t) =>
+        (id, t, "en", "synth", t.length.toLong)
+      }.toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val (expect, hot) = cappedContainmentBrute(docs)
+      assert(hot.size >= 8, "fixture drift: boilerplate shingles not hot")
+      // the capped contract must keep the real pair and drop all
+      // boilerplate-only pairs
+      assert(expect.map(p => (p._1, p._2)).toSet ==
+        Set((1000L, 1001L), (1001L, 1000L)))
+      for (path <- Seq("never", "always")) {
         graft.ops.DedupOps.clearPairsCache()
+        System.setProperty("graft.dedup.contract", path)
+        try {
+          val got = ops.DedupOps.queries("q_dedup_containment")(spark, tmp)
+            .select($"doc_src".as[Long], $"doc_dst".as[Long],
+                    $"shared".as[Long], $"cmicro".as[Long]).collect().toSeq
+          assert(got == expect, s"path=$path")
+        } finally {
+          System.clearProperty("graft.dedup.contract")
+          graft.ops.DedupOps.clearPairsCache()
+        }
       }
     }
   }

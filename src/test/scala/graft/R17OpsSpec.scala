@@ -54,18 +54,18 @@ class R17OpsSpec extends SparkTestBase {
     // which is why runStreamN passes the transform's schema explicitly.
     // Locked with a zero-row documents fixture through the public
     // q_stream_quality entry (stateless append — one empty batch).
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_empty_stream_").toString
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      graft.streaming.StreamOps.documentsSchema)
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = graft.streaming.StreamOps
-      .queries("q_stream_quality")(spark, tmp)
-    assert(got.columns.toSeq == Seq("doc_id", "n_tokens", "verdict"))
-    assert(got.collect().isEmpty)
-    graft.streaming.StreamOps.clearStreamSinks()
+    withTempDir("graft_empty_stream_") { tmp =>
+      spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](),
+        graft.streaming.StreamOps.documentsSchema)
+        .repartition(1)
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val got = graft.streaming.StreamOps
+        .queries("q_stream_quality")(spark, tmp)
+      assert(got.columns.toSeq == Seq("doc_id", "n_tokens", "verdict"))
+      assert(got.collect().isEmpty)
+      graft.streaming.StreamOps.clearStreamSinks()
+    }
   }
 
   test("quality_classifier plan: map-only scoring — no join, 2 exchanges") {

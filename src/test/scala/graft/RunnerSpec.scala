@@ -1,11 +1,80 @@
 package graft
 
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+
+import graft.runner.Main
 
 /** Runner-harness semantics without spawning the CLI: seeded shuffle
   * determinism (SURVEY.md §2.1 A17) and the Laghos-schema flagship shape. */
-class RunnerSpec extends SparkTestBase {
+class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
+
+  private def lineitem = s"$sf0001/lineitem.parquet"
+
+  /** A Laghos-schema source (the reference's own) as a directory of two
+    * part files, with rows on both sides of the flagship's box. */
+  private lazy val laghos: String =
+    withTempDir("graft_laghos_", suite = true) { dir =>
+      val r = new scala.util.Random(5)
+      def coord() = 1.48 + r.nextDouble() * 0.14
+      (0 until 4000).map(i => (i % 500, coord(), coord(), coord(),
+                               r.nextDouble()))
+        .toDF("vertex_id", "x", "y", "z", "e")
+        .repartition(2).write.parquet(s"$dir/laghos")
+      s"$dir/laghos"
+    }
+
+  /** Spark jobs started while `body` runs, including its planning. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; ListenerBusDrain(spark.sparkContext); jobs.get }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  for ((branch, src) <- Seq("lineitem" -> (() => lineitem),
+                            "laghos" -> (() => laghos))) {
+    test(s"per-file query on $branch: one job, no exchange") {
+      val path = src() // writes the fixture on first use: not counted
+      var rows = 0
+      val jobs = jobsDuring {
+        val q = Main.fileQuery(spark, path)
+        val plan = q.queryExecution.executedPlan
+        assert(collect(plan) { case e: Exchange => e }.isEmpty, plan)
+        q.toLocalIterator().asScala.foreach(_ => rows += 1)
+      }
+      assert(rows > 0, "fixture has no flagship hits")
+      assert(jobs == 1, s"$jobs jobs to plan and drain one file's query")
+    }
+
+    test(s"per-file query on $branch: rows equal the inferred-schema plan") {
+      def key(r: Row) = r.toSeq.mkString("|")
+      val got = Main.fileQuery(spark, src()).collect().toSeq
+      val want = Main.flagship(spark.read.parquet(src())).collect().toSeq
+      assert(got.map(key).sorted == want.map(key).sorted)
+      val es = got.map(r => r.getDouble(4))
+      assert(es == es.sorted, "rows not in E order")
+    }
+  }
+
+  test("footer schema equals inference for a file, a directory and a glob") {
+    for (p <- Seq(lineitem, laghos, s"$laghos/*.parquet"))
+      assert(Main.scan(spark, p).schema == spark.read.parquet(p).schema, p)
+  }
 
   /** Spawn the runner CLI as a child JVM with the given flags + stdin,
     * returning (exitCode, stdout, stderr). One shared recipe for every
@@ -53,7 +122,6 @@ class RunnerSpec extends SparkTestBase {
   }
 
   test("flag parsing covers the reference CLI surface") {
-    import graft.runner.Main
     val o = Main.parse(
       List("-i", "AK", "-k", "SK", "-a", "10.0.0.5", "-p", "9009", "-j", "7"),
       Main.Opts())
@@ -63,7 +131,6 @@ class RunnerSpec extends SparkTestBase {
   }
 
   test("opts map to the s3a session config block") {
-    import graft.runner.Main
     val conf = Main.s3aConfigs(
       Main.Opts(Some("AK"), Some("SK"), "minio.local", 9000, 4)).toMap
     assert(conf("spark.hadoop.fs.s3a.endpoint") == "http://minio.local:9000")
@@ -187,6 +254,55 @@ class RunnerSpec extends SparkTestBase {
       s"stat $bytes3 B exceeds wire $wire3 B")
     assert(wire3 - bytes3 <= ops3 * window,
       s"wire $wire3 B vs stat $bytes3 B — slack beyond $ops3 ops x $window")
+  }
+
+  test("failure injection over the HTTP object profile: corrupt, missing, zero-row, good") {
+    withTempDir("graft_inject_") { dir =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(lineitem),
+        java.nio.file.Paths.get(dir, "good.parquet"))
+      val junk = new Array[Byte](4096)
+      new scala.util.Random(3).nextBytes(junk)
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "corrupt.parquet"),
+        junk)
+      spark.read.parquet(lineitem).limit(0).coalesce(1)
+        .write.parquet(s"$dir/zero")
+      val part = new java.io.File(s"$dir/zero").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      assert(part.length == 1, s"zero-row write left ${part.toSeq}")
+      assert(part.head.renameTo(new java.io.File(s"$dir/empty.parquet")))
+      val gets = new AtomicLong
+      val server = TestHttpObjectServer.serve(dir, getsServed = Some(gets))
+      try {
+        val base = s"ghttp://127.0.0.1:${server.getAddress.getPort}"
+        def src(n: String) = s"$base/$n.parquet"
+        def run(names: Seq[String], j: Int) = {
+          gets.set(0)
+          val (code, out, err) = spawnRunner(Seq("-j", j.toString),
+            names.map(src).mkString("\n") + "\n")
+          assert(code == 0, s"exit=$code stderr:\n${err.takeRight(2000)}")
+          def stat(prefix: String): Long = err.linesIterator
+            .find(_.startsWith(prefix)) match {
+              case Some(l) => l.stripPrefix(prefix).trim.toLong
+              case None => fail(s"no '$prefix' line in:\n$err")
+            }
+          assert(stat("Total read ops: ") == gets.get,
+            s"read ops vs ${gets.get} GETs served:\n$err")
+          (out, err, stat("Total hits: "))
+        }
+        val (out, err, hits) =
+          run(Seq("corrupt", "missing", "empty", "good"), 2)
+        def errors(n: String) = err.linesIterator
+          .count(_.startsWith(s"error processing ${src(n)}"))
+        assert(errors("corrupt") == 1 && errors("missing") == 1, err)
+        assert(errors("empty") == 0 && errors("good") == 0, err)
+        // the zero-row object adds no hit: the batch's hits and chunks are
+        // the good object's alone
+        val (soloOut, _, soloHits) = run(Seq("good"), 1)
+        assert(soloHits > 0)
+        assert(hits == soloHits, s"batch hits $hits vs good alone $soloHits")
+        assert(out == soloOut, "the good object's chunk changed in the batch")
+      } finally server.stop(0)
+    }
   }
 
   test("flagship on laghos schema: boundary rows excluded, sorted by E") {

@@ -14,79 +14,85 @@ class SinksSpec extends SparkTestBase {
     df.queryExecution.executedPlan.toString
 
   test("partitioned parquet write prunes partitions on read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part_").toString
-    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-    Sinks.writePartitioned(docs, dir, "lang")
-    val langs = docs.select("lang").distinct().as[String].collect()
-    assert(langs.length > 1, "fixture needs several languages")
-    val one = spark.read.parquet(dir).filter($"lang" === langs.head)
-    // partition filter, not a data filter: 'PartitionFilters: []' would
-    // also contain the literal key, so require lang INSIDE the brackets
-    val scan = one.queryExecution.executedPlan.collectLeaves().head.toString
-    assert("PartitionFilters: \\[[^\\]]*lang".r.findFirstIn(scan).isDefined,
-      scan.take(400))
-    assert(one.count() ==
-      docs.filter($"lang" === langs.head).count())
-    // full read returns everything (round trip intact)
-    assert(spark.read.parquet(dir).count() == docs.count())
+    withTempDir("graft_part_") { dir =>
+      val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      Sinks.writePartitioned(docs, dir, "lang")
+      val langs = docs.select("lang").distinct().as[String].collect()
+      assert(langs.length > 1, "fixture needs several languages")
+      val one = spark.read.parquet(dir).filter($"lang" === langs.head)
+      // partition filter, not a data filter: 'PartitionFilters: []' would
+      // also contain the literal key, so require lang INSIDE the brackets
+      val scan = one.queryExecution.executedPlan.collectLeaves().head.toString
+      assert("PartitionFilters: \\[[^\\]]*lang".r.findFirstIn(scan).isDefined,
+        scan.take(400))
+      assert(one.count() ==
+        docs.filter($"lang" === langs.head).count())
+      // full read returns everything (round trip intact)
+      assert(spark.read.parquet(dir).count() == docs.count())
+    }
   }
 
   test("compact collapses a many-small-files directory, content intact") {
-    val base = java.nio.file.Files.createTempDirectory("graft_cmp_")
-    val srcDir = base.resolve("src").toString
-    val dstDir = base.resolve("dst").toString
-    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-    docs.repartition(37).write.parquet(srcDir) // simulate small-file debris
-    def parquetFiles(d: String) =
-      new java.io.File(d).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles(srcDir) == 37)
-    val n = Sinks.compact(spark, srcDir, dstDir, targetFileBytes = 1L << 20)
-    assert(parquetFiles(dstDir) == n && n < 37)
-    assert(spark.read.parquet(dstDir).count() == docs.count())
+    withTempDir("graft_cmp_") { base =>
+      val srcDir = s"$base/src"
+      val dstDir = s"$base/dst"
+      val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      docs.repartition(37).write.parquet(srcDir) // simulate small-file debris
+      def parquetFiles(d: String) =
+        new java.io.File(d).listFiles().count(_.getName.endsWith(".parquet"))
+      assert(parquetFiles(srcDir) == 37)
+      val n = Sinks.compact(spark, srcDir, dstDir, targetFileBytes = 1L << 20)
+      assert(parquetFiles(dstDir) == n && n < 37)
+      assert(spark.read.parquet(dstDir).count() == docs.count())
+    }
   }
 
   test("compact refuses Hive-partitioned input instead of flattening it") {
-    val base = java.nio.file.Files.createTempDirectory("graft_cmp_part_")
-    val srcDir = base.resolve("src").toString
-    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-    Sinks.writePartitioned(docs, srcDir, "lang")
-    val e = intercept[IllegalArgumentException] {
-      Sinks.compact(spark, srcDir, base.resolve("dst").toString)
+    withTempDir("graft_cmp_part_") { base =>
+      val srcDir = s"$base/src"
+      val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      Sinks.writePartitioned(docs, srcDir, "lang")
+      val e = intercept[IllegalArgumentException] {
+        Sinks.compact(spark, srcDir, s"$base/dst")
+      }
+      assert(e.getMessage.contains("Hive-partitioned"))
     }
-    assert(e.getMessage.contains("Hive-partitioned"))
   }
 
   test("compact refuses in-place and nested destinations (data-loss guard)") {
-    val base = java.nio.file.Files.createTempDirectory("graft_cmp_self_")
-    val srcDir = base.resolve("src").toString
-    spark.read.parquet(s"$sf0001/documents.parquet").write.parquet(srcDir)
-    val inPlace = intercept[IllegalArgumentException] {
-      Sinks.compact(spark, srcDir, srcDir)
+    withTempDir("graft_cmp_self_") { base =>
+      val srcDir = s"$base/src"
+      spark.read.parquet(s"$sf0001/documents.parquet").write.parquet(srcDir)
+      val inPlace = intercept[IllegalArgumentException] {
+        Sinks.compact(spark, srcDir, srcDir)
+      }
+      assert(inPlace.getMessage.contains("in place"))
+      val nested = intercept[IllegalArgumentException] {
+        Sinks.compact(spark, srcDir, s"$srcDir/sub")
+      }
+      assert(nested.getMessage.contains("in place"))
+      // dest as an ANCESTOR of src: overwrite would recursively clear it,
+      // taking src along
+      val ancestor = intercept[IllegalArgumentException] {
+        Sinks.compact(spark, srcDir, base)
+      }
+      assert(ancestor.getMessage.contains("in place"))
+      // source untouched by either refusal
+      assert(spark.read.parquet(srcDir).count() > 0)
     }
-    assert(inPlace.getMessage.contains("in place"))
-    val nested = intercept[IllegalArgumentException] {
-      Sinks.compact(spark, srcDir, s"$srcDir/sub")
-    }
-    assert(nested.getMessage.contains("in place"))
-    // dest as an ANCESTOR of src: overwrite would recursively clear it,
-    // taking src along
-    val ancestor = intercept[IllegalArgumentException] {
-      Sinks.compact(spark, srcDir, base.toString)
-    }
-    assert(ancestor.getMessage.contains("in place"))
-    // source untouched by either refusal
-    assert(spark.read.parquet(srcDir).count() > 0)
   }
 
   test("schema evolution: mergeSchema unifies files with added columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_evo_").toString
-    Seq((1L, "a")).toDF("id", "v1").write.parquet(s"$dir/p=1")
-    Seq((2L, "b", 9L)).toDF("id", "v1", "v2_added").write.parquet(s"$dir/p=2")
-    val merged = spark.read.option("mergeSchema", "true").parquet(dir)
-    assert(merged.columns.toSet == Set("id", "v1", "v2_added", "p"))
-    val r = merged.orderBy("id")
-      .select("id", "v2_added").collect()
-    assert(r(0).isNullAt(1) && r(1).getLong(1) == 9L)
+    withTempDir("graft_evo_") { dir =>
+      Seq((1L, "a")).toDF("id", "v1").write.parquet(s"$dir/p=1")
+      Seq((2L, "b", 9L)).toDF("id", "v1", "v2_added")
+        .write.parquet(s"$dir/p=2")
+      val merged = spark.read.option("mergeSchema", "true").parquet(dir)
+      assert(merged.columns.toSet == Set("id", "v1", "v2_added", "p"))
+      val r = merged.orderBy("id")
+        .select("id", "v2_added").collect()
+      assert(r(0).isNullAt(1) && r(1).getLong(1) == 9L)
+    }
   }
 
   test("bucketed tables join and aggregate with no exchange") {

@@ -40,31 +40,30 @@ class SkewStressSpec extends SparkTestBase {
     s
   }
 
-  private lazy val dir: String = {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_skew_").toString
-    val ts = lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
-    val hot = sess.range(HotRows).select(
-      lit(1L).as("l_orderkey"),
-      (col("id") % 7 + 1).cast("int").as("l_linenumber"),
-      lit("N").as("l_returnflag"),
-      lit(100.0).as("l_extendedprice"),
-      ts.as("l_shipdate"))
-    val cold = sess.range(ColdKeys.toLong * ColdRowsPerKey).select(
-      (col("id") % ColdKeys + 2).as("l_orderkey"),
-      (col("id") % 7 + 1).cast("int").as("l_linenumber"),
-      lit("R").as("l_returnflag"),
-      lit(10.0).as("l_extendedprice"),
-      ts.as("l_shipdate"))
-    hot.unionAll(cold).repartition(8)
-      .write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
-    sess.range(ColdKeys + 1L).select(
-      (col("id") + 1).as("o_orderkey"),
-      when(col("id") % 2 === 0, "O").otherwise("F").as("o_orderstatus"),
-      ts.as("o_orderdate"))
-      .write.mode("overwrite").parquet(s"$tmp/orders.parquet")
-    tmp
-  }
+  private lazy val dir: String =
+    withTempDir("graft_skew_", suite = true) { tmp =>
+      val ts = lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
+      val hot = sess.range(HotRows).select(
+        lit(1L).as("l_orderkey"),
+        (col("id") % 7 + 1).cast("int").as("l_linenumber"),
+        lit("N").as("l_returnflag"),
+        lit(100.0).as("l_extendedprice"),
+        ts.as("l_shipdate"))
+      val cold = sess.range(ColdKeys.toLong * ColdRowsPerKey).select(
+        (col("id") % ColdKeys + 2).as("l_orderkey"),
+        (col("id") % 7 + 1).cast("int").as("l_linenumber"),
+        lit("R").as("l_returnflag"),
+        lit(10.0).as("l_extendedprice"),
+        ts.as("l_shipdate"))
+      hot.unionAll(cold).repartition(8)
+        .write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
+      sess.range(ColdKeys + 1L).select(
+        (col("id") + 1).as("o_orderkey"),
+        when(col("id") % 2 === 0, "O").otherwise("F").as("o_orderstatus"),
+        ts.as("o_orderdate"))
+        .write.mode("overwrite").parquet(s"$tmp/orders.parquet")
+      tmp
+    }
 
   /** Per-task shuffle-read record counts of the heaviest shuffle stage
     * executed while `run` is active. No job-group scoping: AQE

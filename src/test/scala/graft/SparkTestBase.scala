@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session across all suites (JVM-wide, cheap to reuse). */
@@ -28,7 +32,24 @@ object SparkTestBase {
   }
 }
 
-abstract class SparkTestBase extends AnyFunSuite {
+abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.spark
   val sf0001 = "/root/testdata/sf0.001"
+
+  private val suiteDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** Runs `body` on a fresh temp directory and deletes it afterwards.
+    * With `suite = true` (fixtures shared by a suite's tests, e.g. from a
+    * lazy val) the directory lives until the suite ends instead. */
+  protected def withTempDir[T](prefix: String, suite: Boolean = false)
+                              (body: String => T): T = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    if (suite) { suiteDirs.add(dir); body(dir.toString) }
+    else try body(dir.toString) finally FileUtils.deleteDirectory(dir)
+  }
+
+  override protected def afterAll(): Unit =
+    try suiteDirs.forEach(d => FileUtils.deleteDirectory(d))
+    finally super.afterAll()
 }

@@ -259,26 +259,24 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("foreachBatch streams into parquet and matches the batch result") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fb_")
-    val out = dir.resolve("out").toString
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Long, Double)]
-    val agg = mem.toDF().toDF("k", "v")
-      .groupBy($"k").agg(sum($"v".cast("decimal(18,6)"))
-        .cast("double").as("total"))
-    val q = agg.writeStream.outputMode("complete")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(out)
-      }.start()
-    mem.addData((1L, 1.5), (2L, 2.0), (1L, 0.5))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.read.parquet(out).orderBy("k")
-      .as[(Long, Double)].collect().toSeq
-    assert(got == Seq((1L, 2.0), (2L, 2.0)))
-    dir.toFile.listFiles().foreach(f => {
-      if (f.isDirectory) f.listFiles().foreach(_.delete()); f.delete()
-    })
+    withTempDir("graft_fb_") { dir =>
+      val out = s"$dir/out"
+      implicit val sq = spark.sqlContext
+      val mem = MemoryStream[(Long, Double)]
+      val agg = mem.toDF().toDF("k", "v")
+        .groupBy($"k").agg(sum($"v".cast("decimal(18,6)"))
+          .cast("double").as("total"))
+      val q = agg.writeStream.outputMode("complete")
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          batch.write.mode("overwrite").parquet(out)
+        }.start()
+      mem.addData((1L, 1.5), (2L, 2.0), (1L, 0.5))
+      q.processAllAvailable()
+      q.stop()
+      val got = spark.read.parquet(out).orderBy("k")
+        .as[(Long, Double)].collect().toSeq
+      assert(got == Seq((1L, 2.0), (2L, 2.0)))
+    }
   }
 
   test("batch q_sessionize: gap splits sessions, counts preserved") {

@@ -41,26 +41,26 @@ class TextOpsSpec extends SparkTestBase {
     // the repetitive doc, 8/1 = 8.0 for the all-rare doc — 2000 and 8000
     // in the integer milli-unit encoding the query emits (pure int64
     // arithmetic, so the assertion is equality, not tolerance).
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_surprisal_fixture").toString
-    Seq((1L, "x x x x"), (2L, "y z w q")).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = ops.TextOps.queries("q_text_surprisal")(spark, dir)
-      .select($"doc_id".as[Long], $"surprisal_milli".as[Long])
-      .collect().toMap
-    assert(got == Map(1L -> 2000L, 2L -> 8000L), s"got $got")
+    withTempDir("graft_surprisal_fixture") { dir =>
+      Seq((1L, "x x x x"), (2L, "y z w q")).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = ops.TextOps.queries("q_text_surprisal")(spark, dir)
+        .select($"doc_id".as[Long], $"surprisal_milli".as[Long])
+        .collect().toMap
+      assert(got == Map(1L -> 2000L, 2L -> 8000L), s"got $got")
+    }
   }
 
   test("surprisal milli-rounding is half-up in the shared integer space") {
     // 3 tokens total: 'a' freq 2, 'b' freq 1 → q(a) = (3000+1)/2 = 1500,
     // q(b) = 3000. Doc mean for doc 1 = (1500+1500+3000+1) DIV 3 = 2000.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_surprisal_half").toString
-    Seq((1L, "a a b")).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = ops.TextOps.queries("q_text_surprisal")(spark, dir)
-      .select($"surprisal_milli".as[Long]).head()
-    assert(got == 2000L, s"got $got")
+    withTempDir("graft_surprisal_half") { dir =>
+      Seq((1L, "a a b")).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = ops.TextOps.queries("q_text_surprisal")(spark, dir)
+        .select($"surprisal_milli".as[Long]).head()
+      assert(got == 2000L, s"got $got")
+    }
   }
 
   test("pmi step-1 decimal floor is exact past the BIGINT DIV ceiling") {
