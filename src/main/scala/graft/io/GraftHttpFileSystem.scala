@@ -25,7 +25,11 @@ import org.apache.hadoop.util.Progressable
   * issues one `Range: bytes=pos-` GET — so sequential scans cost one op
   * per reopened region, exactly how the reference's byte-range reads
   * count (runner.cc:109–117). `readFully(pos, …)` (parquet footer +
-  * column chunks) issues one bounded-range GET per call.
+  * column chunks) issues one bounded-range GET per call. Reads that start
+  * in an object's last 64 KiB — the parquet footer and its length tail —
+  * go to the wire once per JVM ([[GraftHttpFileSystem.tailMemo]]): the
+  * runner's driver reads each footer for the schema, then the scan task
+  * reads it twice more.
   *
   * Register with `spark.hadoop.fs.ghttp.impl = graft.io.GraftHttpFileSystem`
   * and read `ghttp://host:port/object.parquet`. Counters are global
@@ -149,6 +153,33 @@ object GraftHttpFileSystem {
     (readOps.get(), headOps.get(), bytesRead.get())
   def resetCounters(): Unit = { readOps.set(0); headOps.set(0); bytesRead.set(0) }
 
+  /** Reads that start this close to an object's end are memoized. */
+  private final val TailBytes = 64L << 10
+  /** The memo is dropped whole when it would pass this many bytes. */
+  private final val MemoMaxBytes = 32L << 20
+
+  /** The bytes read from the wire at a start position in an object's
+    * tail, keyed by (object URL, object length, start): a positioned
+    * read's range, or what a sequential run from a seek consumed. Objects
+    * are immutable and another length means another object, so an entry
+    * never goes stale. A later read from the same start that wants no
+    * more than the entry holds is served from it: not a GET, so it moves
+    * neither [[readOps]] nor [[bytesRead]], and the counters keep
+    * matching what the server answered. */
+  private val tailMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
+                                                Array[Byte]]()
+  private val tailMemoBytes = new AtomicLong(0)
+
+  private def remember(key: (String, Long, Long), bytes: Array[Byte]): Unit =
+    if (bytes.nonEmpty) {
+      tailMemo.merge(key, bytes, (a, b) => if (a.length >= b.length) a else b)
+      if (tailMemoBytes.addAndGet(bytes.length) > MemoMaxBytes) {
+        tailMemo.clear()
+        tailMemoBytes.set(0)
+      }
+    }
+
   /** Deterministic request signature: `GRAFT <id>:<hex(hmac-sha256(secret,
     * method + "\n" + path))>`. A keyed MAC rather than the raw secret in a
     * header — the shape of object-store request signing (the reference's
@@ -192,8 +223,31 @@ object GraftHttpFileSystem {
     private var in: InputStream = _
     private var conn: HttpURLConnection = _
 
+    // In the tail: the bytes taken off the wire since `runStart`,
+    // memoized at the next seek, memo hit or close. `memoized`: the
+    // current region is a memo hit, which the counters skip.
+    private var runStart = 0L
+    private var taken: java.io.ByteArrayOutputStream = _
+    private var memoized = false
+
+    private def key(at: Long) = (url.toString, len, at)
+
     private def ensureOpen(): InputStream = {
       if (in == null) {
+        if (pos >= len - TailBytes) {
+          val hit = tailMemo.get(key(pos))
+          if (hit != null) {
+            endRun()
+            in = new java.io.ByteArrayInputStream(hit)
+            memoized = true
+            return in
+          }
+          if (taken == null) {
+            taken = new java.io.ByteArrayOutputStream
+            runStart = pos
+          }
+        }
+        memoized = false
         conn = openSigned()
         val hi =
           if (readahead > 0) math.min(pos + readahead, len) - 1 else len - 1
@@ -216,11 +270,18 @@ object GraftHttpFileSystem {
     }
 
     private def closeCurrent(): Unit = {
-      if (in != null) { in.close(); conn.disconnect(); in = null; conn = null }
+      if (in != null) {
+        in.close(); if (conn != null) conn.disconnect(); in = null; conn = null
+      }
+    }
+
+    private def endRun(): Unit = {
+      if (taken != null) remember(key(runStart), taken.toByteArray)
+      taken = null
     }
 
     override def seek(newPos: Long): Unit = {
-      if (newPos != pos) { closeCurrent(); pos = newPos }
+      if (newPos != pos) { endRun(); closeCurrent(); pos = newPos }
     }
     override def getPos: Long = pos
     override def seekToNewSource(targetPos: Long): Boolean = false
@@ -232,7 +293,13 @@ object GraftHttpFileSystem {
         closeCurrent()
         b = ensureOpen().read()
       }
-      if (b >= 0) { pos += 1; bytesRead.incrementAndGet() }
+      if (b >= 0) {
+        pos += 1
+        if (!memoized) {
+          bytesRead.incrementAndGet()
+          if (taken != null) taken.write(b)
+        }
+      }
       b
     }
 
@@ -243,16 +310,32 @@ object GraftHttpFileSystem {
         closeCurrent()
         n = ensureOpen().read(b, off, l)
       }
-      if (n > 0) { pos += n; bytesRead.addAndGet(n) }
+      if (n > 0) {
+        pos += n
+        if (!memoized) {
+          bytesRead.addAndGet(n)
+          if (taken != null) taken.write(b, off, n)
+        }
+      }
       n
     }
 
     // One bounded-range GET per positioned read — the parquet footer /
-    // column-chunk access pattern, and exactly one counted op each.
+    // column-chunk access pattern, and exactly one counted op each —
+    // unless a tail read's range is already memoized.
     override def read(position: Long, buffer: Array[Byte], offset: Int,
                       length: Int): Int = {
       if (position >= len) return -1
       val hi = math.min(position + length, len) - 1
+      val want = (hi - position + 1).toInt
+      val inTail = position >= len - TailBytes
+      if (inTail) {
+        val hit = tailMemo.get(key(position))
+        if (hit != null && hit.length >= want) {
+          System.arraycopy(hit, 0, buffer, offset, want)
+          return want
+        }
+      }
       val c = openSigned()
       c.setRequestProperty("Range", s"bytes=$position-$hi")
       try {
@@ -274,6 +357,9 @@ object GraftHttpFileSystem {
           if (n > 0) total += n
         }
         bytesRead.addAndGet(total)
+        if (inTail)
+          remember(key(position),
+                   java.util.Arrays.copyOfRange(buffer, offset, offset + total))
         total
       } finally c.disconnect()
     }
@@ -287,6 +373,6 @@ object GraftHttpFileSystem {
     override def readFully(position: Long, buffer: Array[Byte]): Unit =
       readFully(position, buffer, 0, buffer.length)
 
-    override def close(): Unit = closeCurrent()
+    override def close(): Unit = { endRun(); closeCurrent() }
   }
 }

@@ -8,10 +8,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   *
   * The reference counts read ops and bytes by wrapping DuckDB's FileSystem
   * (reference runner.cc:75–172); the Spark-idiomatic seam for the same
-  * observation is a SparkListener over task input metrics. `bytesRead` is
-  * exact. A per-HTTP-GET "read ops" count has no task-level Spark analog, so
+  * observation on a cluster is a SparkListener over task input metrics.
+  * A per-HTTP-GET "read ops" count has no task-level Spark analog, so
   * `readTasks` (scan tasks that actually read input) is reported as the
-  * documented approximation (SURVEY.md §3.3).
+  * documented approximation (SURVEY.md §3.3). In local mode the runner
+  * reports [[Metrics.monitored]] instead: the filesystems count their
+  * own requests and bytes.
   */
 class Metrics extends SparkListener {
   private val bytes = new LongAdder
@@ -33,26 +35,29 @@ class Metrics extends SparkListener {
 }
 
 object Metrics {
-  /** Object-store read-op count from Hadoop's global storage statistics —
-    * the closest Spark-side analog to the reference's per-read counter
-    * (its MonitoredFileSystem wraps every FS read, reference
-    * runner.cc:86–94,109–117): s3a's `stream_read_operations` ≈ HTTP
-    * range GETs. Restricted to s3 schemes (mixing local-file readOps into
-    * the same number would be meaningless); None when no s3 filesystem
-    * has been touched — callers fall back to the scan-task approximation.
+  /** This JVM's read requests and bytes over every monitored filesystem,
+    * as (ops, bytes): ghttp's GETs ([[GraftHttpFileSystem]]), counted
+    * `file://` reads ([[CountingLocalFileSystem]]) and s3a's
+    * `stream_read_operations` / `stream_read_bytes` from Hadoop's global
+    * storage statistics (≈ HTTP range GETs, the closest analog to the
+    * reference's per-read counter, runner.cc:86–94,109–117). The three
+    * are disjoint.
     *
-    * The counter is JVM-global and monotonic, and in-JVM only — it sees
-    * nothing from remote executors — so it is only meaningful in local
-    * mode and as a before/after delta around the measured window; the
-    * caller (runner/Main) gates on `sparkContext.isLocal` and snapshots
-    * around the run. */
-  def s3ReadOps(): Option[Long] = {
+    * The counters are JVM-global and monotonic, and in-JVM only — they
+    * see nothing from remote executors — so they are only meaningful in
+    * local mode and as a before/after delta around the measured window;
+    * the caller (runner/Main) gates on `sparkContext.isLocal` and
+    * snapshots around the run. */
+  def monitored(): (Long, Long) = {
     import scala.jdk.CollectionConverters._
-    val counts = org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics
+    val s3 = org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics
       .iterator().asScala.toSeq
       .filter(s => s.getScheme == "s3a" || s.getScheme == "s3")
-      .flatMap(s => Option(s.getLong("stream_read_operations"))
-        .map(_.longValue()))
-    if (counts.isEmpty) None else Some(counts.sum)
+    def s3Stat(key: String): Long =
+      s3.flatMap(s => Option(s.getLong(key)).map(_.longValue())).sum
+    val (httpOps, _, httpBytes) = GraftHttpFileSystem.snapshot
+    val (localOps, localBytes) = CountingLocalFileSystem.snapshot
+    (httpOps + localOps + s3Stat("stream_read_operations"),
+     httpBytes + localBytes + s3Stat("stream_read_bytes"))
   }
 }

@@ -2,18 +2,27 @@ package graft.runner
 
 import java.util.concurrent.Executors
 
+import scala.collection.concurrent.TrieMap
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.{Failure, Random, Success, Try}
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
+  SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  ResultQueryStageExec}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.PreparedExecution
 import org.apache.spark.sql.types.StructType
 
 import graft.io.Metrics
@@ -38,6 +47,10 @@ import graft.io.Metrics
   * 197–201); here one shared SparkSession serves j concurrent driver-side
   * Futures, and each file's query is ONE Spark job of ONE task with no
   * exchange ([[fileQuery]]) — the Spark form of one thread per file.
+  * DuckDB prepares the fixed query cheaply; Spark's analysis,
+  * optimization and physical planning are not cheap, so [[Prepared]]
+  * plans the query once per footer schema and runs each file on a copy
+  * of that plan with only the scan's file index swapped.
   * Parallelism comes from `-j` alone, as in the reference; a single file
   * with several splits scans them in that one task. S3 access goes
   * through s3a (path-style, plain http — reference runner.cc:205–217). At
@@ -145,15 +158,15 @@ object Main {
     }
   }
 
-  /** The schema Spark's (non-merging) parquet inference gives `path` — a
-    * file, a directory or a glob — read from ONE footer on the driver
-    * instead of inference's schema job. Inference touches the first of
-    * `_common_metadata`, `_metadata` and the data files, each by path
-    * order (ParquetUtils.inferSchema), and honours the Spark-schema
-    * key-value metadata; the same file and converter are used here. */
-  private[graft] def footerSchema(spark: SparkSession,
-                                  path: String): StructType = {
-    val conf = spark.sessionState.newHadoopConf()
+  /** The roots `path` names — itself, or a glob's matches — and the
+    * schema Spark's (non-merging) parquet inference gives it, read from
+    * ONE footer on the driver instead of inference's schema job.
+    * Inference touches the first of `_common_metadata`, `_metadata` and
+    * the data files, each by path order (ParquetUtils.inferSchema), and
+    * honours the Spark-schema key-value metadata; the same file and
+    * converter are used here. */
+  private[graft] def footerSchema(spark: SparkSession, conf: Configuration,
+                                  path: String): (Seq[Path], StructType) = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val roots =
@@ -177,14 +190,17 @@ object Main {
         s"no parquet file under $path"))
     val footer = ParquetFooterReader.readFooter(
       HadoopInputFile.fromStatus(leaf, conf), SKIP_ROW_GROUPS)
-    ParquetFileFormat.readSchemaFromFooter(
-      new Footer(leaf.getPath, footer),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    (roots.map(r => fs.makeQualified(r.getPath)),
+     ParquetFileFormat.readSchemaFromFooter(
+       new Footer(leaf.getPath, footer),
+       new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
   }
 
   /** `path` scanned under its [[footerSchema]]: no schema job. */
   private[graft] def scan(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(footerSchema(spark, path)).parquet(path)
+    spark.read.schema(
+      footerSchema(spark, spark.sessionState.newHadoopConf(), path)._2)
+      .parquet(path)
 
   /** One source's flagship as one Spark job of one task: `coalesce(1)`
     * makes the scan report a single partition, so the partial/final
@@ -192,49 +208,107 @@ object Main {
   private[graft] def fileQuery(spark: SparkSession, path: String): DataFrame =
     flagship(scan(spark, path).coalesce(1))
 
+  /** The per-file flagship planned once per footer schema — the Spark form
+    * of the prepared statement the reference's DuckDB runs per file.
+    *
+    * The first source of each schema builds a template: its [[fileQuery]]
+    * planned to the physical plan that would run (AQE's final plan; with
+    * no exchange there is nothing for AQE to re-plan). Every source, that
+    * first one included, then runs its own copy of the template's tree
+    * whose `FileSourceScanExec` reads a fresh `InMemoryFileIndex` over
+    * that source, so the copy's `SQLMetric`s and lazily built RDD are the
+    * file's own and the shared template never executes (safe at `-j` >
+    * 1). The copy runs as one SQL execution of one job, with the
+    * template's analyzed and optimized plans ([[PreparedExecution]]), so
+    * listeners see one execution per file as before.
+    *
+    * A template serves sources whose footer schema (with its metadata)
+    * and partition schema equal its own; any other source plans its own
+    * template. One Hadoop conf copy serves the whole run. */
+  private[graft] final class Prepared(spark: SparkSession) {
+    private val conf = spark.sessionState.newHadoopConf()
+    private val templates =
+      TrieMap[(StructType, StructType), (QueryExecution, SparkPlan)]()
+
+    /** Templates planned so far. */
+    def planned: Int = templates.size
+
+    private def template(path: String): (QueryExecution, SparkPlan) = {
+      val qe = fileQuery(spark, path).queryExecution
+      val plan = qe.executedPlan match {
+        case aqe: AdaptiveSparkPlanExec => aqe.finalPhysicalPlan match {
+          case result: ResultQueryStageExec => result.plan
+          case p => p
+        }
+        case p => p
+      }
+      (qe, plan)
+    }
+
+    /** Runs the flagship on `path`; `consume` gets the result schema and
+      * the rows, streamed, inside the file's SQL execution. */
+    def run[A](path: String)(consume: (StructType, Iterator[Row]) => A): A = {
+      val (roots, schema) = footerSchema(spark, conf, path)
+      val index = new InMemoryFileIndex(spark, roots, Map.empty, Some(schema))
+      val (qe, plan) = templates.getOrElseUpdate(
+        (schema, index.partitionSchema), template(path))
+      // clone: a fresh node for every operator, even where the swapped
+      // scan equals the template's (the same path listed twice)
+      val own = plan.clone().transformUp {
+        case s: FileSourceScanExec =>
+          s.copy(relation =
+            s.relation.copy(location = index)(s.relation.sparkSession))
+      }
+      val resultSchema = qe.analyzed.schema
+      val toRow = CatalystTypeConverters.createToScalaConverter(resultSchema)
+      SQLExecution.withNewExecutionId(new PreparedExecution(qe, own),
+                                      Some("toLocalIterator")) {
+        consume(resultSchema,
+                own.executeToIterator().map(toRow(_).asInstanceOf[Row]))
+      }
+    }
+  }
+
   /** Run one file's query; streams result batches to stdout (A11) and
     * returns the hit count. */
-  private def runOne(spark: SparkSession, source: String): Long = {
-    val path = source.stripPrefix("'").stripSuffix("'")
-    val result = fileQuery(spark, path)
-    val fields = result.schema.fields
-    var hits = 0L
-    val it = result.toLocalIterator()
-    // 2048 = DuckDB's STANDARD_VECTOR_SIZE, the reference's chunk size.
-    val batch = new scala.collection.mutable.ArrayBuffer[
-      org.apache.spark.sql.Row](2048)
-    def flush(): Unit = if (batch.nonEmpty) {
-      // One columnar chunk per flush, mirroring the reference's
-      // chunk-at-a-time print of DataChunk::ToString() (reference
-      // runner.cc:219–227; format in reference README.md:78–83): a
-      // header line, then one `- FLAT <TYPE>: n = [ v, v, …]` line per
-      // column. Java's Double.toString matches DuckDB's shortest-round-
-      // trip decimals for values in plain-decimal range (all flagship
-      // outputs); the engines' exponent spellings differ for extreme
-      // magnitudes (1.0E16 vs 1e+16). Written under the stdout lock so
-      // concurrent files can't interleave into each other's chunk.
-      val text = new StringBuilder
-      text.append(s"Chunk - [${fields.length} Columns]\n")
-      var c = 0
-      while (c < fields.length) {
-        val vals = batch.map(r =>
-          if (r.isNullAt(c)) "NULL" else r.get(c).toString)
-        text.append(s"- FLAT ${duckTypeName(fields(c).dataType)}: ")
-          .append(batch.size).append(" = [ ")
-          .append(vals.mkString(", ")).append("]\n")
-        c += 1
+  private def runOne(prepared: Prepared, source: String): Long =
+    prepared.run(source.stripPrefix("'").stripSuffix("'")) { (schema, it) =>
+      val fields = schema.fields
+      var hits = 0L
+      // 2048 = DuckDB's STANDARD_VECTOR_SIZE, the reference's chunk size.
+      val batch = new scala.collection.mutable.ArrayBuffer[Row](2048)
+      def flush(): Unit = if (batch.nonEmpty) {
+        // One columnar chunk per flush, mirroring the reference's
+        // chunk-at-a-time print of DataChunk::ToString() (reference
+        // runner.cc:219–227; format in reference README.md:78–83): a
+        // header line, then one `- FLAT <TYPE>: n = [ v, v, …]` line per
+        // column. Java's Double.toString matches DuckDB's shortest-round-
+        // trip decimals for values in plain-decimal range (all flagship
+        // outputs); the engines' exponent spellings differ for extreme
+        // magnitudes (1.0E16 vs 1e+16). Written under the stdout lock so
+        // concurrent files can't interleave into each other's chunk.
+        val text = new StringBuilder
+        text.append(s"Chunk - [${fields.length} Columns]\n")
+        var c = 0
+        while (c < fields.length) {
+          val vals = batch.map(r =>
+            if (r.isNullAt(c)) "NULL" else r.get(c).toString)
+          text.append(s"- FLAT ${duckTypeName(fields(c).dataType)}: ")
+            .append(batch.size).append(" = [ ")
+            .append(vals.mkString(", ")).append("]\n")
+          c += 1
+        }
+        System.out.synchronized { print(text.toString) }
+        batch.clear()
       }
-      System.out.synchronized { print(text.toString) }
-      batch.clear()
+      while (it.hasNext) {
+        batch += it.next()
+        hits += 1
+        if (batch.size >= 2048) flush()
+      }
+      flush()
+      hits
     }
-    while (it.hasNext) {
-      batch += it.next()
-      hits += 1
-      if (batch.size >= 2048) flush()
-    }
-    flush()
-    hits
-  }
 
   def main(args: Array[String]): Unit = {
     val opts = parse(args.toList, Opts())
@@ -256,6 +330,9 @@ object Main {
     // reference's read-op semantics (runner.cc:75–172)
     builder.config("spark.hadoop.fs.ghttp.impl",
                    "graft.io.GraftHttpFileSystem")
+    // file:// sources count their read requests and bytes the same way
+    builder.config("spark.hadoop.fs.file.impl",
+                   "graft.io.CountingLocalFileSystem")
     // Row-group pruning on min/max statistics only, as DuckDB's zone maps:
     // parquet-mr's dictionary filter expands each surviving row group's
     // x/y/z dictionaries into boxed sets, which high-cardinality doubles
@@ -266,21 +343,17 @@ object Main {
     spark.sparkContext.setLogLevel("WARN")
     val metrics = new Metrics
     spark.sparkContext.addSparkListener(metrics)
+    val prepared = new Prepared(spark)
 
     val pool = Executors.newFixedThreadPool(opts.threads)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
 
-    // Snapshot the (monotonic, JVM-global) s3 op counter so the stat block
-    // reports only this run's window; only trustworthy in local mode where
-    // every read happens in this JVM.
-    val s3OpsBefore =
-      if (spark.sparkContext.isLocal) Metrics.s3ReadOps().getOrElse(0L)
-      else 0L
-    val (ghttpOpsBefore, _, ghttpBytesBefore) =
-      graft.io.GraftHttpFileSystem.snapshot
+    // The monitored read counters are JVM-global and monotonic: snapshot
+    // them so the stat block reports only this run's window.
+    val (opsBefore, bytesBefore) = Metrics.monitored()
     val t0 = System.nanoTime()
     val futures = shuffled.map { src =>
-      Future(Try(runOne(spark, src)) match {
+      Future(Try(runOne(prepared, src)) match {
         case Success(hits) => hits
         case Failure(e) =>   // per-file isolation (runner.cc:293–297)
           System.err.println(s"error processing $src: ${e.getMessage}")
@@ -291,41 +364,26 @@ object Main {
     val t1 = System.nanoTime()
     pool.shutdown()
 
-    // ghttp counters are driver-JVM AtomicLongs: only authoritative in
-    // local mode (on a cluster, executor GETs happen in other JVMs) —
-    // same gating as the s3a counter below.
-    val (ghttpOpsAfter, _, ghttpBytesAfter) =
-      graft.io.GraftHttpFileSystem.snapshot
-    val ghttpOps =
-      if (spark.sparkContext.isLocal) ghttpOpsAfter - ghttpOpsBefore else 0L
-    // disjoint counters (ghttp streams never update Hadoop FS statistics,
-    // so the listener's bytesRead misses them): total = sum, not either.
-    val bytes = metrics.bytesRead +
-      (if (spark.sparkContext.isLocal) ghttpBytesAfter - ghttpBytesBefore
-       else 0L)
+    // Read ops and bytes are the requests made and the bytes pulled, as
+    // the monitored filesystems count them (exactly the reference's
+    // semantics, runner.cc:109–117). Those counters live in this JVM, so
+    // they hold only in local mode: on a cluster, or when no monitored
+    // filesystem read anything, the scan-task count and the task input
+    // bytes are the documented fallback (SURVEY.md §3.3).
+    val (opsAfter, bytesAfter) = Metrics.monitored()
+    val monitored =
+      spark.sparkContext.isLocal && opsAfter > opsBefore
+    val bytes =
+      if (monitored) bytesAfter - bytesBefore else metrics.bytesRead
     System.err.println(
       s"Number data sources (parquet files): ${sources.size}")
     System.err.println(s"Threads: ${opts.threads}")
     System.err.println(f"Total Query time: ${(t1 - t0) / 1e9}%.2f s")
     System.err.println(s"Total hits: $totalHits")
-    // Object-store read ops, preference order: the monitored ghttp
-    // profile counts actual ranged GETs (exactly the reference's
-    // semantics, runner.cc:109–117); else s3a stream_read_operations as
-    // a this-run delta, local mode only — on a real cluster the
-    // driver-side counter misses executor reads entirely; scan-task
-    // count is the documented fallback (SURVEY.md §3.3).
-    val s3Ops =
-      if (spark.sparkContext.isLocal)
-        Metrics.s3ReadOps().map(_ - s3OpsBefore).filter(_ > 0)
-      else None
-    if (ghttpOps > 0)
-      System.err.println(s"Total read ops: $ghttpOps")
-    else s3Ops match {
-      case Some(ops) =>
-        System.err.println(s"Total read ops: $ops")
-      case None =>
-        System.err.println(s"Total read ops (scan tasks): ${metrics.readTasks}")
-    }
+    if (monitored)
+      System.err.println(s"Total read ops: ${opsAfter - opsBefore}")
+    else
+      System.err.println(s"Total read ops (scan tasks): ${metrics.readTasks}")
     System.err.println(s"Total read bytes: $bytes")
     System.err.println(f"... in KBs: ${bytes / 1e3}%.2f")
     System.err.println(f"... in MBs: ${bytes / 1e6}%.2f")

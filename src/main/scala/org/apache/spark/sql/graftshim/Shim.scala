@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 
 /** Bridge to Spark 4's `private[sql]` Column↔Expression converters, so the
   * engine's native Catalyst expressions (graft.functions) can be exposed as
@@ -35,4 +36,20 @@ object Shim {
     * lifetime. */
   def unloadAllStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
+}
+
+/** A QueryExecution around a physical plan that was planned once for an
+  * earlier query of the same shape: analysis, optimization and physical
+  * planning are the template's, only the executed tree is this one's.
+  * Run under `SQLExecution.withNewExecutionId`, it posts one SQL
+  * execution whose listeners (`QueryExecutionListener.onSuccess`, the SQL
+  * status store) see `plan`, and it plans nothing itself — its
+  * `tracker` records no phase. `plan` must be the caller's own copy: its
+  * `SQLMetric`s and lazily built RDDs belong to this execution. */
+final class PreparedExecution(template: QueryExecution, plan: SparkPlan)
+    extends QueryExecution(template.sparkSession, template.logical) {
+  override def analyzed = template.analyzed
+  override def optimizedPlan = template.optimizedPlan
+  override def sparkPlan = plan
+  override def executedPlan = plan
 }

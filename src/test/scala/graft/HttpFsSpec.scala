@@ -137,6 +137,56 @@ class HttpFsSpec extends SparkTestBase {
     }
   }
 
+  test("footer memo: a second footer read of an object issues no GET, a new length does") {
+    withTempDir("graft_memo_") { dir =>
+      val obj = Paths.get(dir, "obj.parquet")
+      Files.copy(Paths.get(sf0001, "lineitem.parquet"), obj)
+      val gets = new java.util.concurrent.atomic.AtomicLong
+      val server = serve(dir, getsServed = Some(gets))
+      try {
+        val uri = java.net.URI.create(
+          s"ghttp://127.0.0.1:${server.getAddress.getPort}/")
+        val conf = new org.apache.hadoop.conf.Configuration(false)
+        conf.set("fs.ghttp.impl", "graft.io.GraftHttpFileSystem")
+        val path = new org.apache.hadoop.fs.Path(uri.resolve("obj.parquet"))
+        // a fresh instance (no cached HEAD) per read; parquet's own read
+        // order: the length tail, then footer + tail, both sequential
+        def footerRead(): Unit = {
+          val fs = org.apache.hadoop.fs.FileSystem.newInstance(uri, conf)
+          try {
+            val len = fs.getFileStatus(path).getLen
+            val in = fs.open(path)
+            try {
+              val tail = new Array[Byte](8)
+              in.seek(len - 8)
+              in.readFully(tail)
+              assert(new String(tail, 4, 4, "US-ASCII") == "PAR1")
+              val n = java.nio.ByteBuffer.wrap(tail, 0, 4)
+                .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+              in.seek(len - 8 - n)
+              in.readFully(new Array[Byte](n))
+              // a positioned read of the same tail range is a hit too
+              in.readFully(len - 8, tail)
+            } finally in.close()
+          } finally fs.close()
+        }
+        def delta(body: => Unit): (Long, Long) = {
+          val (ops0, _, _) = GraftHttpFileSystem.snapshot
+          val g0 = gets.get
+          body
+          val (ops1, _, _) = GraftHttpFileSystem.snapshot
+          (ops1 - ops0, gets.get - g0)
+        }
+        assert(delta(footerRead()) == (2L, 2L), "first read: tail + footer")
+        assert(delta(footerRead()) == (0L, 0L), "second read hit the wire")
+        // the same name with another length is another object
+        Files.copy(Paths.get(sf0001, "orders.parquet"), obj,
+                   java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        assert(delta(footerRead()) == (2L, 2L), "new length served stale")
+      } finally server.stop(0)
+    }
+  }
+
   test("ghttp is read-only: writes are refused") {
     val server = serve(sf0001)
     try {

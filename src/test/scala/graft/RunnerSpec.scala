@@ -4,12 +4,18 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.runner.Main
 
@@ -74,6 +80,79 @@ class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   test("footer schema equals inference for a file, a directory and a glob") {
     for (p <- Seq(lineitem, laghos, s"$laghos/*.parquet"))
       assert(Main.scan(spark, p).schema == spark.read.parquet(p).schema, p)
+  }
+
+  /** Laghos-schema variants that must not share the Laghos template: an
+    * extra column, and `x` stored as FLOAT. */
+  private lazy val laghosVariants: Seq[String] =
+    withTempDir("graft_laghos_var_", suite = true) { dir =>
+      val base = spark.read.parquet(laghos)
+      base.withColumn("w", lit(1.0)).coalesce(1).write.parquet(s"$dir/extra")
+      base.withColumn("x", col("x").cast("float")).coalesce(1)
+        .write.parquet(s"$dir/float")
+      Seq(s"$dir/extra", s"$dir/float")
+    }
+
+  test("prepared: same-schema files plan once, each runs one job with no exchange") {
+    withTempDir("graft_prepared_") { dir =>
+      val paths = (1 to 3).map { i =>
+        val p = s"$dir/part-$i.parquet"
+        java.nio.file.Files.copy(java.nio.file.Paths.get(lineitem),
+                                 java.nio.file.Paths.get(p))
+        p
+      }
+      val prepared = new Main.Prepared(spark)
+      val done = new java.util.concurrent.ConcurrentLinkedQueue[
+        (String, QueryExecution)]()
+      val l = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          done.add((f, qe))
+        override def onFailure(f: String, qe: QueryExecution,
+                               e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try {
+        var hits = Seq.empty[Int]
+        val jobs = jobsDuring {
+          hits = paths.map(p => prepared.run(p)((_, rows) => rows.size))
+        }
+        assert(hits.head > 0 && hits.forall(_ == hits.head), hits)
+        assert(prepared.planned == 1, s"${prepared.planned} templates")
+        assert(jobs == 3, s"$jobs jobs for 3 files")
+        val execs = done.asScala.toSeq
+        assert(execs.size == 3, s"${execs.size} onSuccess calls for 3 files")
+        for (((f, qe), p) <- execs.zip(paths)) {
+          assert(f == "toLocalIterator")
+          // the file's execution analyzed, optimized and planned nothing
+          assert(qe.tracker.phases.isEmpty, qe.tracker.phases)
+          val plan = qe.executedPlan
+          assert(collect(plan) { case e: Exchange => e }.isEmpty, plan)
+          val scans = plan.collect { case s: FileSourceScanExec => s }
+          assert(scans.map(_.relation.location.rootPaths.map(_.getName)) ==
+            Seq(Seq(new Path(p).getName)), plan)
+        }
+        // each file ran its own copy of every operator
+        val nodes = execs.map(_._2.executedPlan.collect { case n => n })
+        for (Seq(a, b) <- nodes.combinations(2); x <- a)
+          assert(!b.exists(_ eq x), s"operator shared by two files: $x")
+      } finally spark.listenerManager.unregister(l)
+    }
+  }
+
+  test("prepared: rows equal the inferred-schema plan for a file, a directory and a glob") {
+    def key(r: Row) = r.toSeq.mkString("|")
+    val prepared = new Main.Prepared(spark)
+    for (p <- Seq(lineitem, laghos, s"$laghos/*.parquet") ++ laghosVariants) {
+      val got = prepared.run(p)((_, rows) => rows.toVector)
+      val want = Main.flagship(spark.read.parquet(p)).collect().toSeq
+      assert(got.nonEmpty, p)
+      assert(got.map(key).sorted == want.map(key).sorted, p)
+      val es = got.map(r => r.getDouble(4))
+      assert(es == es.sorted, s"$p: rows not in E order")
+    }
+    // lineitem, Laghos (its directory and glob share one) and the two
+    // variants
+    assert(prepared.planned == 4, s"${prepared.planned} templates")
   }
 
   /** Spawn the runner CLI as a child JVM with the given flags + stdin,
@@ -165,6 +244,58 @@ class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(out.toString.linesIterator.exists(_.startsWith("- FLAT DOUBLE: ")))
   }
 
+  /** Each `Chunk - [` block of a runner's stdout, sorted. */
+  private def chunks(out: String): Seq[String] =
+    out.split("(?=Chunk - \\[)").toSeq.filter(_.nonEmpty).sorted
+
+  test("-j 4 CLI batch over four schemas: every file's chunks equal a run of it alone") {
+    val sources = Seq(lineitem, laghos) ++ laghosVariants
+    def run(ss: Seq[String], j: Int): String = {
+      val (code, out, err) =
+        spawnRunner(Seq("-j", j.toString), ss.mkString("\n") + "\n")
+      assert(code == 0, s"exit=$code stderr:\n${err.takeRight(2000)}")
+      assert(!err.contains("error processing"), err.takeRight(2000))
+      out
+    }
+    val batch = chunks(run(sources, 4))
+    val solo = sources.flatMap(s => chunks(run(Seq(s), 1)))
+    assert(solo.size >= sources.size, solo)
+    assert(batch == solo.sorted,
+      "a file's chunks in the batch differ from its run alone")
+  }
+
+  test("local sources: the stat block counts read requests and the surviving column chunks") {
+    // the column chunks min/max statistics cannot exclude: what the
+    // flagship's scan must read at least
+    val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(
+      new Path(lineitem), spark.sessionState.newHadoopConf()), NO_FILTER)
+    val box = Map("l_quantity" -> (10.0, 20.0), "l_discount" -> (0.02, 0.08),
+                  "l_tax" -> (0.01, 0.07))
+    val used = box.keySet ++ Set("l_orderkey", "l_extendedprice")
+    val needed = footer.getBlocks.asScala.map { rg =>
+      val cols = rg.getColumns.asScala
+        .map(c => c.getPath.toDotString -> c).toMap
+      val survives = box.forall { case (name, (lo, hi)) =>
+        val st = cols(name).getStatistics
+        st.isEmpty || !st.hasNonNullValue ||
+          (st.genericGetMax.asInstanceOf[java.lang.Double] > lo &&
+           st.genericGetMin.asInstanceOf[java.lang.Double] < hi)
+      }
+      if (survives) used.toSeq.map(cols(_).getTotalSize).sum else 0L
+    }.sum
+    assert(needed > 0)
+    val (code, _, err) = spawnRunner(Seq("-j", "1"), s"$lineitem\n")
+    assert(code == 0, s"exit=$code stderr:\n${err.takeRight(2000)}")
+    def stat(prefix: String): Long = err.linesIterator
+      .find(_.startsWith(prefix)) match {
+        case Some(l) => l.stripPrefix(prefix).trim.toLong
+        case None => fail(s"no '$prefix' line in:\n$err")
+      }
+    assert(stat("Total read ops: ") > 0)
+    val bytes = stat("Total read bytes: ")
+    assert(bytes >= needed, s"read $bytes B, the surviving chunks are $needed B")
+  }
+
   test("full CLI end-to-end over the HTTP object profile: remote reads, GET-level op stats") {
     val server = TestHttpObjectServer.serve(sf0001)
     try {
@@ -224,13 +355,19 @@ class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val creds = ("TESTKEY", "TESTSECRET")
     val window = 4096L
     val props = Seq(s"-Dspark.hadoop.fs.ghttp.readahead.bytes=$window")
-    def run(n: Int): (Long, Long, Long) = {
+    // three copies, not one object thrice: a footer read of an object
+    // already read in this JVM is served from memory, and which of three
+    // concurrent scans of one object reads it first is up to timing
+    def run(n: Int): (Long, Long, Long) = withTempDir("graft_fanout_") { dir =>
+      for (i <- 1 to n)
+        java.nio.file.Files.copy(java.nio.file.Paths.get(lineitem),
+                                 java.nio.file.Paths.get(dir, s"copy-$i.parquet"))
       val wire = new java.util.concurrent.atomic.AtomicLong(0L)
-      val server = TestHttpObjectServer.serve(sf0001, auth = Some(creds),
+      val server = TestHttpObjectServer.serve(dir, auth = Some(creds),
         bytesServed = Some(wire))
       try {
         val base = s"ghttp://127.0.0.1:${server.getAddress.getPort}"
-        val src = (s"$base/lineitem.parquet\n") * n
+        val src = (1 to n).map(i => s"$base/copy-$i.parquet\n").mkString
         val (code, out, err) = spawnRunner(
           Seq("-i", creds._1, "-k", creds._2, "-j", n.toString), src, props)
         assert(code == 0, s"exit=$code stderr:\n${err.takeRight(2000)}")
