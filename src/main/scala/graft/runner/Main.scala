@@ -1,8 +1,8 @@
 package graft.runner
 
-import java.util.concurrent.Executors
+import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.atomic.AtomicInteger
 
-import scala.collection.concurrent.TrieMap
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.{Failure, Random, Success, Try}
@@ -12,17 +12,24 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.TaskContext
+import org.apache.spark.graftshim.PreparedJob
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
-  SQLExecution, SparkPlan}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters,
+  FileSourceOptions, InternalRow}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.{FileSourceScanExec,
+  PartitionedFileUtil, QueryExecution, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   ResultQueryStageExec}
-import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.{FileFormat,
+  FilePartition, InMemoryFileIndex, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.PreparedExecution
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
 import graft.io.Metrics
@@ -48,9 +55,10 @@ import graft.io.Metrics
   * Futures, and each file's query is ONE Spark job of ONE task with no
   * exchange ([[fileQuery]]) — the Spark form of one thread per file.
   * DuckDB prepares the fixed query cheaply; Spark's analysis,
-  * optimization and physical planning are not cheap, so [[Prepared]]
-  * plans the query once per footer schema and runs each file on a copy
-  * of that plan with only the scan's file index swapped.
+  * optimization, physical planning, code generation and closure
+  * cleaning are not cheap, so [[Prepared]] builds the query once per
+  * footer schema, down to one executed RDD chain, and runs each file as
+  * one job on that chain with the file's splits in a local property.
   * Parallelism comes from `-j` alone, as in the reference; a single file
   * with several splits scans them in that one task. S3 access goes
   * through s3a (path-style, plain http — reference runner.cc:205–217). At
@@ -208,66 +216,133 @@ object Main {
   private[graft] def fileQuery(spark: SparkSession, path: String): DataFrame =
     flagship(scan(spark, path).coalesce(1))
 
-  /** The per-file flagship planned once per footer schema — the Spark form
-    * of the prepared statement the reference's DuckDB runs per file.
+  /** The per-file flagship prepared once per footer schema, down to the
+    * RDD — the Spark form of the prepared statement the reference's
+    * DuckDB runs per file.
     *
-    * The first source of each schema builds a template: its [[fileQuery]]
-    * planned to the physical plan that would run (AQE's final plan; with
-    * no exchange there is nothing for AQE to re-plan). Every source, that
-    * first one included, then runs its own copy of the template's tree
-    * whose `FileSourceScanExec` reads a fresh `InMemoryFileIndex` over
-    * that source, so the copy's `SQLMetric`s and lazily built RDD are the
-    * file's own and the shared template never executes (safe at `-j` >
-    * 1). The copy runs as one SQL execution of one job, with the
-    * template's analyzed and optimized plans ([[PreparedExecution]]), so
-    * listeners see one execution per file as before.
+    * The first source of each schema builds a [[Template]]: its
+    * [[fileQuery]] planned to the physical plan that would run (AQE's
+    * final plan; with no exchange there is nothing for AQE to re-plan),
+    * one reader function from the scan's file format (one Hadoop conf
+    * broadcast), the plan's `FileSourceScanExec` replaced by a
+    * [[PreparedScanExec]] over one [[SplitsRDD]], and that plan executed
+    * once: one RDD chain, each stage's code generated and every closure
+    * cleaned once. A template is built by one thread; other sources of
+    * its schema wait for it, and a failed build is retried by the next.
+    *
+    * Each source then lists its own files (a fresh `InMemoryFileIndex`),
+    * cuts them into splits as the scan would, and runs one job of one
+    * task on the template's RDD ([[PreparedJob]]) whose local property
+    * [[PreparedScan.SplitsKey]] names those splits, under
+    * `SQLExecution.withNewExecutionId` with the template's plans
+    * ([[PreparedExecution]]), so listeners see one execution per file as
+    * before. Nothing per file is planned, copied, generated, cleaned or
+    * broadcast beyond the job's task binary. Sources run concurrently on
+    * the one chain (safe at `-j` > 1: each task deserializes its own
+    * copy, and each job's one-node RDD of its own keeps a failed file
+    * from aborting the jobs beside it).
     *
     * A template serves sources whose footer schema (with its metadata)
-    * and partition schema equal its own; any other source plans its own
-    * template. One Hadoop conf copy serves the whole run. */
+    * and partition schema equal its own; any other source builds its own
+    * template. One Hadoop conf copy serves the footer reads of the whole
+    * run. */
   private[graft] final class Prepared(spark: SparkSession) {
     private val conf = spark.sessionState.newHadoopConf()
     private val templates =
-      TrieMap[(StructType, StructType), (QueryExecution, SparkPlan)]()
+      new ConcurrentHashMap[(StructType, StructType), Slot]()
+    private val builds = new AtomicInteger
 
-    /** Templates planned so far. */
-    def planned: Int = templates.size
+    /** Templates built so far. */
+    def planned: Int = builds.get
 
-    private def template(path: String): (QueryExecution, SparkPlan) = {
-      val qe = fileQuery(spark, path).queryExecution
-      val plan = qe.executedPlan match {
+    /** Where a schema's template is built once. */
+    private final class Slot {
+      private var built: Template = _
+      def get(path: String): Template = synchronized {
+        if (built == null) {
+          built = new Template(path)
+          builds.incrementAndGet()
+        }
+        built
+      }
+    }
+
+    private final class Template(path: String) {
+      val qe: QueryExecution = fileQuery(spark, path).queryExecution
+      private val physical = qe.executedPlan match {
         case aqe: AdaptiveSparkPlanExec => aqe.finalPhysicalPlan match {
           case result: ResultQueryStageExec => result.plan
           case p => p
         }
         case p => p
       }
-      (qe, plan)
+      private val scan = physical.collectFirst {
+        case s: FileSourceScanExec => s }.get
+      private val relation = scan.relation
+      private val rows: RDD[InternalRow] = {
+        // the filters the scan pushes to the reader (a protected member,
+        // public in bytecode)
+        val pushed = classOf[FileSourceScanExec]
+          .getMethod("pushedDownFilters").invoke(scan)
+          .asInstanceOf[Seq[Filter]]
+        val readFile = relation.fileFormat.buildReaderWithPartitionValues(
+          relation.sparkSession, relation.dataSchema,
+          relation.partitionSchema, scan.requiredSchema, pushed,
+          relation.options + (FileFormat.OPTION_RETURNING_BATCH ->
+            scan.supportsColumnar.toString),
+          spark.sessionState.newHadoopConfWithOptions(relation.options))
+        new SplitsRDD(relation.sparkSession, readFile,
+          StructType(scan.requiredSchema ++ relation.partitionSchema),
+          scan.fileConstantMetadataColumns,
+          relation.fileFormat.fileConstantMetadataExtractors,
+          new FileSourceOptions(CaseInsensitiveMap(relation.options)))
+      }
+      val plan: SparkPlan = physical.transformUp {
+        case s: FileSourceScanExec if s eq scan => PreparedScanExec(s)(rows)
+      }
+      val rdd: RDD[InternalRow] = plan.execute()
+      val schema: StructType = qe.analyzed.schema
+      val toRow: Any => Any =
+        CatalystTypeConverters.createToScalaConverter(schema)
+
+      /** `index`'s files cut into splits as the template's scan cuts
+        * them, in the order the scan's one coalesced task reads them. */
+      def splits(index: InMemoryFileIndex): Array[PartitionedFile] = {
+        val dirs = index.listFiles(scan.partitionFilters, scan.dataFilters)
+        val maxSplitBytes = FilePartition.maxSplitBytes(spark, dirs)
+        val files = dirs.flatMap { dir =>
+          dir.files.flatMap { f =>
+            val p = f.getPath
+            PartitionedFileUtil.splitFiles(f, p,
+              relation.fileFormat.isSplitable(relation.sparkSession,
+                                              relation.options, p),
+              maxSplitBytes, dir.values)
+          }
+        }.sortBy(_.length)(Ordering[Long].reverse)
+        FilePartition.getFilePartitions(spark, files, maxSplitBytes)
+          .flatMap(_.files).toArray
+      }
     }
 
     /** Runs the flagship on `path`; `consume` gets the result schema and
-      * the rows, streamed, inside the file's SQL execution. */
+      * the rows inside the file's SQL execution. */
     def run[A](path: String)(consume: (StructType, Iterator[Row]) => A): A = {
       val (roots, schema) = footerSchema(spark, conf, path)
       val index = new InMemoryFileIndex(spark, roots, Map.empty, Some(schema))
-      val (qe, plan) = templates.getOrElseUpdate(
-        (schema, index.partitionSchema), template(path))
-      // clone: a fresh node for every operator, even where the swapped
-      // scan equals the template's (the same path listed twice)
-      val own = plan.clone().transformUp {
-        case s: FileSourceScanExec =>
-          s.copy(relation =
-            s.relation.copy(location = index)(s.relation.sparkSession))
-      }
-      val resultSchema = qe.analyzed.schema
-      val toRow = CatalystTypeConverters.createToScalaConverter(resultSchema)
-      SQLExecution.withNewExecutionId(new PreparedExecution(qe, own),
+      val t = templates.computeIfAbsent((schema, index.partitionSchema),
+                                        _ => new Slot).get(path)
+      val splits = PreparedScan.SplitsKey -> PreparedScan.encode(t.splits(index))
+      SQLExecution.withNewExecutionId(new PreparedExecution(t.qe, t.plan),
                                       Some("toLocalIterator")) {
-        consume(resultSchema,
-                own.executeToIterator().map(toRow(_).asInstanceOf[Row]))
+        val rows = PreparedJob.runOne(t.rdd, copies, splits)
+        consume(t.schema, rows.iterator.map(t.toRow(_).asInstanceOf[Row]))
       }
     }
   }
+
+  /** A task's rows, copied out of the reused row buffers. */
+  private val copies = (_: TaskContext, rows: Iterator[InternalRow]) =>
+    rows.map(_.copy()).toArray
 
   /** Run one file's query; streams result batches to stdout (A11) and
     * returns the hit count. */

@@ -40,12 +40,15 @@ object Shim {
 
 /** A QueryExecution around a physical plan that was planned once for an
   * earlier query of the same shape: analysis, optimization and physical
-  * planning are the template's, only the executed tree is this one's.
-  * Run under `SQLExecution.withNewExecutionId`, it posts one SQL
-  * execution whose listeners (`QueryExecutionListener.onSuccess`, the SQL
-  * status store) see `plan`, and it plans nothing itself — its
-  * `tracker` records no phase. `plan` must be the caller's own copy: its
-  * `SQLMetric`s and lazily built RDDs belong to this execution. */
+  * planning are the template's, and `plan` is the tree that runs. Run
+  * under `SQLExecution.withNewExecutionId`, it posts one SQL execution
+  * whose listeners (`QueryExecutionListener.onSuccess`, the SQL status
+  * store) see `plan`, and it plans nothing itself — its `tracker`
+  * records no phase. `plan`, its `SQLMetric`s and its RDDs may be shared
+  * by many executions, concurrent ones too: the status store attributes
+  * each task's metric updates to the execution of the task's stage, so
+  * each execution reports its own; the driver-side accumulators sum all
+  * of them. */
 final class PreparedExecution(template: QueryExecution, plan: SparkPlan)
     extends QueryExecution(template.sparkSession, template.logical) {
   override def analyzed = template.analyzed

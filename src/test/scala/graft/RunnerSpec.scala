@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
@@ -10,14 +12,14 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.runner.Main
+import graft.runner.{Main, PreparedScan}
 
 /** Runner-harness semantics without spawning the CLI: seeded shuffle
   * determinism (SURVEY.md §2.1 A17) and the Laghos-schema flagship shape. */
@@ -93,14 +95,34 @@ class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       Seq(s"$dir/extra", s"$dir/float")
     }
 
+  /** `n` copies of the sf0.001 lineitem in `dir`. */
+  private def lineitemCopies(dir: String, n: Int): Seq[String] =
+    (1 to n).map { i =>
+      val p = s"$dir/part-$i.parquet"
+      java.nio.file.Files.copy(java.nio.file.Paths.get(lineitem),
+                               java.nio.file.Paths.get(p))
+      p
+    }
+
+  /** The file names a prepared job's splits property names. */
+  private def splitNames(e: SparkListenerJobStart): Seq[String] =
+    Option(e.properties)
+      .flatMap(p => Option(p.getProperty(PreparedScan.SplitsKey))).toSeq
+      .flatMap(v => PreparedScan.decode(v).map(_.toPath.getName))
+
+  /** Runs `body` on `n` threads made here, so they carry the test's
+    * active session as the runner's pool threads carry the runner's. */
+  private def onThreads[T](n: Int)(body: Seq[() => T]): Seq[T] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      Await.result(Future.sequence(body.map(b => Future(b()))), 5.minutes)
+    } finally pool.shutdown()
+  }
+
   test("prepared: same-schema files plan once, each runs one job with no exchange") {
     withTempDir("graft_prepared_") { dir =>
-      val paths = (1 to 3).map { i =>
-        val p = s"$dir/part-$i.parquet"
-        java.nio.file.Files.copy(java.nio.file.Paths.get(lineitem),
-                                 java.nio.file.Paths.get(p))
-        p
-      }
+      val paths = lineitemCopies(dir, 3)
       val prepared = new Main.Prepared(spark)
       val done = new java.util.concurrent.ConcurrentLinkedQueue[
         (String, QueryExecution)]()
@@ -110,7 +132,14 @@ class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         override def onFailure(f: String, qe: QueryExecution,
                                e: Exception): Unit = ()
       }
+      val splits = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+      val sl = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          splits.add(splitNames(e))
+      }
       spark.listenerManager.register(l)
+      ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(sl)
       try {
         var hits = Seq.empty[Int]
         val jobs = jobsDuring {
@@ -119,23 +148,125 @@ class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         assert(hits.head > 0 && hits.forall(_ == hits.head), hits)
         assert(prepared.planned == 1, s"${prepared.planned} templates")
         assert(jobs == 3, s"$jobs jobs for 3 files")
+        // each file's job reads that file's one split, and only it
+        assert(splits.asScala.toSeq == paths.map(p => Seq(new Path(p).getName)),
+               splits)
         val execs = done.asScala.toSeq
         assert(execs.size == 3, s"${execs.size} onSuccess calls for 3 files")
-        for (((f, qe), p) <- execs.zip(paths)) {
+        for ((f, qe) <- execs) {
           assert(f == "toLocalIterator")
           // the file's execution analyzed, optimized and planned nothing
           assert(qe.tracker.phases.isEmpty, qe.tracker.phases)
           val plan = qe.executedPlan
           assert(collect(plan) { case e: Exchange => e }.isEmpty, plan)
-          val scans = plan.collect { case s: FileSourceScanExec => s }
-          assert(scans.map(_.relation.location.rootPaths.map(_.getName)) ==
-            Seq(Seq(new Path(p).getName)), plan)
         }
-        // each file ran its own copy of every operator
-        val nodes = execs.map(_._2.executedPlan.collect { case n => n })
-        for (Seq(a, b) <- nodes.combinations(2); x <- a)
-          assert(!b.exists(_ eq x), s"operator shared by two files: $x")
-      } finally spark.listenerManager.unregister(l)
+      } finally {
+        spark.listenerManager.unregister(l)
+        spark.sparkContext.removeSparkListener(sl)
+      }
+    }
+  }
+
+  test("prepared: at -j 2 every job carries its own file's splits, a path listed twice too") {
+    withTempDir("graft_prepared_j2_") { dir =>
+      // three files of one schema with different rows, one part file each
+      val files = (0 until 3).map { i =>
+        spark.read.parquet(lineitem).filter(col("l_orderkey") % 3 === i)
+          .coalesce(1).write.parquet(s"$dir/d$i")
+        new java.io.File(s"$dir/d$i").listFiles()
+          .filter(_.getName.endsWith(".parquet")).head.toString
+      }
+      def key(r: Row) = r.toSeq.mkString("|")
+      val solo = files.map(p =>
+        p -> Main.fileQuery(spark, p).collect().toSeq.map(key)).toMap
+      val prepared = new Main.Prepared(spark)
+      val byExec = new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+      val sl = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties.getProperty("spark.sql.execution.id"))
+            .foreach(id => byExec.put(id, splitNames(e)))
+      }
+      ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(sl)
+      try {
+        val runs = onThreads(2)((files :+ files.head).map { p => () =>
+          prepared.run(p) { (_, rows) =>
+            (p, spark.sparkContext.getLocalProperty("spark.sql.execution.id"),
+             rows.map(key).toVector)
+          }
+        })
+        ListenerBusDrain(spark.sparkContext)
+        assert(prepared.planned == 1, s"${prepared.planned} templates")
+        assert(runs.map(_._2).distinct.size == 4, runs.map(_._2))
+        for ((p, exec, rows) <- runs) {
+          assert(byExec.get(exec) == Seq(new Path(p).getName),
+                 s"execution $exec of $p read ${byExec.get(exec)}")
+          assert(rows.nonEmpty && rows == solo(p), p)
+        }
+      } finally spark.sparkContext.removeSparkListener(sl)
+    }
+  }
+
+  test("prepared: four concurrent runs of one schema build one template") {
+    withTempDir("graft_prepared_race_") { dir =>
+      val paths = lineitemCopies(dir, 4)
+      val prepared = new Main.Prepared(spark)
+      val start = new java.util.concurrent.CyclicBarrier(4)
+      val hits = onThreads(4)(paths.map { p => () =>
+        start.await()
+        prepared.run(p)((_, rows) => rows.size)
+      })
+      assert(hits.head > 0 && hits.forall(_ == hits.head), hits)
+      assert(prepared.planned == 1, s"${prepared.planned} template builds")
+    }
+  }
+
+  /** A copy of lineitem, footer intact, whose l_quantity column chunk
+    * starts with 64 bytes of 0xFF: it plans like lineitem and fails in
+    * the scan. */
+  private def damaged(dir: String): String = {
+    val p = s"$dir/damaged.parquet"
+    java.nio.file.Files.copy(java.nio.file.Paths.get(lineitem),
+                             java.nio.file.Paths.get(p))
+    val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(
+      new Path(p), spark.sessionState.newHadoopConf()), NO_FILTER)
+    val chunk = footer.getBlocks.get(0).getColumns.asScala
+      .find(_.getPath.toDotString == "l_quantity").get
+    val f = new java.io.RandomAccessFile(p, "rw")
+    try { f.seek(chunk.getStartingPos); f.write(Array.fill[Byte](64)(-1)) }
+    finally f.close()
+    p
+  }
+
+  test("prepared: a damaged column chunk fails its own file, not the shared template") {
+    withTempDir("graft_damaged_") { dir =>
+      val goods = lineitemCopies(dir, 5)
+      val bad = damaged(dir)
+      def key(r: Row) = r.toSeq.mkString("|")
+      val prepared = new Main.Prepared(spark)
+      def rows(p: String) = prepared.run(p)((_, it) => it.map(key).toVector)
+      val before = rows(goods.head)
+      assert(before.nonEmpty)
+      intercept[Exception](rows(bad))
+      // the template still serves the schema after the failure
+      assert(rows(goods(1)) == before)
+      assert(prepared.planned == 1, s"${prepared.planned} templates")
+
+      def run(ss: Seq[String], j: Int) = {
+        val (code, out, err) =
+          spawnRunner(Seq("-j", j.toString), ss.mkString("\n") + "\n")
+        assert(code == 0, s"exit=$code stderr:\n${err.takeRight(2000)}")
+        (out, err)
+      }
+      val (out, err) = run(goods.take(2) ++ Seq(bad) ++ goods.drop(2), 4)
+      val errors = err.linesIterator.filter(_.startsWith("error processing"))
+        .toSeq
+      assert(errors.size == 1 && errors.head.startsWith(s"error processing $bad"),
+             err.takeRight(2000))
+      val solo = chunks(run(Seq(goods.head), 1)._1)
+      assert(solo.nonEmpty)
+      assert(chunks(out) == Seq.fill(goods.size)(solo).flatten.sorted,
+             "a good file's chunks in the batch differ from its run alone")
     }
   }
 
