@@ -58,11 +58,6 @@ object Bench {
     // noop sink: executes every declared column (count() lets Catalyst
     // prune unreferenced projections, under-measuring projection-heavy
     // queries) without paying file-write I/O.
-    // Collect cross-query garbage (shuffle bookkeeping, freed page-cache
-    // buffers) outside the timed window: without it, each query pays the
-    // GC debt of whichever queries happened to run before it — measured
-    // ~0.2 s of drift on sub-second queries late in the alphabet.
-    val gcBetween = sys.env.getOrElse("SPARK_GRAFT_GC_BETWEEN", "1") == "1"
     // Streaming state-store telemetry (max state rows/bytes per stateful
     // query, harvested from the harness after each run) — the measured
     // backing for the inventory's "state is O(horizon)" claims.
@@ -86,7 +81,11 @@ object Bench {
     spark.sparkContext.addSparkListener(sched)
     def once(name: String,
              fn: (SparkSession, String) => DataFrame): Double = {
-      if (gcBetween) System.gc()
+      // Collect cross-query garbage (shuffle bookkeeping, freed page-cache
+      // buffers) outside the timed window: without it, each query pays the
+      // GC debt of whichever queries happened to run before it — measured
+      // ~0.2 s of drift on sub-second queries late in the alphabet.
+      System.gc()
       // ledger context: any memoized shared-frame build that fires inside
       // this run is attributed to this query in the artifact (MemoLog)
       MemoLog.setContext(name)
@@ -165,10 +164,8 @@ object Bench {
     // shared_builds fields, itemized per frame by the MemoLog ledger.
     // Skipped for SPARK_GRAFT_ONLY subsets (a subset run would prebuild
     // frames its queries never read — pure added cost).
-    val prebuild = only.isEmpty &&
-      sys.env.getOrElse("SPARK_GRAFT_PREBUILD", "1") == "1"
     def sharedBuilds(label: String): Double =
-      if (!prebuild) 0.0
+      if (only.nonEmpty) 0.0
       else {
         MemoLog.setContext(label)
         val t0 = System.nanoTime()

@@ -71,17 +71,15 @@ object SessionDefaults {
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
       .config("spark.ui.enabled", "false")
       // Engine extensions: date-interval theta joins rewrite to binned
-      // equi-joins (graft.plans.RangeJoinBinning, kill switch
-      // spark.graft.rangeJoinBin.enabled=false); global sorts over
+      // equi-joins (graft.plans.RangeJoinBinning); global sorts over
       // runtime-verified tiny AQE stages drop the range exchange +
-      // sampling job (graft.plans.TinySortSingularize, kill switch
-      // spark.graft.tinySort.enabled=false); aggregates over exact-size-
-      // tiny single-split scans fuse to one exchange-free stage
-      // (graft.plans.TinyAggSingularize, kill switch
-      // spark.graft.tinyAgg.enabled=false).
+      // sampling job (graft.plans.TinySortSingularize); aggregates over
+      // exact-size-tiny single-split scans fuse to one exchange-free
+      // stage (graft.plans.TinyAggSingularize). All three leave the plan
+      // unchanged under spark.graft.plain=true (graft.Plain).
       .withExtensions { e =>
         e.injectOptimizerRule(_ => graft.plans.RangeJoinBinning)
-        e.injectOptimizerRule(_ => graft.plans.TinyAggSingularize)
+        e.injectOptimizerRule(_ => graft.plans.TinyAggSingularize())
         e.injectRuntimeOptimizerRule(_ =>
           graft.plans.TinySortSingularize)
       }

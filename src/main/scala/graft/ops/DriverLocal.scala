@@ -19,10 +19,10 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
   * Each site passes an estimate of its driver working set (rows × bytes
   * per row: the collected primitive payload, plus the driver structures
   * the site builds per row where it counts them) and [[admit]] decides
-  * against one bound under one key, `spark.graft.local.maxBytes`:
-  * unset, the driver heap / 8 (384 MiB at a 3 g heap), and never above
-  * `spark.driver.maxResultSize`; `0` forces every site onto its
-  * distributed path. No estimate (an unreadable input) fails closed
+  * against one bound: the driver heap / 8 (384 MiB at a 3 g heap), and
+  * never above `spark.driver.maxResultSize`. [[graft.Plain]]
+  * (`spark.graft.plain=true`) forces every site onto its distributed
+  * path. No estimate (an unreadable input) fails closed
   * to the distributed path. Estimates read metadata, never data:
   * parquet footer counts ([[footerBytes]]; on-disk bytes say nothing
   * about a projected, decompressed collect) or a materialized
@@ -32,28 +32,20 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
   * executed plan's internal rows ([[collectLongs]],
   * [[collectVectors]]) and runs its loop on the driver. */
 object DriverLocal {
-  val MaxBytesKey = "spark.graft.local.maxBytes"
-
-  /** The driver-local bound in bytes (see the object scaladoc). */
-  private def maxBytes(s: SparkSession): Long =
-    bound(s.conf.getOption(MaxBytesKey).map(_.trim.toLong),
-      Runtime.getRuntime.maxMemory,
-      s.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize",
-        "1g"))
-
-  /** `setting`, else `heap` / 8, and never above a positive
-    * `maxResultSize`: a collect whose results pass it aborts. */
-  private[ops] def bound(setting: Option[Long], heap: Long,
-                         maxResultSize: Long): Long = {
-    val b = setting.getOrElse(heap / 8)
-    if (maxResultSize > 0) math.min(b, maxResultSize) else b
-  }
+  /** `heap` / 8, and never above a positive `maxResultSize`: a collect
+    * whose results pass it aborts. */
+  private[ops] def bound(heap: Long, maxResultSize: Long): Long =
+    if (maxResultSize > 0) math.min(heap / 8, maxResultSize) else heap / 8
 
   /** The gate: true when `site` may run on the driver. Emits one
-    * decision line per call, the same format for every site. */
+    * decision line per call, the same format for every site; under
+    * [[graft.Plain]] the bound reads 0. */
   def admit(s: SparkSession, site: String, estimate: Option[Long])
       : Boolean = {
-    val limit = maxBytes(s)
+    val limit = if (graft.Plain(s)) 0L
+      else bound(Runtime.getRuntime.maxMemory,
+        s.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize",
+          "1g"))
     val local = limit > 0 && estimate.exists(_ <= limit)
     System.err.println(s"[local] $site: estimate=" +
       estimate.fold("none")(e => s"$e B") + s" bound=$limit B -> " +
@@ -131,7 +123,7 @@ object DriverLocal {
   }
 
   private def nullValue(): Nothing = throw new IllegalArgumentException(
-    s"driver-local collect: null value; set $MaxBytesKey=0")
+    s"driver-local collect: null value; set ${graft.Plain.Key}=true")
 
   /** Every (long) column of `df`, row-major, in one array. */
   def collectLongs(df: DataFrame): Array[Long] = {

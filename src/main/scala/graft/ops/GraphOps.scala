@@ -55,15 +55,32 @@ object GraphOps {
     pr
   }
 
+  /** Driver bytes per collected lineitem row of [[pagerankLocal]] when
+    * every row is a distinct (part, supplier) pair of two new nodes
+    * (JDK 17, compressed oops):
+    *   - 16: the collected pair, two longs;
+    *   - 75: its `HashSet` entry: the `(Long, Long)` tuple (40), the
+    *     set's node (24) and a 4 B table slot at load ≥ 0.375 (≤ 11);
+    *   - 56: the edge arrays: `e0`'s ref (4), the swapped tuple (40)
+    *     and its ref (4), `edges`' two refs (8);
+    *   - 512: two nodes × the four `LongMap`s a round holds (outdeg,
+    *     pr, acc, the next pr) × 64 B: ≤ 4 slots of 12 B (long key +
+    *     ref, load ≥ 0.25) and a 16 B boxed value.
+    * Live heap measured after full GCs: 510 B/row over 1 M such rows,
+    * 145–163 B/row on the sf0.1 lineitem (600 k rows, 591 k distinct
+    * pairs, 21 k nodes). */
+  private[ops] val PagerankRowBytes = 16L + 75L + 56L + 2L * 4L * 64L
+
+  private[ops] def pagerankEstimate(s: org.apache.spark.sql.SparkSession,
+                                    d: String): Option[Long] =
+    DriverLocal.footerBytes(s, s"$d/lineitem.parquet", PagerankRowBytes)
+
   /** The driver-path gate, shared with [[prebuildShared]] so the
     * bench's shared-build step does not materialize a message base no
-    * query will read when the driver loop is active. The working set
-    * is the raw (part, supplier) pair list: lineitem footer rows × 16 B
-    * (see [[DriverLocal]]). */
+    * query will read when the driver loop is active. */
   private def pagerankLocalGate(s: org.apache.spark.sql.SparkSession,
                                 d: String): Boolean =
-    DriverLocal.admit(s, "pagerank",
-      DriverLocal.footerBytes(s, s"$d/lineitem.parquet", rowBytes = 16))
+    DriverLocal.admit(s, "pagerank", pagerankEstimate(s, d))
 
   /** Driver-side twin of [[pagerank]] over the same derived graph —
     * exact by construction: every operation is int64 micro-unit
@@ -189,8 +206,8 @@ object GraphOps {
       // (spark.sql.objectHashAggregate.sortBased.fallbackThreshold) —
       // i.e. at the 100× sweep's 15 M orders this aggregation runs
       // sort-based. MEASURED as the better shape, not an oversight:
-      // an in-JVM alternating A/B over the 100× fixture
-      // (tools/EdgeAggProbe) read 15.7 s warm for the default fallback
+      // an in-JVM alternating A/B over the 100× fixture (TESTDATA.md,
+      // retired probes) read 15.7 s warm for the default fallback
       // vs 25–32 s with the threshold raised to 16 M — millions of
       // tiny per-order array buffers in one object hash map are GC
       // poison, while the sort-based path streams sorted runs. Keep

@@ -911,7 +911,7 @@ object SimOps {
           if (sum == null) throw new ArithmeticException(
             s"driver-local Lloyd: every element at position $p of " +
             s"centroid $id casts to NULL DECIMAL(18,6); set " +
-            s"${DriverLocal.MaxBytesKey}=0 for the distributed plan")
+            s"${graft.Plain.Key}=true for the distributed plan")
           sum.doubleValue / n
         })
     }

@@ -545,7 +545,7 @@ object TextOps {
       // spread (SCALE_r21), while the sf0.1 fixture (0.6 MB, one
       // split) still needs it.
       spreadTable(s, d, "documents", col("doc_id"),
-                  siteMaxBytes = 32L << 20)
+                  maxBytes = 32L << 20)
         .select(col("doc_id"),
           size(bpeEncodedSymbols(col("text"), merges)).cast("long")
             .as("n_subwords"),

@@ -56,7 +56,7 @@ package object ops {
     * query's first exchange (projection, filters, string/JSON kernels,
     * the partial aggregate, the first join's shuffle write) serializes
     * on one core while the rest idle. Below the gate (input under
-    * spark.graft.spread.maxBytes, default 256 MiB; 0 disables) one
+    * `maxBytes`, 256 MiB unless the site caps it lower) one
     * HASH exchange of the PRUNED columns (Catalyst pushes column
     * pruning through RepartitionByExpression) on a caller-named
     * high-cardinality content key spreads that work across the cores;
@@ -72,24 +72,19 @@ package object ops {
     * Applied per query where the pre-exchange work measurably
     * dominates — NOT inside [[table]] — so light scans keep their
     * exchange-free plans (see graft.plans.TinyAggSingularize for the
-    * opposite trade on cheap aggregates). */
+    * opposite trade on cheap aggregates). Under [[graft.Plain]]
+    * (`spark.graft.plain=true`) every site is the bare [[table]] read. */
   def spreadTable(s: SparkSession, dir: String, name: String,
                   key: Column,
-                  // Per-site gate ceiling (round 22, VERDICT r21 #4/#6):
-                  // a site whose pre-exchange work stops dominating well
-                  // below the global 256 MiB gate (q_bpe_apply: the
-                  // encode is one pure codegen map, so a ~59 MB input
-                  // already scans multi-task-adjacent and the extra
-                  // exchange measured ~2× slower at the 100× sweep)
-                  // caps its own gate; the effective gate is
-                  // min(conf, site), so the conf kill switch (0) still
-                  // disables every site.
-                  siteMaxBytes: Long = Long.MaxValue): DataFrame = {
+                  // Per-site gate (round 22, VERDICT r21 #4/#6): a site
+                  // whose pre-exchange work stops dominating well below
+                  // 256 MiB (q_bpe_apply: the encode is one pure codegen
+                  // map, so a ~59 MB input already scans
+                  // multi-task-adjacent and the extra exchange measured
+                  // ~2× slower at the 100× sweep) passes a lower gate.
+                  maxBytes: Long = 256L << 20): DataFrame = {
     val df = table(s, dir, name)
-    val confB = s.conf.get("spark.graft.spread.maxBytes",
-      String.valueOf(256L << 20)).toLong
-    val maxB = math.min(confB, siteMaxBytes)
-    if (maxB > 0 && inputBytes(s"$dir/$name.parquet") <= maxB &&
+    if (!graft.Plain(s) && inputBytes(s"$dir/$name.parquet") <= maxBytes &&
         s.sparkContext.defaultParallelism > 1)
       // HASH repartition on a caller-named high-cardinality content
       // key — NOT round-robin: repartition(n) pays a full local sort

@@ -35,8 +35,8 @@ import org.apache.spark.sql.types.{DateType, IntegerType, LongType}
   * optimization batch).
   *
   * Registered through `SparkSessionExtensions.injectOptimizerRule` (see
-  * [[graft.SessionDefaults]]); disable per session with
-  * `spark.graft.rangeJoinBin.enabled=false`.
+  * [[graft.SessionDefaults]]); off under [[graft.Plain]]
+  * (`spark.graft.plain=true`).
   */
 object RangeJoinBinning extends Rule[LogicalPlan] {
 
@@ -72,8 +72,7 @@ object RangeJoinBinning extends Rule[LogicalPlan] {
     IntegralDivide(Cast(day, LongType), Literal(width))
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString("spark.graft.rangeJoinBin.enabled", "true")
-          .toBoolean) plan
+    if (graft.Plain(conf)) plan
     else plan.transform {
       // no guard on the case: matchRange walks the conjuncts once here
       // and non-matching joins fall through via the None branches below

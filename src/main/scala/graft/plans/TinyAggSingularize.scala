@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter,
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
-import org.apache.spark.sql.internal.SQLConf
 
 /** Optimizer rule: an aggregation whose input is a scan chain over a
   * provably tiny file relation is pinned to one partition
@@ -20,7 +19,7 @@ import org.apache.spark.sql.internal.SQLConf
   * already runs in a single task. The shuffle between partial and final
   * aggregation then buys zero parallelism and costs a full extra stage:
   * shuffle-file write + AQE stage boundary + task-wave scheduling
-  * (~0.1 s fixed on the bench host, measured by tools/TinyAggProbe).
+  * (~0.1 s fixed on the bench host; TESTDATA.md has the measurement).
   * This is the Spark analogue of the reference's single-threaded
   * per-file engine (reference runner.cc:200 — `maximum_threads = 1`):
   * one tiny file never merits a parallel plan.
@@ -29,7 +28,7 @@ import org.apache.spark.sql.internal.SQLConf
   * the guard is the relation's EXACT on-disk byte size (summed from the
   * file index — not a cardinality estimate), compared against a
   * threshold far below any input whose decode would benefit from fanning
-  * out (default 16 MiB ≈ one default scan-split budget). At 100 TB the
+  * out (`maxBytes`, 16 MiB ≈ one default scan-split budget). At 100 TB the
   * guard fails by seven orders of magnitude and the normal exchange
   * plan stands. The pattern also requires the aggregate to sit directly
   * on the scan chain (Project/Filter only — never a join/generate/union,
@@ -41,17 +40,10 @@ import org.apache.spark.sql.internal.SQLConf
   * safe: the inserted Repartition breaks the scan-chain pattern, so the
   * rule cannot re-fire on its own output.
   *
-  * Kill switch: spark.graft.tinyAgg.enabled=false.
-  * Threshold:   spark.graft.tinyAgg.maxBytes (default 16 MiB).
+  * Off under [[graft.Plain]] (`spark.graft.plain=true`).
   */
-object TinyAggSingularize extends Rule[LogicalPlan] {
-
-  private def enabled: Boolean = SQLConf.get
-    .getConfString("spark.graft.tinyAgg.enabled", "true").toBoolean
-
-  private def maxBytes: Long = SQLConf.get
-    .getConfString("spark.graft.tinyAgg.maxBytes", (16L << 20).toString)
-    .toLong
+case class TinyAggSingularize(maxBytes: Long = 16L << 20)
+    extends Rule[LogicalPlan] {
 
   /** True iff `p` is Project/Filter steps over a single file relation
     * whose exact total size is under the threshold. */
@@ -64,7 +56,7 @@ object TinyAggSingularize extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
+    if (graft.Plain(conf)) plan
     else plan.transformUp {
       case a @ Aggregate(_, _, child, _) if tinyScanChain(child) =>
         a.copy(child = Repartition(1, shuffle = false, child))

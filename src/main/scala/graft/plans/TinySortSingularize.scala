@@ -3,7 +3,6 @@ package graft.plans
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter,
   LogicalPlan, Project, Repartition, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.internal.SQLConf
 
 /** AQE runtime rewrite: a GLOBAL sort whose input is a materialized query
   * stage with runtime-exact tiny statistics is rewritten to
@@ -23,17 +22,12 @@ import org.apache.spark.sql.internal.SQLConf
   * sampled range sort stands. Estimated (pre-runtime) statistics never
   * trigger the rewrite.
   *
-  * Kill switch: spark.graft.tinySort.enabled=false.
-  * Threshold:   spark.graft.tinySort.maxBytes (default 4 MiB — far below
-  *              any input that benefits from a parallel sort).
+  * Threshold: 4 MiB, far below any input that benefits from a parallel
+  * sort. Off under [[graft.Plain]] (`spark.graft.plain=true`).
   */
 object TinySortSingularize extends Rule[LogicalPlan] {
 
-  private def enabled: Boolean = SQLConf.get
-    .getConfString("spark.graft.tinySort.enabled", "true").toBoolean
-
-  private def maxBytes: Long = SQLConf.get
-    .getConfString("spark.graft.tinySort.maxBytes", (4L << 20).toString).toLong
+  private val maxBytes = 4L << 20
 
   /** True iff the plan's size bound is runtime-exact and under the
     * threshold: the sort input must sit on a MATERIALIZED AQE stage whose
@@ -63,29 +57,16 @@ object TinySortSingularize extends Rule[LogicalPlan] {
       case _ => false
     })
 
-  private def debug: Boolean = SQLConf.get
-    .getConfString("spark.graft.tinySort.debug", "false").toBoolean
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
+    if (graft.Plain(conf)) plan
     else plan.transformUp {
-      case s @ Sort(order, true, child, hint) =>
-        if (materializedTiny(child)) {
-          if (debug) System.err.println(
-            s"[tinySort] rewriting global sort (input ~${child.stats.sizeInBytes} B)")
-          // shuffle = false (coalesce): the child is a materialized stage,
-          // so a narrow 1-partition merge reads its output directly in the
-          // sort's own task — no second shuffle write. When AQE has already
-          // coalesced the agg exchange to one partition this is a pure
-          // no-op and the local sort fuses into the final-agg stage.
-          Sort(order, global = false,
-            Repartition(1, shuffle = false, child), hint)
-        } else {
-          if (debug) System.err.println(
-            s"[tinySort] NOT rewriting: child=${child.getClass.getSimpleName} " +
-            s"stats=${child.stats.sizeInBytes} chain=" +
-            child.collect { case n => n.getClass.getSimpleName }.mkString(","))
-          s
-        }
+      // shuffle = false (coalesce): the child is a materialized stage,
+      // so a narrow 1-partition merge reads its output directly in the
+      // sort's own task — no second shuffle write. When AQE has already
+      // coalesced the agg exchange to one partition this is a pure
+      // no-op and the local sort fuses into the final-agg stage.
+      case Sort(order, true, child, hint) if materializedTiny(child) =>
+        Sort(order, global = false,
+          Repartition(1, shuffle = false, child), hint)
     }
 }

@@ -118,17 +118,19 @@ object StreamOps {
     * checkpoints to durable shared storage and sizes batches thousands of
     * times larger than this fixture. Use the ram-backed /dev/shm when
     * present so the bench measures the operators, not the local disk.
-    * Checkpoint contents are identical either way. Kill switch:
-    * spark.graft.stream.ramScratch=false (session conf). */
-  private def scratchRoot(s: SparkSession): Option[java.nio.file.Path] = {
-    val enabled = s.conf.getOption("spark.graft.stream.ramScratch")
-      .forall(_.toBoolean)
+    * Checkpoint contents are identical either way. */
+  private def scratchRoot: Option[java.nio.file.Path] = {
     val shm = java.nio.file.Paths.get("/dev/shm")
-    if (enabled && java.nio.file.Files.isWritable(shm)) Some(shm) else None
+    if (java.nio.file.Files.isWritable(shm)) Some(shm) else None
   }
 
-  private def mkScratchDir(s: SparkSession, prefix: String): java.nio.file.Path =
-    scratchRoot(s) match {
+  /** Staged replay size (copies × the raw fixture) from which a stream
+    * runs 16 shuffle partitions instead of 4, and corpus-keyed state
+    * moves to the RocksDB store (see runStreamN). */
+  private val BigStagedBytes = 64L << 20
+
+  private def mkScratchDir(prefix: String): java.nio.file.Path =
+    scratchRoot match {
       case Some(root) => java.nio.file.Files.createTempDirectory(root, prefix)
       case None => java.nio.file.Files.createTempDirectory(prefix)
     }
@@ -205,7 +207,7 @@ object StreamOps {
                            tsType: DataType): (java.nio.file.Path, Int) =
     stagedCache.getOrElseUpdate(
       (s, fixtureStamp(s"$d/$tableName.parquet"), copies, sentinelNs), {
-      val dir = mkScratchDir(s, "graft_stream_")
+      val dir = mkScratchDir("graft_stream_")
       dir.toFile.deleteOnExit()
       // driver fixtures are single parquet FILES; generated scale fixtures
       // (ScaleStress) are DIRECTORIES of part files. One logical ARRIVAL =
@@ -337,8 +339,6 @@ object StreamOps {
     def dirBytes(p: java.io.File): Long =
       if (p.isFile) p.length()
       else Option(p.listFiles()).map(_.map(dirBytes).sum).getOrElse(0L)
-    val rocksMin = s.conf.getOption("spark.graft.stream.rocksdbMinBytes")
-      .map(_.toLong).getOrElse(64L << 20)
     val stagedBytes = copies.toLong *
       dirBytes(new java.io.File(s"$d/$tableName.parquet"))
     // Run the micro-batches at a narrow shuffle width: every stateful
@@ -353,31 +353,20 @@ object StreamOps {
     // pushes ~10 M keys through 2–3 micro-batches, so per-batch store
     // setup amortizes over millions of rows and 4 partitions serialize
     // the hashing/compaction work on one-eighth of the cores — widen
-    // to 16 there (still conf-overridable).
-    // The width cutover has its OWN threshold conf (same 64 MiB default
-    // as the RocksDB gate, but independent): tuning rocksdbMinBytes for
-    // a provider A/B must not silently also change shuffle width, and
-    // the rocksdb=false kill switch must not pin the replay to 4
-    // partitions at 100×.
-    val wideMin = s.conf.getOption("spark.graft.stream.wideShuffleMinBytes")
-      .map(_.toLong).getOrElse(64L << 20)
+    // to 16 there. The cutover is the RocksDB gate's (BigStagedBytes).
+    val bigStaged = stagedBytes >= BigStagedBytes
     val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      s.conf.getOption("spark.graft.stream.shuffleWidth")
-        .getOrElse(if (stagedBytes >= wideMin) "16" else "4"))
+    s.conf.set("spark.sql.shuffle.partitions", if (bigStaged) "16" else "4")
     // No-data micro-batches exist to advance wall-clock-ish triggers and
     // flush watermark-gated state without new input. This harness never
     // needs them: every watermark advance is DRIVEN by a data batch (the
     // two staged sentinel arrivals), so the extra empty batch after each
     // real one — with its full round of per-partition state-store
     // open/commit and offset/commit-log writes — is pure overhead.
-    // Kill switch to restore Spark's default:
-    // spark.graft.stream.noDataBatches=true.
     val savedNoData =
       s.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
         .getOrElse("true")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      s.conf.getOption("spark.graft.stream.noDataBatches").getOrElse("false"))
+    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     // Checkpoint-file checksums OFF for the harness's throwaway scratch
     // checkpoints: each ChecksumCheckpointFileManager owns a thread pool
     // that outlives its query (the r16 single-JVM 175-query sweep wedged
@@ -386,12 +375,10 @@ object StreamOps {
     // fixture-sized micro-batches. Corruption detection on a RAM-backed
     // temp dir deleted minutes later protects nothing; a production
     // deployment checkpointing to durable shared storage keeps Spark's
-    // default. Kill switch: spark.graft.stream.checkpointChecksum=true.
+    // default.
     val savedCksum =
       s.conf.getOption("spark.sql.streaming.checkpoint.fileChecksum.enabled")
-    s.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-      s.conf.getOption("spark.graft.stream.checkpointChecksum")
-        .getOrElse("false"))
+    s.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
     // cleanup rides a finally: a failing transform/start/drain must not
     // leak the session conf override or the driver-resident memory-sink
     // view across repeated builds in a long-lived session (the staged
@@ -399,7 +386,7 @@ object StreamOps {
     // Explicit ram-backed checkpoint dir (see scratchRoot) — owned here,
     // removed in the finally below; Spark's auto temp checkpoints live
     // under java.io.tmpdir, which may be disk-backed.
-    val ckptDir = mkScratchDir(s, "graft_ckpt_")
+    val ckptDir = mkScratchDir("graft_ckpt_")
     // Queries whose keyed state is O(corpus keys) — not O(watermark
     // horizon or window count) — run on the RocksDB state store ONCE
     // THE CORPUS IS BIG ENOUGH: the default HDFS-backed provider keeps
@@ -412,21 +399,18 @@ object StreamOps {
     // and the COW map wins, so the switch is adaptive on the staged
     // source size (the corpus-size gate pattern: bloom sizing, knn
     // bucket width, dedup contraction). Results are identical (the
-    // provider is an execution detail); kill switch
-    // spark.graft.stream.rocksdb=false, threshold
-    // spark.graft.stream.rocksdbMinBytes (default 64 MiB of staged
-    // source ≈ 4 M events ≈ the point where COW snapshots reach GBs).
+    // provider is an execution detail); threshold BigStagedBytes
+    // (64 MiB of staged source ≈ 4 M events ≈ the point where COW
+    // snapshots reach GBs).
     val savedProvider =
       s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val useRocks = forceRocks || (bigState &&
-      s.conf.getOption("spark.graft.stream.rocksdb").forall(_.toBoolean) &&
-      stagedBytes >= rocksMin)
+    val useRocks = forceRocks || (bigState && bigStaged)
     // Log the rationale that actually drove the decision: printing the
     // size gate when forceRocks bypassed it misled bench-log readers
     // (ADVICE r19).
     if (useRocks) Console.err.println("[stream-state] rocksdb engaged " +
       (if (forceRocks) "(forced: transformWithState requires it)"
-       else s"(staged source $stagedBytes ≥ $rocksMin bytes)"))
+       else s"(staged source $stagedBytes ≥ $BigStagedBytes bytes)"))
     val savedChangelog = s.conf.getOption(
       "spark.sql.streaming.stateStore.rocksdb." +
       "changelogCheckpointing.enabled")
@@ -478,7 +462,7 @@ object StreamOps {
       // every complete-mode query here is an aggregate with a tiny
       // result, copied out and released below.
       val fileSinkDir =
-        if (mode == "append") Some(mkScratchDir(s, "graft_sink_out_"))
+        if (mode == "append") Some(mkScratchDir("graft_sink_out_"))
         else None
       // register the sink dir for cleanup IMMEDIATELY: a run that dies
       // in start()/processAllAvailable() may already have committed

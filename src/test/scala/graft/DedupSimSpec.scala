@@ -37,10 +37,8 @@ class DedupSimSpec extends SparkTestBase {
     // force the DISTRIBUTED fixpoint: this test certifies the at-scale
     // convergence bound, which the size-gated driver union-find would
     // otherwise short-circuit on a 20k-edge graph
-    spark.conf.set(ops.DriverLocal.MaxBytesKey, "0")
     val (labels, rounds) =
-      try ops.DedupOps.propagateMinLabels(sym, "chain", maxIter = 50)
-      finally spark.conf.unset(ops.DriverLocal.MaxBytesKey)
+      withPlain(ops.DedupOps.propagateMinLabels(sym, "chain", maxIter = 50))
     val wrong = labels.filter($"cluster" =!= 0L).count()
     sym.unpersist()
     assert(wrong == 0, s"$wrong vertices missed the component minimum")
@@ -62,11 +60,8 @@ class DedupSimSpec extends SparkTestBase {
       edges.select($"dst".as("src"), $"src".as("dst"))).persist()
     val (local, lr) = ops.DedupOps.propagateMinLabels(sym, "law")
     assert(lr == 0, "expected the local union-find path under the gate")
-    spark.conf.set(ops.DriverLocal.MaxBytesKey, "0")
-    val (dist, dr) =
-      try ops.DedupOps.propagateMinLabels(sym, "law")
-      finally spark.conf.unset(ops.DriverLocal.MaxBytesKey)
-    assert(dr > 0, "expected the distributed path when the gate is 0")
+    val (dist, dr) = withPlain(ops.DedupOps.propagateMinLabels(sym, "law"))
+    assert(dr > 0, "expected the distributed path under the plain switch")
     val a = local.orderBy("doc_id").as[(Long, Long)].collect().toSeq
     val b = dist.orderBy("doc_id").as[(Long, Long)].collect().toSeq
     sym.unpersist()
@@ -94,10 +89,8 @@ class DedupSimSpec extends SparkTestBase {
       .select(lit(0L).as("src"), $"id".as("dst"))
     val sym = edges.unionAll(edges.select($"dst".as("src"), $"src".as("dst")))
       .persist()
-    spark.conf.set(ops.DriverLocal.MaxBytesKey, "0")
     val (labels, rounds) =
-      try ops.DedupOps.propagateMinLabels(sym, "star", maxIter = 10)
-      finally spark.conf.unset(ops.DriverLocal.MaxBytesKey)
+      withPlain(ops.DedupOps.propagateMinLabels(sym, "star", maxIter = 10))
     val wrong = labels.filter($"cluster" =!= 0L).count()
     sym.unpersist()
     assert(wrong == 0, s"$wrong vertices missed the hub label")

@@ -10,11 +10,17 @@ import org.apache.spark.storage.StorageLevel
 class DriverLocalSpec extends graft.SparkTestBase {
   private val sf001 = new java.io.File(sf0001).getParent + "/sf0.01"
 
-  test("pagerank estimate = lineitem footer rows x 16 B") {
-    val path = s"$sf001/lineitem.parquet"
-    val rows = spark.read.parquet(path).count()
-    val est = DriverLocal.footerBytes(spark, path, rowBytes = 16)
-    assert(est.contains(rows * 16), s"estimate $est for $rows rows")
+  test("pagerank estimate = lineitem footer rows x 659 B") {
+    // per row: the pair, its HashSet entry, the edge arrays and two
+    // nodes in four LongMaps (GraphOps.PagerankRowBytes)
+    assert(GraphOps.PagerankRowBytes == 16 + 75 + 56 + 512)
+    val rows = spark.read.parquet(s"$sf001/lineitem.parquet").count()
+    val est = GraphOps.pagerankEstimate(spark, sf001)
+    assert(est.contains(rows * 659), s"estimate $est for $rows rows")
+    // sf0.1 stays on the driver under a 3 g heap
+    val sf01 = new java.io.File(sf0001).getParent + "/sf0.1"
+    val big = GraphOps.pagerankEstimate(spark, sf01)
+    assert(big.exists(_ <= DriverLocal.bound(3L << 30, 1L << 30)), big)
   }
 
   test("k-means estimate counts vec_ids and list elements from footers") {
@@ -29,14 +35,9 @@ class DriverLocalSpec extends graft.SparkTestBase {
   test("an unreadable input has no estimate and takes the distributed path") {
     val est = DriverLocal.footerBytes(spark, "/nonexistent/x.parquet", 16)
     assert(est.isEmpty)
-    spark.conf.set(DriverLocal.MaxBytesKey, Long.MaxValue.toString)
-    try {
-      assert(!DriverLocal.admit(spark, "probe", est))
-      assert(DriverLocal.admit(spark, "probe", Some(1L)))
-    } finally spark.conf.unset(DriverLocal.MaxBytesKey)
-    spark.conf.set(DriverLocal.MaxBytesKey, "0")
-    try assert(!DriverLocal.admit(spark, "probe", Some(0L)))
-    finally spark.conf.unset(DriverLocal.MaxBytesKey)
+    assert(!DriverLocal.admit(spark, "probe", est))
+    assert(DriverLocal.admit(spark, "probe", Some(1L)))
+    withPlain(assert(!DriverLocal.admit(spark, "probe", Some(0L))))
   }
 
   test("checkpoint estimate: deserialized in-memory blocks only, else none") {
@@ -59,11 +60,10 @@ class DriverLocalSpec extends graft.SparkTestBase {
 
   test("the bound follows spark.driver.maxResultSize below heap / 8") {
     val heap = 8L << 30
-    assert(DriverLocal.bound(None, heap, 0L) == heap / 8)
-    assert(DriverLocal.bound(None, heap, 64L << 20) == (64L << 20))
-    assert(DriverLocal.bound(Some(4L << 30), heap, 1L << 30) == (1L << 30))
-    assert(DriverLocal.bound(Some(0L), heap, 1L << 30) == 0L)
-    assert(DriverLocal.bound(Some(1000L), heap, 1L << 30) == 1000L)
+    assert(DriverLocal.bound(heap, 0L) == heap / 8)
+    assert(DriverLocal.bound(heap, 64L << 20) == (64L << 20))
+    assert(DriverLocal.bound(32L << 30, 1L << 30) == (1L << 30))
+    assert(DriverLocal.bound(8000L, 1L << 30) == 1000L)
   }
 
   test("collects refuse non-long columns and nulls instead of reading 0") {
@@ -74,7 +74,7 @@ class DriverLocalSpec extends graft.SparkTestBase {
       "CASE WHEN id = 3 THEN NULL ELSE id END AS a")
     val e = intercept[Exception](DriverLocal.collectLongs(nulls))
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(_.getMessage.contains(DriverLocal.MaxBytesKey)), e)
+      .exists(_.getMessage.contains(s"${graft.Plain.Key}=true")), e)
     assert(DriverLocal.collectLongs(spark.range(5).toDF("a")).toSeq ==
       (0L until 5L))
     val floats = spark.range(3).selectExpr("id", "array(1.0f, 2.0f) AS v")

@@ -35,14 +35,13 @@ class GraphOpsSpec extends SparkTestBase {
 
   test("pagerank law: driver path == distributed path on the fixture") {
     // The same dual-path pinning as the union-find and k-means law
-    // tests: local.maxBytes=0 forces the distributed message rounds,
+    // tests: spark.graft.plain forces the distributed message rounds,
     // the default gate takes the driver loop; integer micro-unit
     // arithmetic must make them equal map-for-map.
-    val dist = try {
-      spark.conf.set(ops.DriverLocal.MaxBytesKey, "0")
+    val dist = withPlain {
       ops.GraphOps.queries("q_graph_pagerank")(spark, sf0001)
         .as[(Long, Long)].collect().toMap
-    } finally spark.conf.unset(ops.DriverLocal.MaxBytesKey)
+    }
     val local = ops.GraphOps.queries("q_graph_pagerank")(spark, sf0001)
       .as[(Long, Long)].collect().toMap
     assert(local.size == dist.size, s"${local.size} vs ${dist.size} nodes")

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions.{col, size}
 
 /** Dual-path law for the size-gated driver-side Lloyd (round 22):
-  * under the spark.graft.local.maxBytes bound the k-means shared build
+  * under the driver-local bound the k-means shared build
   * collects the vectors and iterates on the driver; this spec pins the
   * local path to the distributed plan it replaces — cells (vec_id,
   * cid, dist) AND centroids (cid, c) must be BIT-identical (double ==,
@@ -13,14 +13,10 @@ import org.apache.spark.sql.functions.{col, size}
   * IVF probe ranking). Same pattern as the union-find law test
   * (DedupSimSpec). */
 class KmeansLawSpec extends graft.SparkTestBase {
-  private val MaxBytesKey = "spark.graft.local.maxBytes"
-
   private def cellsAndCents(d: String, forceDistributed: Boolean)
       : (Seq[(Long, Long, Double)], Seq[(Long, Seq[Double])]) = {
     SimOps.clearSimCaches()
-    if (forceDistributed)
-      spark.conf.set(MaxBytesKey, "0")
-    try {
+    def run = {
       val cells = SimOps.kmeansCells(spark, d)
         .orderBy("vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -28,11 +24,9 @@ class KmeansLawSpec extends graft.SparkTestBase {
         .orderBy("cid").collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
       (cells, cents)
-    } finally {
-      if (forceDistributed)
-        spark.conf.unset(MaxBytesKey)
-      SimOps.clearSimCaches()
     }
+    try if (forceDistributed) withPlain(run) else run
+    finally SimOps.clearSimCaches()
   }
 
   for (d <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {

@@ -37,13 +37,12 @@ class RangeJoinRuleSpec extends SparkTestBase {
 
   test("rewrite preserves the nested-loop result exactly") {
     val withRule = naiveRangeJoin().collect().toSeq
-    spark.conf.set("spark.graft.rangeJoinBin.enabled", "false")
-    try {
+    withPlain {
       val without = naiveRangeJoin()
       assert(!planOf(without).contains("__graft_bin"),
-        "kill switch did not disable the rule")
+        "plain switch did not disable the rule")
       assert(without.collect().toSeq == withRule)
-    } finally spark.conf.set("spark.graft.rangeJoinBin.enabled", "true")
+    }
   }
 
   test("equi-joins and outer range joins are left alone") {

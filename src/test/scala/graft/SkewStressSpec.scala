@@ -31,12 +31,11 @@ class SkewStressSpec extends SparkTestBase {
     // the fixture's 8 parquet files RLE-compress to ~3 KB each and would
     // pack into ONE scan split (and, with the tiny-agg fusing rule, one
     // exchange-free stage — nothing to measure); a 2 KB split bound keeps
-    // each file its own task and the fusing rules off restore the raw
-    // multi-stage shapes a real corpus has
+    // each file its own task and Spark's plain plans (the fusing rules
+    // off) restore the raw multi-stage shapes a real corpus has
     s.conf.set("spark.sql.files.maxPartitionBytes", "2048")
     s.conf.set("spark.sql.files.openCostInBytes", "0")
-    s.conf.set("spark.graft.tinyAgg.enabled", "false")
-    s.conf.set("spark.graft.tinySort.enabled", "false")
+    s.conf.set(Plain.Key, "true")
     s
   }
 

@@ -18,7 +18,7 @@ object SparkTestBase {
       .config("spark.ui.enabled", "false")
       .withExtensions { e =>
         e.injectOptimizerRule(_ => graft.plans.RangeJoinBinning)
-        e.injectOptimizerRule(_ => graft.plans.TinyAggSingularize)
+        e.injectOptimizerRule(_ => graft.plans.TinyAggSingularize())
         e.injectRuntimeOptimizerRule(_ =>
           graft.plans.TinySortSingularize)
       }
@@ -35,6 +35,12 @@ object SparkTestBase {
 abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.spark
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` with [[Plain]] set: Spark's plain plans throughout. */
+  protected def withPlain[T](body: => T): T = {
+    spark.conf.set(Plain.Key, "true")
+    try body finally spark.conf.unset(Plain.Key)
+  }
 
   private val suiteDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan,
+  Repartition}
 import org.apache.spark.sql.functions._
 
 /** plans.TinyAggSingularize: an aggregate over an exact-size-tiny file
@@ -27,33 +29,31 @@ class TinyAggSpec extends SparkTestBase {
 
   test("rewrite is bit-identical to the exchange plan") {
     val got = flagshipish.collect()
-    spark.conf.set("spark.graft.tinyAgg.enabled", "false")
-    try {
-      val expected = flagshipish.collect()
-      assert(got.toSeq == expected.toSeq)
-    } finally spark.conf.set("spark.graft.tinyAgg.enabled", "true")
+    val expected = withPlain(flagshipish.collect())
+    assert(got.toSeq == expected.toSeq)
   }
 
   test("kill switch restores the hash exchange") {
-    spark.conf.set("spark.graft.tinyAgg.enabled", "false")
-    try {
+    withPlain {
       val df = ops.table(spark, sf0001, "lineitem")
         .groupBy($"l_returnflag").agg(count(lit(1)).as("n"))
       df.collect()
       assert(df.queryExecution.executedPlan.toString
         .contains("Exchange hashpartitioning"))
-    } finally spark.conf.set("spark.graft.tinyAgg.enabled", "true")
+    }
   }
 
   test("does not fire above the size threshold") {
-    spark.conf.set("spark.graft.tinyAgg.maxBytes", "1")
-    try {
-      val df = ops.table(spark, sf0001, "lineitem")
-        .groupBy($"l_returnflag").agg(count(lit(1)).as("n"))
-      df.collect()
-      assert(df.queryExecution.executedPlan.toString
-        .contains("Exchange hashpartitioning"))
-    } finally spark.conf.unset("spark.graft.tinyAgg.maxBytes")
+    // the session's rule has the fixed 16 MiB bound; a 1-byte instance
+    // sees the same 117 KB scan as too big
+    val analyzed = ops.table(spark, sf0001, "lineitem")
+      .groupBy($"l_returnflag").agg(count(lit(1)).as("n"))
+      .queryExecution.analyzed
+    def repartitions(p: LogicalPlan) = p.collect { case r: Repartition => r }
+    assert(repartitions(plans.TinyAggSingularize(maxBytes = 1)(analyzed))
+      .isEmpty)
+    assert(repartitions(plans.TinyAggSingularize()(analyzed)) ==
+      Seq(Repartition(1, shuffle = false, analyzed.children.head)))
   }
 
   test("does not fire when the aggregate input is a join") {

@@ -8,20 +8,17 @@ import org.apache.spark.sql.functions._
 class TinySortSpec extends SparkTestBase {
   import spark.implicits._
 
-  // TinyAggSingularize would make these plans exchange-free before the
-  // sort rule ever runs — disable it so the suite exercises the
+  // A non-file source: TinyAggSingularize only fires over a file scan,
+  // so these aggregates keep their exchange and the suite exercises the
   // TinySortSingularize path specifically.
-  private def withoutTinyAgg[A](body: => A): A = {
-    spark.conf.set("spark.graft.tinyAgg.enabled", "false")
-    try body finally spark.conf.set("spark.graft.tinyAgg.enabled", "true")
-  }
+  private def aggSorted = spark.range(0, 6000, 1, 4)
+    .select(($"id" % 3).as("k"), ($"id" % 50).as("q"))
+    .groupBy($"k")
+    .agg(count(lit(1)).as("n"), sum($"q").as("q"))
+    .orderBy(desc("n"), asc("k"))
 
   test("tiny agg+sort loses its range exchange; output order unchanged") {
-    withoutTinyAgg {
-    val df = ops.table(spark, sf0001, "lineitem")
-      .groupBy($"l_returnflag")
-      .agg(count(lit(1)).as("n"), sum($"l_quantity").as("q"))
-      .orderBy(desc("n"), asc("l_returnflag"))
+    val df = aggSorted
     val rows = df.collect()
     // toString prints "== Final Plan ==" followed by "== Initial Plan ==";
     // only the final section reflects the adaptive rewrite.
@@ -29,29 +26,16 @@ class TinySortSpec extends SparkTestBase {
       .split("== Initial Plan ==").head
     assert(!finalPlan.contains("rangepartitioning"),
       s"tiny sort kept its range exchange:\n$finalPlan")
-    spark.conf.set("spark.graft.tinySort.enabled", "false")
-    try {
-      val expected = ops.table(spark, sf0001, "lineitem")
-        .groupBy($"l_returnflag")
-        .agg(count(lit(1)).as("n"), sum($"l_quantity").as("q"))
-        .orderBy(desc("n"), asc("l_returnflag")).collect()
-      assert(rows.toSeq == expected.toSeq)
-    } finally spark.conf.set("spark.graft.tinySort.enabled", "true")
-    }
+    val expected = withPlain(aggSorted.collect())
+    assert(rows.toSeq == expected.toSeq)
   }
 
   test("kill switch restores the range-partitioned global sort") {
-    withoutTinyAgg {
-    spark.conf.set("spark.graft.tinySort.enabled", "false")
-    try {
-      val df = ops.table(spark, sf0001, "lineitem")
-        .groupBy($"l_returnflag")
-        .agg(count(lit(1)).as("n"))
-        .orderBy(desc("n"), asc("l_returnflag"))
+    withPlain {
+      val df = aggSorted
       df.collect()
       assert(df.queryExecution.executedPlan.toString
         .contains("rangepartitioning"))
-    } finally spark.conf.set("spark.graft.tinySort.enabled", "true")
     }
   }
 }
