@@ -1,37 +1,31 @@
 package graft.io
 
-import java.util.concurrent.atomic.{AtomicLong, LongAdder}
+import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.executor.InputMetrics
 
 /** Run-level I/O accounting (SURVEY.md §2.1 A13–A15).
   *
   * The reference counts read ops and bytes by wrapping DuckDB's FileSystem
-  * (reference runner.cc:75–172); the Spark-idiomatic seam for the same
-  * observation on a cluster is a SparkListener over task input metrics.
-  * A per-HTTP-GET "read ops" count has no task-level Spark analog, so
-  * `readTasks` (scan tasks that actually read input) is reported as the
-  * documented approximation (SURVEY.md §3.3). In local mode the runner
-  * reports [[Metrics.monitored]] instead: the filesystems count their
-  * own requests and bytes.
+  * (reference runner.cc:75–172); the runner does the same with
+  * [[Metrics.monitored]]: the filesystems count their own requests and
+  * bytes. For a scheme that is not monitored, an instance sums the input
+  * metrics of the runner's runs, and `readTasks` (runs that actually read
+  * input) stands in for the per-request op count (SURVEY.md §3.3).
   */
-class Metrics extends SparkListener {
+final class Metrics {
   private val bytes = new LongAdder
-  private val records = new LongAdder
-  private val tasks = new AtomicLong
+  private val tasks = new LongAdder
 
-  override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
-    val in = taskEnd.taskMetrics.inputMetrics
+  /** Counts one run's input, if it read any. */
+  def add(in: InputMetrics): Unit =
     if (in.bytesRead > 0 || in.recordsRead > 0) {
       bytes.add(in.bytesRead)
-      records.add(in.recordsRead)
-      tasks.incrementAndGet()
+      tasks.increment()
     }
-  }
 
   def bytesRead: Long = bytes.sum
-  def recordsRead: Long = records.sum
-  def readTasks: Long = tasks.get
+  def readTasks: Long = tasks.sum
 }
 
 object Metrics {
@@ -43,11 +37,9 @@ object Metrics {
     * reference's per-read counter, runner.cc:86–94,109–117). The three
     * are disjoint.
     *
-    * The counters are JVM-global and monotonic, and in-JVM only — they
-    * see nothing from remote executors — so they are only meaningful in
-    * local mode and as a before/after delta around the measured window;
-    * the caller (runner/Main) gates on `sparkContext.isLocal` and
-    * snapshots around the run. */
+    * The counters are JVM-global and monotonic, so they are meaningful as
+    * a before/after delta around the measured window; the runner reads
+    * every file in its own JVM, so they see all of its reads. */
   def monitored(): (Long, Long) = {
     import scala.jdk.CollectionConverters._
     val s3 = org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics

@@ -1,7 +1,8 @@
 package graft.runner
 
-import java.util.concurrent.{ConcurrentHashMap, Executors}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.Properties
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue,
+  Executors}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -12,15 +13,15 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.TaskContext
-import org.apache.spark.graftshim.PreparedJob
+import org.apache.spark.{Partition, SparkEnv}
+import org.apache.spark.graftshim.InThread
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters,
   FileSourceOptions, InternalRow}
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.execution.{FileSourceScanExec,
-  PartitionedFileUtil, QueryExecution, SQLExecution, SparkPlan}
+  PartitionedFileUtil, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   ResultQueryStageExec}
 import org.apache.spark.sql.execution.datasources.{FileFormat,
@@ -28,7 +29,6 @@ import org.apache.spark.sql.execution.datasources.{FileFormat,
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.PreparedExecution
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
@@ -51,20 +51,18 @@ import graft.io.Metrics
   *
   * Architectural translation (not a port): the reference runs one fresh
   * DuckDB pinned to one thread per file on a pthread pool (runner.cc:
-  * 197–201); here one shared SparkSession serves j concurrent driver-side
-  * Futures, and each file's query is ONE Spark job of ONE task with no
-  * exchange ([[fileQuery]]) — the Spark form of one thread per file.
-  * DuckDB prepares the fixed query cheaply; Spark's analysis,
-  * optimization, physical planning, code generation and closure
-  * cleaning are not cheap, so [[Prepared]] builds the query once per
-  * footer schema, down to one executed RDD chain, and runs each file as
-  * one job on that chain with the file's splits in a local property.
-  * Parallelism comes from `-j` alone, as in the reference; a single file
-  * with several splits scans them in that one task. S3 access goes
-  * through s3a (path-style, plain http — reference runner.cc:205–217). At
-  * cluster scale the same binary handles thousands of files: each
-  * file-query is an independent one-task job, so executors stay
-  * saturated as long as ≥j files remain.
+  * 197–201); here one shared SparkSession serves a pool of j threads, and
+  * each file's query runs in one partition with no exchange
+  * ([[fileQuery]]) on the pool thread that picked the file up — the
+  * Spark form of one thread per file. DuckDB prepares the fixed query
+  * cheaply; Spark's analysis, optimization, physical planning, code
+  * generation and closure cleaning are not cheap, so [[Prepared]] builds
+  * the query once per footer schema, down to one executed RDD chain, and
+  * runs each file on that chain the way an executor runs a task, with no
+  * Spark job. Parallelism comes from `-j` alone, as in the reference; a
+  * single file with several splits scans them in that one run. S3 access
+  * goes through s3a (path-style, plain http — reference
+  * runner.cc:205–217).
   */
 object Main {
 
@@ -210,9 +208,9 @@ object Main {
       footerSchema(spark, spark.sessionState.newHadoopConf(), path)._2)
       .parquet(path)
 
-  /** One source's flagship as one Spark job of one task: `coalesce(1)`
-    * makes the scan report a single partition, so the partial/final
-    * aggregate and the sort plan with no exchange. */
+  /** One source's flagship in one partition: `coalesce(1)` makes the
+    * scan report a single partition, so the partial/final aggregate and
+    * the sort plan with no exchange. */
   private[graft] def fileQuery(spark: SparkSession, path: String): DataFrame =
     flagship(scan(spark, path).coalesce(1))
 
@@ -231,16 +229,15 @@ object Main {
     * its schema wait for it, and a failed build is retried by the next.
     *
     * Each source then lists its own files (a fresh `InMemoryFileIndex`),
-    * cuts them into splits as the scan would, and runs one job of one
-    * task on the template's RDD ([[PreparedJob]]) whose local property
-    * [[PreparedScan.SplitsKey]] names those splits, under
-    * `SQLExecution.withNewExecutionId` with the template's plans
-    * ([[PreparedExecution]]), so listeners see one execution per file as
-    * before. Nothing per file is planned, copied, generated, cleaned or
-    * broadcast beyond the job's task binary. Sources run concurrently on
-    * the one chain (safe at `-j` > 1: each task deserializes its own
-    * copy, and each job's one-node RDD of its own keeps a failed file
-    * from aborting the jobs beside it).
+    * cuts them into splits as the scan would, and runs the chain on the
+    * calling thread as an executor runs a task ([[InThread]]), with those
+    * splits set on the chain's [[SplitsRDD]] leaf: no Spark job, SQL
+    * execution, task binary or result serialization. Operators keep
+    * per-run state in their plan nodes, so concurrent runs never share a
+    * chain: each takes a copy from its template's free list, deserialized
+    * once from the chain serialized at the build, and returns it after a
+    * run that succeeded (a failed run's copy is dropped). Nothing per file
+    * is planned, copied, generated, cleaned or broadcast.
     *
     * A template serves sources whose footer schema (with its metadata)
     * and partition schema equal its own; any other source builds its own
@@ -250,25 +247,41 @@ object Main {
     private val conf = spark.sessionState.newHadoopConf()
     private val templates =
       new ConcurrentHashMap[(StructType, StructType), Slot]()
-    private val builds = new AtomicInteger
+    /** The input of every run, for a scheme `Metrics.monitored` misses. */
+    val metrics = new Metrics
+    private val inThread = {
+      // the session's SQL conf, as a SQL execution hands it to its tasks
+      val props = new Properties
+      for ((k, v) <- spark.sessionState.conf.getAllConfs
+           if k.startsWith("spark")) props.setProperty(k, v)
+      new InThread(props, m => metrics.add(m.inputMetrics))
+    }
+
+    /** The physical plans of the templates built so far. */
+    def plans: Seq[SparkPlan] = {
+      import scala.jdk.CollectionConverters._
+      templates.values.asScala.toSeq.flatMap(_.plan)
+    }
 
     /** Templates built so far. */
-    def planned: Int = builds.get
+    def planned: Int = plans.size
 
     /** Where a schema's template is built once. */
     private final class Slot {
-      private var built: Template = _
+      @volatile private var built: Template = _
       def get(path: String): Template = synchronized {
-        if (built == null) {
-          built = new Template(path)
-          builds.incrementAndGet()
-        }
+        if (built == null) built = new Template(path)
         built
       }
+      def plan: Option[SparkPlan] = Option(built).map(_.plan)
     }
 
+    /** A run's own copy of a template's chain: the RDD, its one
+      * partition and its leaf. */
+    private type Copy = (RDD[InternalRow], Partition, SplitsRDD)
+
     private final class Template(path: String) {
-      val qe: QueryExecution = fileQuery(spark, path).queryExecution
+      private val qe: QueryExecution = fileQuery(spark, path).queryExecution
       private val physical = qe.executedPlan match {
         case aqe: AdaptiveSparkPlanExec => aqe.finalPhysicalPlan match {
           case result: ResultQueryStageExec => result.plan
@@ -279,7 +292,7 @@ object Main {
       private val scan = physical.collectFirst {
         case s: FileSourceScanExec => s }.get
       private val relation = scan.relation
-      private val rows: RDD[InternalRow] = {
+      private val leaf: SplitsRDD = {
         // the filters the scan pushes to the reader (a protected member,
         // public in bytecode)
         val pushed = classOf[FileSourceScanExec]
@@ -298,12 +311,38 @@ object Main {
           new FileSourceOptions(CaseInsensitiveMap(relation.options)))
       }
       val plan: SparkPlan = physical.transformUp {
-        case s: FileSourceScanExec if s eq scan => PreparedScanExec(s)(rows)
+        case s: FileSourceScanExec if s eq scan => PreparedScanExec(s)(leaf)
       }
-      val rdd: RDD[InternalRow] = plan.execute()
+      /** The executed chain, serialized once with its partition and leaf
+        * after its partitions and dependencies are materialized (an RDD
+        * ships neither until they are). */
+      private val image = {
+        val rdd = plan.execute()
+        def materialize(r: RDD[_]): Unit = {
+          r.partitions
+          r.dependencies.foreach(d => materialize(d.rdd))
+        }
+        materialize(rdd)
+        SparkEnv.get.closureSerializer.newInstance()
+          .serialize((rdd, rdd.partitions(0), leaf))
+      }
+      private val free = new ConcurrentLinkedQueue[Copy]()
       val schema: StructType = qe.analyzed.schema
       val toRow: Any => Any =
         CatalystTypeConverters.createToScalaConverter(schema)
+
+      /** Runs the chain over `files` on a copy no other run holds. */
+      def run[A](files: Array[PartitionedFile])(
+          func: Iterator[InternalRow] => A): A = {
+        val copy = Option(free.poll()).getOrElse(SparkEnv.get
+          .closureSerializer.newInstance().deserialize[Copy](image.duplicate()))
+        val (rdd, split, copyLeaf) = copy
+        copyLeaf.files = files
+        val out = inThread.run(rdd, split)(func)
+        // only now: a failed run may leave its operators' state anywhere
+        free.add(copy)
+        out
+      }
 
       /** `index`'s files cut into splits as the template's scan cuts
         * them, in the order the scan's one coalesced task reads them. */
@@ -325,24 +364,17 @@ object Main {
     }
 
     /** Runs the flagship on `path`; `consume` gets the result schema and
-      * the rows inside the file's SQL execution. */
+      * the rows inside the file's run, on the calling thread. */
     def run[A](path: String)(consume: (StructType, Iterator[Row]) => A): A = {
       val (roots, schema) = footerSchema(spark, conf, path)
       val index = new InMemoryFileIndex(spark, roots, Map.empty, Some(schema))
       val t = templates.computeIfAbsent((schema, index.partitionSchema),
                                         _ => new Slot).get(path)
-      val splits = PreparedScan.SplitsKey -> PreparedScan.encode(t.splits(index))
-      SQLExecution.withNewExecutionId(new PreparedExecution(t.qe, t.plan),
-                                      Some("toLocalIterator")) {
-        val rows = PreparedJob.runOne(t.rdd, copies, splits)
-        consume(t.schema, rows.iterator.map(t.toRow(_).asInstanceOf[Row]))
+      t.run(t.splits(index)) { rows =>
+        consume(t.schema, rows.map(t.toRow(_).asInstanceOf[Row]))
       }
     }
   }
-
-  /** A task's rows, copied out of the reused row buffers. */
-  private val copies = (_: TaskContext, rows: Iterator[InternalRow]) =>
-    rows.map(_.copy()).toArray
 
   /** Run one file's query; streams result batches to stdout (A11) and
     * returns the hit count. */
@@ -416,8 +448,6 @@ object Main {
     builder.config("spark.hadoop.parquet.filter.dictionary.enabled", "false")
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val metrics = new Metrics
-    spark.sparkContext.addSparkListener(metrics)
     val prepared = new Prepared(spark)
 
     val pool = Executors.newFixedThreadPool(opts.threads)
@@ -441,13 +471,13 @@ object Main {
 
     // Read ops and bytes are the requests made and the bytes pulled, as
     // the monitored filesystems count them (exactly the reference's
-    // semantics, runner.cc:109–117). Those counters live in this JVM, so
-    // they hold only in local mode: on a cluster, or when no monitored
-    // filesystem read anything, the scan-task count and the task input
-    // bytes are the documented fallback (SURVEY.md §3.3).
+    // semantics, runner.cc:109–117); every file is read in this JVM. When
+    // no monitored filesystem read anything, the count of runs that read
+    // input and their input bytes are the documented fallback (SURVEY.md
+    // §3.3).
     val (opsAfter, bytesAfter) = Metrics.monitored()
-    val monitored =
-      spark.sparkContext.isLocal && opsAfter > opsBefore
+    val monitored = opsAfter > opsBefore
+    val metrics = prepared.metrics
     val bytes =
       if (monitored) bytesAfter - bytesBefore else metrics.bytesRead
     System.err.println(

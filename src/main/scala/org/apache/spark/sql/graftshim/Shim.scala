@@ -3,7 +3,6 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 
 /** Bridge to Spark 4's `private[sql]` Column↔Expression converters, so the
   * engine's native Catalyst expressions (graft.functions) can be exposed as
@@ -36,23 +35,4 @@ object Shim {
     * lifetime. */
   def unloadAllStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
-}
-
-/** A QueryExecution around a physical plan that was planned once for an
-  * earlier query of the same shape: analysis, optimization and physical
-  * planning are the template's, and `plan` is the tree that runs. Run
-  * under `SQLExecution.withNewExecutionId`, it posts one SQL execution
-  * whose listeners (`QueryExecutionListener.onSuccess`, the SQL status
-  * store) see `plan`, and it plans nothing itself — its `tracker`
-  * records no phase. `plan`, its `SQLMetric`s and its RDDs may be shared
-  * by many executions, concurrent ones too: the status store attributes
-  * each task's metric updates to the execution of the task's stage, so
-  * each execution reports its own; the driver-side accumulators sum all
-  * of them. */
-final class PreparedExecution(template: QueryExecution, plan: SparkPlan)
-    extends QueryExecution(template.sparkSession, template.logical) {
-  override def analyzed = template.analyzed
-  override def optimizedPlan = template.optimizedPlan
-  override def sparkPlan = plan
-  override def executedPlan = plan
 }

@@ -9,17 +9,15 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.ListenerBusDrain
+import org.apache.spark.{ExecutionMemory, ListenerBusDrain, TaskContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.runner.{Main, PreparedScan}
+import graft.runner.Main
 
 /** Runner-harness semantics without spawning the CLI: seeded shuffle
   * determinism (SURVEY.md §2.1 A17) and the Laghos-schema flagship shape. */
@@ -70,7 +68,6 @@ class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
 
     test(s"per-file query on $branch: rows equal the inferred-schema plan") {
-      def key(r: Row) = r.toSeq.mkString("|")
       val got = Main.fileQuery(spark, src()).collect().toSeq
       val want = Main.flagship(spark.read.parquet(src())).collect().toSeq
       assert(got.map(key).sorted == want.map(key).sorted)
@@ -104,106 +101,103 @@ class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       p
     }
 
-  /** The file names a prepared job's splits property names. */
-  private def splitNames(e: SparkListenerJobStart): Seq[String] =
-    Option(e.properties)
-      .flatMap(p => Option(p.getProperty(PreparedScan.SplitsKey))).toSeq
-      .flatMap(v => PreparedScan.decode(v).map(_.toPath.getName))
+  /** `n` files of lineitem's schema with different rows (the orders of
+    * one residue mod `n` each), one part file each. */
+  private def lineitemParts(dir: String, n: Int): Seq[String] =
+    (0 until n).map { i =>
+      spark.read.parquet(lineitem).filter(col("l_orderkey") % n === i)
+        .coalesce(1).write.parquet(s"$dir/d$i")
+      new java.io.File(s"$dir/d$i").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head.toString
+    }
 
-  /** Runs `body` on `n` threads made here, so they carry the test's
-    * active session as the runner's pool threads carry the runner's. */
-  private def onThreads[T](n: Int)(body: Seq[() => T]): Seq[T] = {
+  private def key(r: Row) = r.toSeq.mkString("|")
+
+  /** Each of `files`' flagship rows, from a plain Spark query of it. */
+  private def soloRows(files: Seq[String]): Map[String, Seq[String]] =
+    files.map(p => p -> Main.fileQuery(spark, p).collect().toSeq.map(key))
+      .toMap
+
+  /** Runs `body` on a pool of `n` threads made here, so they carry the
+    * test's active session as the runner's pool threads carry the
+    * runner's. */
+  private def withPool[T](n: Int)(body: ExecutionContext => T): T = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
-    try {
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      Await.result(Future.sequence(body.map(b => Future(b()))), 5.minutes)
-    } finally pool.shutdown()
+    try body(ExecutionContext.fromExecutor(pool))
+    finally pool.shutdown()
   }
 
-  test("prepared: same-schema files plan once, each runs one job with no exchange") {
+  /** `body`'s thunks run on a pool of `n` threads. */
+  private def onThreads[T](n: Int)(body: Seq[() => T]): Seq[T] =
+    withPool(n) { implicit ec =>
+      Await.result(Future.sequence(body.map(b => Future(b()))), 5.minutes)
+    }
+
+  test("prepared: same-schema files plan once and run with no Spark job") {
     withTempDir("graft_prepared_") { dir =>
-      val paths = lineitemCopies(dir, 3)
+      val paths = lineitemParts(dir, 3)
+      val sizes = paths.map(p => spark.read.parquet(p).count())
+      assert(sizes.distinct.size == 3, s"fixture files not told apart: $sizes")
       val prepared = new Main.Prepared(spark)
-      val done = new java.util.concurrent.ConcurrentLinkedQueue[
-        (String, QueryExecution)]()
-      val l = new QueryExecutionListener {
-        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-          done.add((f, qe))
-        override def onFailure(f: String, qe: QueryExecution,
-                               e: Exception): Unit = ()
+      var runs = Seq.empty[(TaskContext, Int)]
+      val jobs = jobsDuring {
+        runs = paths.map(p =>
+          prepared.run(p)((_, rows) => (TaskContext.get(), rows.size)))
       }
-      val splits = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
-      val sl = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          splits.add(splitNames(e))
-      }
-      spark.listenerManager.register(l)
-      ListenerBusDrain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(sl)
-      try {
-        var hits = Seq.empty[Int]
-        val jobs = jobsDuring {
-          hits = paths.map(p => prepared.run(p)((_, rows) => rows.size))
-        }
-        assert(hits.head > 0 && hits.forall(_ == hits.head), hits)
-        assert(prepared.planned == 1, s"${prepared.planned} templates")
-        assert(jobs == 3, s"$jobs jobs for 3 files")
-        // each file's job reads that file's one split, and only it
-        assert(splits.asScala.toSeq == paths.map(p => Seq(new Path(p).getName)),
-               splits)
-        val execs = done.asScala.toSeq
-        assert(execs.size == 3, s"${execs.size} onSuccess calls for 3 files")
-        for ((f, qe) <- execs) {
-          assert(f == "toLocalIterator")
-          // the file's execution analyzed, optimized and planned nothing
-          assert(qe.tracker.phases.isEmpty, qe.tracker.phases)
-          val plan = qe.executedPlan
-          assert(collect(plan) { case e: Exchange => e }.isEmpty, plan)
-        }
-      } finally {
-        spark.listenerManager.unregister(l)
-        spark.sparkContext.removeSparkListener(sl)
+      assert(runs.forall(_._2 > 0), runs.map(_._2))
+      assert(jobs == 0, s"$jobs jobs for 3 files")
+      assert(prepared.planned == 1, s"${prepared.planned} templates")
+      for (plan <- prepared.plans)
+        assert(collect(plan) { case e: Exchange => e }.isEmpty, plan)
+      // each run reads its own file, and only it: its input is that
+      // file's rows (one row group each, which min/max cannot exclude)
+      for (((ctx, _), rows) <- runs.zip(sizes)) {
+        val in = ctx.taskMetrics().inputMetrics
+        assert(in.recordsRead == rows && in.bytesRead > 0,
+               s"read ${in.recordsRead} rows for a $rows-row file")
       }
     }
   }
 
-  test("prepared: at -j 2 every job carries its own file's splits, a path listed twice too") {
+  test("prepared: at -j 2 every run returns its own file's rows, a path listed twice too") {
     withTempDir("graft_prepared_j2_") { dir =>
-      // three files of one schema with different rows, one part file each
-      val files = (0 until 3).map { i =>
-        spark.read.parquet(lineitem).filter(col("l_orderkey") % 3 === i)
-          .coalesce(1).write.parquet(s"$dir/d$i")
-        new java.io.File(s"$dir/d$i").listFiles()
-          .filter(_.getName.endsWith(".parquet")).head.toString
-      }
-      def key(r: Row) = r.toSeq.mkString("|")
-      val solo = files.map(p =>
-        p -> Main.fileQuery(spark, p).collect().toSeq.map(key)).toMap
+      val files = lineitemParts(dir, 3)
+      val solo = soloRows(files)
       val prepared = new Main.Prepared(spark)
-      val byExec = new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-      val sl = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          Option(e.properties.getProperty("spark.sql.execution.id"))
-            .foreach(id => byExec.put(id, splitNames(e)))
+      val runs = onThreads(2)((files :+ files.head).map { p => () =>
+        prepared.run(p)((_, rows) => (p, rows.map(key).toVector))
+      })
+      assert(prepared.planned == 1, s"${prepared.planned} templates")
+      assert(runs.map(_._1) == files :+ files.head)
+      for ((p, rows) <- runs)
+        assert(rows.nonEmpty && rows == solo(p), p)
+    }
+  }
+
+  test("prepared: -j 4 over 64 runs of four files: solo rows, no task context or memory left") {
+    withTempDir("graft_prepared_j4_") { dir =>
+      val files = lineitemParts(dir, 4)
+      val solo = soloRows(files)
+      assert(solo.values.toSet.size == 4, "fixture files not told apart")
+      val prepared = new Main.Prepared(spark)
+      val sources = (0 until 64).map(i => files(i % 4))
+      withPool(4) { implicit ec =>
+        val runs = Await.result(Future.sequence(sources.map(p => Future(
+          prepared.run(p)((_, rows) => (p, rows.map(key).toVector))))),
+          5.minutes)
+        assert(runs.map(_._1) == sources)
+        for ((p, rows) <- runs) assert(rows == solo(p), p)
+        // every pool thread checks its own context at once
+        val all = new java.util.concurrent.CyclicBarrier(4)
+        val left = Await.result(Future.sequence((1 to 4).map(_ => Future {
+          all.await(1, java.util.concurrent.TimeUnit.MINUTES)
+          Option(TaskContext.get())
+        })), 5.minutes)
+        assert(left.forall(_.isEmpty), left)
       }
-      ListenerBusDrain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(sl)
-      try {
-        val runs = onThreads(2)((files :+ files.head).map { p => () =>
-          prepared.run(p) { (_, rows) =>
-            (p, spark.sparkContext.getLocalProperty("spark.sql.execution.id"),
-             rows.map(key).toVector)
-          }
-        })
-        ListenerBusDrain(spark.sparkContext)
-        assert(prepared.planned == 1, s"${prepared.planned} templates")
-        assert(runs.map(_._2).distinct.size == 4, runs.map(_._2))
-        for ((p, exec, rows) <- runs) {
-          assert(byExec.get(exec) == Seq(new Path(p).getName),
-                 s"execution $exec of $p read ${byExec.get(exec)}")
-          assert(rows.nonEmpty && rows == solo(p), p)
-        }
-      } finally spark.sparkContext.removeSparkListener(sl)
+      assert(prepared.planned == 1, s"${prepared.planned} templates")
+      assert(ExecutionMemory.used(spark.sparkContext) == 0,
+             s"${ExecutionMemory.used(spark.sparkContext)} B held")
     }
   }
 
@@ -238,11 +232,28 @@ class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     p
   }
 
+  test("prepared: on a one-thread pool a damaged file fails and the next file returns its rows") {
+    withTempDir("graft_damaged_1t_") { dir =>
+      val goods = lineitemCopies(dir, 2)
+      val bad = damaged(dir)
+      val solo = soloRows(goods.take(1))(goods.head)
+      val prepared = new Main.Prepared(spark)
+      val runs = onThreads(1)(Seq(goods.head, bad, goods(1)).map { p => () =>
+        (Thread.currentThread,
+         scala.util.Try(prepared.run(p)((_, it) => it.map(key).toVector)))
+      })
+      assert(runs.map(_._1).distinct.size == 1)
+      assert(runs(0)._2.get == solo)
+      assert(runs(1)._2.isFailure, runs(1)._2)
+      assert(runs(2)._2.get == solo)
+      assert(prepared.planned == 1, s"${prepared.planned} templates")
+    }
+  }
+
   test("prepared: a damaged column chunk fails its own file, not the shared template") {
     withTempDir("graft_damaged_") { dir =>
       val goods = lineitemCopies(dir, 5)
       val bad = damaged(dir)
-      def key(r: Row) = r.toSeq.mkString("|")
       val prepared = new Main.Prepared(spark)
       def rows(p: String) = prepared.run(p)((_, it) => it.map(key).toVector)
       val before = rows(goods.head)
@@ -271,7 +282,6 @@ class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("prepared: rows equal the inferred-schema plan for a file, a directory and a glob") {
-    def key(r: Row) = r.toSeq.mkString("|")
     val prepared = new Main.Prepared(spark)
     for (p <- Seq(lineitem, laghos, s"$laghos/*.parquet") ++ laghosVariants) {
       val got = prepared.run(p)((_, rows) => rows.toVector)
@@ -395,15 +405,15 @@ class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       "a file's chunks in the batch differ from its run alone")
   }
 
-  test("local sources: the stat block counts read requests and the surviving column chunks") {
-    // the column chunks min/max statistics cannot exclude: what the
-    // flagship's scan must read at least
+  /** The bytes of lineitem's column chunks that min/max statistics
+    * cannot exclude: what the flagship's scan must read at least. */
+  private lazy val survivingChunks: Long = {
     val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(
       new Path(lineitem), spark.sessionState.newHadoopConf()), NO_FILTER)
     val box = Map("l_quantity" -> (10.0, 20.0), "l_discount" -> (0.02, 0.08),
                   "l_tax" -> (0.01, 0.07))
     val used = box.keySet ++ Set("l_orderkey", "l_extendedprice")
-    val needed = footer.getBlocks.asScala.map { rg =>
+    footer.getBlocks.asScala.map { rg =>
       val cols = rg.getColumns.asScala
         .map(c => c.getPath.toDotString -> c).toMap
       val survives = box.forall { case (name, (lo, hi)) =>
@@ -414,6 +424,10 @@ class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       }
       if (survives) used.toSeq.map(cols(_).getTotalSize).sum else 0L
     }.sum
+  }
+
+  test("local sources: the stat block counts read requests and the surviving column chunks") {
+    val needed = survivingChunks
     assert(needed > 0)
     val (code, _, err) = spawnRunner(Seq("-j", "1"), s"$lineitem\n")
     assert(code == 0, s"exit=$code stderr:\n${err.takeRight(2000)}")
@@ -425,6 +439,23 @@ class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(stat("Total read ops: ") > 0)
     val bytes = stat("Total read bytes: ")
     assert(bytes >= needed, s"read $bytes B, the surviving chunks are $needed B")
+  }
+
+  test("unmonitored file://: the fallback bytes are the runs' summed input metrics") {
+    withTempDir("graft_fallback_") { dir =>
+      val paths = lineitemCopies(dir, 3)
+      val prepared = new Main.Prepared(spark)
+      val contexts = paths.map(p => prepared.run(p)((_, rows) => {
+        rows.foreach(_ => ())
+        TaskContext.get()
+      }))
+      val inputs = contexts.map(_.taskMetrics().inputMetrics.bytesRead)
+      assert(prepared.metrics.bytesRead == inputs.sum, inputs)
+      assert(prepared.metrics.readTasks == 3)
+      assert(prepared.metrics.bytesRead >= 3 * survivingChunks,
+        s"read ${prepared.metrics.bytesRead} B, the surviving chunks are " +
+          s"3 x $survivingChunks B")
+    }
   }
 
   test("full CLI end-to-end over the HTTP object profile: remote reads, GET-level op stats") {

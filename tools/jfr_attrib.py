@@ -2,6 +2,7 @@
 """Attribute a JFR recording's CPU samples to thread groups and frames.
 
     python3 tools/jfr_attrib.py REC.jfr [--threads pool-] [--frame REGEX ...]
+    python3 tools/jfr_attrib.py REC.jfr --jit [--after S]
 
 Reads the recording with the JDK's `jfr` tool (on PATH). `jfr print`
 cuts every stack to 5 frames unless told otherwise, which hides every
@@ -18,9 +19,19 @@ caller; this script asks for 512, so record with
 
 Frames are matched as regular expressions, case-insensitively, against
 `package.Class.method` with `$` read as `.`.
+
+With --jit it prints instead the JIT compile time by package of the
+compiled method, over every `jdk.Compilation` event (both compilers, any
+duration), and with --after S only over the compilations that start S
+seconds or more after the recording's first one. JFR keeps only the
+compilations of >= 1 s by default (`settings=profile`: >= 100 ms), so
+record with `jdk.Compilation#threshold=0ms` inside
+`-XX:StartFlightRecording=...`, or the table holds a few dozen of the
+thousands of compilations.
 """
 import argparse
 import collections
+import datetime
 import json
 import re
 import subprocess
@@ -66,12 +77,50 @@ def seconds(iso):
     return h * 3600 + mi * 60 + s
 
 
-def slow_c2(path, floor=0.1):
+def instant(iso):
+    """An ISO-8601 timestamp in seconds since the epoch (nanoseconds cut
+    to the microseconds Python parses)."""
+    m = re.fullmatch(r"(.*T\d\d:\d\d:\d\d)(?:\.(\d+))?(.*)", iso)
+    zone = m.group(3).replace("Z", "+00:00") or "+00:00"
+    t = datetime.datetime.fromisoformat(m.group(1) + zone).timestamp()
+    return t + float("0." + (m.group(2) or "0"))
+
+
+def compilations(path):
+    """The values of every jdk.Compilation event in the recording."""
     events = json.loads(jfr("--json", "--events", "jdk.Compilation", path))
-    durations = [seconds(e["values"]["duration"])
-                 for e in events["recording"]["events"]
-                 if e["values"].get("compiler") == "c2"]
+    return [e["values"] for e in events["recording"]["events"]]
+
+
+def slow_c2(path, floor=0.1):
+    durations = [seconds(c["duration"]) for c in compilations(path)
+                 if c.get("compiler") == "c2"]
     return [d for d in durations if d >= floor]
+
+
+def jit_by_package(path, after=0.0, top=25):
+    """Print compile time and count by the compiled method's package."""
+    comps = compilations(path)
+    if not comps:
+        print("no jdk.Compilation events")
+        return
+    starts = [instant(c["startTime"]) for c in comps]
+    first = min(starts)
+    time = collections.Counter()
+    count = collections.Counter()
+    for c, t in zip(comps, starts):
+        if t - first < after:
+            continue
+        cls = ((c.get("method") or {}).get("type") or {}).get("name") or "?"
+        pkg = cls.rsplit("/", 1)[0].replace("/", ".") if "/" in cls else "?"
+        time[pkg] += seconds(c["duration"])
+        count[pkg] += 1
+    total = sum(time.values())
+    print(f"{sum(count.values())} compilations of {len(comps)} "
+          f"(from {after:g} s after the first), {total:.1f} s in total")
+    for pkg, t in time.most_common(top):
+        print(f"  {t:7.2f} s  {100.0 * t / total:5.1f} %  {count[pkg]:6d}  "
+              f"{pkg}")
 
 
 def main():
@@ -83,7 +132,15 @@ def main():
     ap.add_argument("--frame", action="append",
                     help="a frame to attribute (repeatable; default: "
                          + ", ".join(FRAMES) + ")")
+    ap.add_argument("--jit", action="store_true",
+                    help="print JIT compile time by package instead")
+    ap.add_argument("--after", type=float, default=0.0,
+                    help="with --jit: skip compilations that start less "
+                         "than this many seconds after the first one")
     args = ap.parse_args()
+    if args.jit:
+        jit_by_package(args.recording, args.after)
+        return
     named = {f: f for f in args.frame} if args.frame else FRAMES
     patterns = {n: re.compile(r, re.I) for n, r in named.items()}
     template = re.compile(FRAMES[TEMPLATE], re.I)
