@@ -24,8 +24,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionDefaults.builder(cpus).getOrCreate()
+    val spark = SessionDefaults.builder(SessionDefaults.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // harness-only per-query stream teardown (StreamOps runStreamN)
     spark.conf.set("spark.graft.stream.teardown", "true")
@@ -229,19 +228,12 @@ object Bench {
       // (called BEFORE each warm pass, not after: the last pass's frames
       // stay warm so the IO-gate retries below measure queries, not
       // shared-frame rebuilds; the post-everything release is explicit)
-      // Release every frame a pass persisted (dedup pair caches,
-      // per-query persist()s): carrying them into the next pass doubles
-      // cached storage in the bench heap and the resulting GC pressure
-      // distorts warm timings far more than the cache reuse helps them.
-      graft.ops.DedupOps.clearPairsCache()
-      graft.ops.GraphOps.clearMessageCache()
-      graft.ops.SimOps.clearSimCaches()
-      graft.ops.TextOps.clearBpeCache()
-      graft.ops.JoinOps.clearHotKeyCache()
-      // completed stream runs leave their file-sink output dirs in RAM-
-      // backed scratch (the results were consumed by once()'s noop write)
-      graft.streaming.StreamOps.clearStreamSinks()
-      spark.catalog.clearCache()
+      // Release every frame a pass persisted (session memos, per-query
+      // persist()s, completed stream runs' sink dirs): carrying them
+      // into the next pass doubles cached storage in the bench heap and
+      // the resulting GC pressure distorts warm timings far more than
+      // the cache reuse helps them.
+      SessionDefaults.release(spark)
     }
     // Warm passes: codegen/JIT/page-cache warm — the steady-state number a
     // long-lived cluster session sees. Per-query local[*] timings swing up

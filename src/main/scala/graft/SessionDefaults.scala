@@ -3,9 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One place owning the local-session tuning shared by the driver
-  * surfaces (Bench and Verify) — hand-syncing these configs across two
-  * builders already drifted once; a config added here is guaranteed to
-  * apply to both the measured plan and the oracle-checked plan. */
+  * surfaces (Bench, Verify and the tools) — hand-syncing these configs
+  * across builders already drifted once; a config added here is
+  * guaranteed to apply to both the measured plan and the oracle-checked
+  * plan. The same goes for the core count and the between-pass
+  * release. */
 object SessionDefaults {
 
   /** RAM-backed `spark.local.dir` for the harness JVMs (Bench, Verify,
@@ -41,6 +43,20 @@ object SessionDefaults {
       Some(dir.toString)
     } else None
   } catch { case _: Throwable => None }
+
+  /** The harnesses' core count: `SPARK_GRAFT_CPUS`, else every core of
+    * this host (a fixed count oversubscribes a smaller host). */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
+
+  /** Release everything a harness pass leaves behind: every session
+    * memo ([[MemoLog.release]]), completed stream runs' file-sink
+    * output dirs, and every frame a query persisted itself. */
+  def release(spark: SparkSession): Unit = {
+    MemoLog.release()
+    graft.streaming.StreamOps.clearStreamSinks()
+    spark.catalog.clearCache()
+  }
 
   def builder(cpus: String): SparkSession.Builder = {
     val base = baseBuilder(cpus)

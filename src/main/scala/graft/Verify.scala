@@ -8,8 +8,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionDefaults.builder(cpus).getOrCreate()
+    val spark = SessionDefaults.builder(SessionDefaults.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // harness-only per-query stream teardown (StreamOps runStreamN)
     spark.conf.set("spark.graft.stream.teardown", "true")

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.MemoLog
+
 /** Deduplication family for a training-data pipeline (north star,
   * BASELINE.json:6): exact, n-gram Jaccard, MinHash+LSH banding, SimHash,
   * and embedding-cosine near-dup.
@@ -59,37 +61,15 @@ object DedupOps {
     * Catalyst recomputes the explode+md5+distinct subtree three times (no
     * exchange reuse across different exchange types). ~1.2M rows × 16 B at
     * sf0.1; at 100 TB this is the materialize-once shuffle input.
-    * Memoized per (session, dir): both consumers in one Verify/Bench run
-    * share the cached frame instead of rebuilding the pipeline. The cache
-    * is a snapshot — if the files under `dir` are rewritten mid-session,
-    * call [[clearPairsCache]] (persisted frames are released there). */
-  private val pairsCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, String),
-                                            DataFrame]
-
-  private def memo(s: SparkSession, d: String, tag: String)
-                  (build: => DataFrame): DataFrame =
-    // every build is ledgered (tag, self seconds, triggering query) and
-    // persisted frames are materialized INSIDE the charged window — see
-    // graft.MemoLog for why (the r17 official-bench attribution gap)
-    pairsCache.getOrElseUpdate((s, d, tag),
-      graft.MemoLog.built(s"dedup.$tag")(build))
-
+    * Memoized per (session, dir) in [[graft.MemoLog]]: both consumers
+    * in one Verify/Bench run share the cached frame instead of
+    * rebuilding the pipeline. */
   private def jaccardPairs(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "jaccard")(buildJaccardPairs(s, d))
+    MemoLog.frame(s, d, "dedup.jaccard")(buildJaccardPairs(s, d))
 
-  /** Drop all memoized persisted frames and release their storage. */
-  def clearPairsCache(): Unit = {
-    pairsCache.values.foreach(df =>
-      try df.unpersist() catch { case _: Exception => () })
-    pairsCache.clear()
-    gateCache.clear()
-    cpRegistry.synchronized {
-      cpRegistry.foreach(r =>
-        try r.unpersist(blocking = false) catch { case _: Exception => () })
-      cpRegistry.clear()
-    }
-  }
+  /** [[graft.MemoLog.release]], under the name the benchmark harness
+    * calls. */
+  def clearPairsCache(): Unit = MemoLog.release()
 
   /** Build + materialize every memoized frame that MORE THAN ONE suite
     * query consumes, so a full-suite bench pass charges shared
@@ -134,9 +114,6 @@ object DedupOps {
     * quadratic-in-copies and quadratic-in-contents. */
   private[graft] val ContractionGate = 0.02
 
-  private val gateCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Boolean]
-
   /** true ⇒ run the content-contracted dedup spellings. Decided from a
     * measured one-row duplicate-content fraction off the persisted
     * [[rawDoc2Rep]] map — driver-side adaptivity in the AQE spirit
@@ -154,35 +131,22 @@ object DedupOps {
     * table, and embeddings are derived 1:1 from docs in any corpus
     * this engine stages (copy density transfers) — a mismatch would
     * cost only the plumbing tax, never correctness. Memoized per
-    * (session, dir); released by [[clearPairsCache]]. */
+    * (session, dir) and ledgered as `dedup.contract_gate`. */
   private def contracted(s: SparkSession, d: String): Boolean =
     sys.props.get("graft.dedup.contract") match {
       case Some("always") => true
       case Some("never")  => false
-      case _ => gateCache.getOrElseUpdate((s, d), {
+      case _ => MemoLog.value(s, d, "dedup.contract_gate") {
         val r = rawDoc2Rep(s, d)
           .agg(count(lit(1)).as("n"), countDistinct(col("rep")).as("nr"))
-          .head
+          .head()
         val frac = 1.0 - r.getLong(1).toDouble / math.max(r.getLong(0), 1L)
         val on = frac >= ContractionGate
         System.err.println(
           f"[dedup-gate] dup_frac=$frac%.4f contracted=$on")
         on
-      })
+      }
     }
-
-  /** Final-round fixpoint checkpoints, one per [[propagateMinLabels]]
-    * call. The returned labels frame reads from its final localCheckpoint
-    * RDD, so the loop cannot release it — but once the caller's action
-    * has run, the blocks are dead weight that would otherwise accumulate
-    * per invocation for the JVM lifetime (measured: one ~5k-row block
-    * leaked per cluster query per bench pass). Registered here and freed
-    * by [[clearPairsCache]]. NOTE a localCheckpoint's lineage is
-    * truncated — after release the old frame is NOT recomputable, which
-    * is safe because every release point (Bench between-pass hook,
-    * session teardown) also discards the frames. */
-  private val cpRegistry =
-    scala.collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]]()
 
   /** The shingle-set → verified-pairs pipeline shared by the uncapped
     * (jaccardPairs) and stop-shingle-capped variants: per-doc set sizes,
@@ -204,7 +168,7 @@ object DedupOps {
   }
 
   /** The CORPUS-WIDE distinct hashed-shingle set, memoized+persisted
-    * under its own tag (so clearPairsCache releases it) — the largest
+    * under its own tag (so the store's release frees it) — the largest
     * frame in this module. Two hashed-shingle frames exist (see also
     * [[repHashedShingles]], the rep-only twin): THIS one feeds the
     * DIRECT-path consumers — the uncapped pair join, the direct-path
@@ -222,7 +186,7 @@ object DedupOps {
     * approximation by construction, so collision noise there is already
     * inside the error budget). */
   private def hashedShingles(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "jaccard_sh") {
+    MemoLog.frame(s, d, "dedup.jaccard_sh") {
       shingleHashes(s, d)
         .distinct()
         .persist()
@@ -239,7 +203,7 @@ object DedupOps {
     * the pair-listing expansion, the contracted cluster/degree/eval
     * spellings all read it. */
   private def repJaccardPairs(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "rep_jaccard") {
+    MemoLog.frame(s, d, "dedup.rep_jaccard") {
       pairsFromShingleSets(repHashedShingles(s, d)).persist()
     }
 
@@ -249,7 +213,7 @@ object DedupOps {
     * never the corpus-wide explode. Shared by every contracted
     * expansion/labeling step. */
   private def shingledD2r(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "shingled_d2r") {
+    MemoLog.frame(s, d, "dedup.shingled_d2r") {
       rawDoc2Rep(s, d).select("doc_id", "rep")
         .join(repHashedShingles(s, d)
                 .select(col("doc_id").as("rep")).distinct(),
@@ -316,7 +280,7 @@ object DedupOps {
     * per pass; memoization keeps repeat invocations from stacking
     * duplicate persisted copies. */
   private def minhashPairs(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "minhash_pairs") {
+    MemoLog.frame(s, d, "dedup.minhash_pairs") {
       // Persist only on the direct path, where the (small, near-all-
       // distinct) listing is read by both q_dedup_minhash and the eval
       // audit. On the contracted path the listing is copy-quadratic,
@@ -380,7 +344,7 @@ object DedupOps {
     * ~60 s). Memoized + persisted: signature generation and the
     * rep-shingled-ness probe read it. */
   private def repHashedShingles(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "rep_sh") {
+    MemoLog.frame(s, d, "dedup.rep_sh") {
       val reps = rawDoc2Rep(s, d)
         .filter(col("doc_id") === col("rep")).select("doc_id")
       shingleHashesOf(s,
@@ -398,7 +362,7 @@ object DedupOps {
     * persisted — the sig aggregation + band explode run once per
     * session, not once per consumer. */
   private def repBands(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "rep_bands") {
+    MemoLog.frame(s, d, "dedup.rep_bands") {
       bandsFromHashedShingles(repHashedShingles(s, d)).persist()
     }
 
@@ -431,9 +395,9 @@ object DedupOps {
     * under copy density. Capped posting lists are ≤ T ≤ 50 long, so any
     * posting-list self-join over this frame has per-shingle fan-in
     * provably ≤ T² — the hot-shingle quadratic cannot occur. Memoized +
-    * persisted; released by [[clearPairsCache]]. */
+    * persisted. */
   private def cappedShingles(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "capped_sh") {
+    MemoLog.frame(s, d, "dedup.capped_sh") {
       val all = hashedShingles(s, d)
       val dfs = all
         .join(rawDoc2Rep(s, d).select("doc_id", "rep"), "doc_id")
@@ -447,7 +411,7 @@ object DedupOps {
     * rep frames: capped sets are pure functions of content bytes, so
     * byte-equal copies share the whole capped set. */
   private def cappedRepShingles(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "capped_rep_sh") {
+    MemoLog.frame(s, d, "dedup.capped_rep_sh") {
       val rsh = repHashedShingles(s, d)
       val dfs = rsh.groupBy("h").agg(count(lit(1)).as("df"))
       rsh.join(hotShingleSet(dfs), Seq("h"), "left_anti").persist()
@@ -464,7 +428,7 @@ object DedupOps {
     * Memoized + persisted: the full-listing expansion and both
     * clustering queries read it. */
   private def repBandPairsAll(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "rep_band_pairs_all") {
+    MemoLog.frame(s, d, "dedup.rep_band_pairs_all") {
       bandPairs(repBands(s, d)).persist()
     }
 
@@ -472,7 +436,7 @@ object DedupOps {
     * contracted clustering queries consume (a cheap filter over the
     * persisted [[repBandPairsAll]]). */
   private def repBandPairs(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "rep_band_pairs") {
+    MemoLog.frame(s, d, "dedup.rep_band_pairs") {
       repBandPairsAll(s, d).filter(col("n_bands") >= 2)
         .select(col("doc_a"), col("doc_b"))
     }
@@ -487,7 +451,7 @@ object DedupOps {
     * backed, so the second consumer (q_dedup_canonical) re-runs only the
     * cheap expansion joins, never a second CC fixpoint. */
   private def minhashDocClusters(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "minhash_doc_clusters") {
+    MemoLog.frame(s, d, "dedup.minhash_doc_clusters") {
       val docs = table(s, d, "documents").select(col("doc_id"))
       if (!contracted(s, d)) {
         // direct mode: minhashPairs IS the memoized+persisted corpus
@@ -532,9 +496,9 @@ object DedupOps {
     * uncontracted semantics keeps apart (locked by ContractionSpec's
     * case-variant corpus). Memoized + persisted — remap joins,
     * rep-restricted signal generation, the pair-listing expansions and
-    * final assembly all read it; clearPairsCache releases. */
+    * final assembly all read it. */
   private def rawDoc2Rep(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "raw_doc2rep") {
+    MemoLog.frame(s, d, "dedup.raw_doc2rep") {
       val keyed = table(s, d, "documents").select(col("doc_id"),
         md5(col("text").cast("binary")).as("rk"),
         md5(trim(lower(col("text"))).cast("binary")).as("nk"))
@@ -548,7 +512,7 @@ object DedupOps {
     * shrink nothing and its rep map + expansion joins are pure tax).
     * Memoized + persisted: both band self-join sides read it. */
   private def corpusBands(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "corpus_bands") {
+    MemoLog.frame(s, d, "dedup.corpus_bands") {
       bandsFromHashedShingles(hashedShingles(s, d)).persist()
     }
 
@@ -595,7 +559,7 @@ object DedupOps {
     * memoized + persisted (tiny — the verified pairs) so the two
     * consumers per bench pass share one run of the candidate join. */
   private def embedPairs(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "embed_pairs") {
+    MemoLog.frame(s, d, "dedup.embed_pairs") {
       // Persist only on the direct path (tiny verified pairs, read by
       // q_dedup_embed AND the multi-signal semantic edges). On the
       // contracted path the expanded listing is copy-quadratic with one
@@ -613,7 +577,7 @@ object DedupOps {
     * persisted (both pair expansions and the multi-signal star read
     * it). */
   private def vec2content(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "ms_vec2content") {
+    MemoLog.frame(s, d, "dedup.ms_vec2content") {
       val n = normedVecs(s, d)
       n.join(n.groupBy(col("v")).agg(min(col("vec_id")).as("vrep")),
              Seq("v"))
@@ -628,7 +592,7 @@ object DedupOps {
     * of shuffle before dying). Memoized + persisted: the q_dedup_embed
     * expansion and the multi-signal semantic edges share one run. */
   private def canonEmbedPairs(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "embed_canon_pairs") {
+    MemoLog.frame(s, d, "dedup.embed_canon_pairs") {
       val canon = normedVecs(s, d).join(
         vec2content(s, d).filter(col("vec_id") === col("vrep"))
           .select("vec_id"),
@@ -644,7 +608,7 @@ object DedupOps {
     * division). Tiny (≤ one row per content); memoized + persisted for
     * its two consumers. */
   private def selfCosContents(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "embed_self_cos") {
+    MemoLog.frame(s, d, "dedup.embed_self_cos") {
       import graft.functions.VectorFunctions.dot_product
       normedVecs(s, d).join(
           vec2content(s, d).filter(col("vec_id") === col("vrep"))
@@ -662,7 +626,7 @@ object DedupOps {
     * repeat invocations (bench warm pass, shared sessions) from stacking
     * duplicate persisted copies. */
   private def normedVecs(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "embed_normed") {
+    MemoLog.frame(s, d, "dedup.embed_normed") {
       import graft.functions.VectorFunctions.l2_norm
       // The test corpus is one small parquet file → a 1-partition scan;
       // everything downstream of a broadcast join inherits the probe
@@ -783,11 +747,11 @@ object DedupOps {
     * contributes its within-content copy pairs — all same-cell by
     * construction. */
   private def cellEmbedPairs(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "cell_embed_pairs") {
+    MemoLog.frame(s, d, "dedup.cell_embed_pairs") {
       val cells = graft.ops.SimOps.kmeansCells(s, d)
         .select(col("vec_id"), col("cid"))
       if (!contracted(s, d)) {
-        if (pairsCache.contains((s, d, "embed_pairs")))
+        if (MemoLog.has(s, d, "dedup.embed_pairs"))
           // The GLOBAL verified pair frame is already materialized this
           // session (q_dedup_embed / multi-signal ran first — the usual
           // full-suite order): its generation cost is sunk and the frame
@@ -1027,7 +991,7 @@ object DedupOps {
         .localCheckpoint(eager = false)
       val nChanged = next
         .agg(coalesce(sum(when(col("changed"), 1L).otherwise(0L)), lit(0L)))
-        .head.getLong(0)
+        .head().getLong(0)
       // Round materialized: the first round's cache-manager persist and
       // every later round's checkpoint blocks are now dead weight. The
       // final round's checkpoint stays persisted — the returned frame
@@ -1052,7 +1016,15 @@ object DedupOps {
           s"$maxIter rounds")
     symRdd.foreach(r => try r.unpersist(blocking = false)
                         catch { case _: Exception => () })
-    prevCp.foreach(r => cpRegistry.synchronized { cpRegistry += r })
+    // The returned labels frame reads from its final localCheckpoint
+    // RDD, so the loop cannot release it; once the caller's action has
+    // run its blocks are dead weight (measured: one ~5k-row block leaked
+    // per cluster query per bench pass), so the store holds it until its
+    // release. A localCheckpoint's lineage is truncated — after release
+    // the old frame is NOT recomputable, which is safe because every
+    // release point (Bench between-pass hook, session teardown) also
+    // discards the frames.
+    prevCp.foreach(MemoLog.hold)
     (labels, iter)
   }
 
@@ -1349,7 +1321,7 @@ object DedupOps {
     // inflate dup_frac with false positives.
     "q_dedup_chunk" -> ((s, d) => {
       val C = 16
-      val chunks = memo(s, d, "chunks16") {
+      val chunks = MemoLog.frame(s, d, "dedup.chunks16") {
         table(s, d, "documents")
           .repartition(s.sparkContext.defaultParallelism)
           .withColumn("tok", split(col("text"), " "))

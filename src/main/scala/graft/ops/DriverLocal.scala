@@ -152,7 +152,7 @@ object DriverLocal {
         appendLongs(r, nk, ks)
         if (r.isNullAt(nk)) nullValue()
         val a = r.getArray(nk)
-        if ((0 until a.numElements).exists(a.isNullAt)) nullValue()
+        if ((0 until a.numElements()).exists(a.isNullAt)) nullValue()
         vs += a.toDoubleArray()
       }
       (ks.result(), vs.result())

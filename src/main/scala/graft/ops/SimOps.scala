@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.MemoLog
+
 /** Similarity search over the embedding column (north star,
   * BASELINE.json:6).
   *
@@ -96,24 +98,6 @@ object SimOps {
       }: _*)).as("s"))
       .select(col("vec_id"), col("s.m").as("m"), col("s.sv").as("sv"))
 
-  /** argmin-encode `sub` against the broadcast codebook `cb`:
-    * (vec_id, m, cwid, sv) — squared-L2 argmin with (dist, cwid)
-    * tie-break via the per-key row_number window shared with the
-    * k-means argmin (a struct-min agg would plan as SortAggregate —
-    * struct buffers are not mutable — so the window IS the cheaper
-    * spelling: one (vec_id, m) shuffle with a ≤ K-row sort per key).
-    * Shared by the training iterations and the final index build. */
-  private def pqAssign(sub: DataFrame, cb: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id"), col("m"))
-      .orderBy(col("dist"), col("cwid"))
-    sub.join(broadcast(cb), Seq("m"))
-      .withColumn("dist", sqd(col("sv"), col("cw")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("m"), col("cwid"), col("sv"))
-  }
-
   /** (m, cwid, cw): the per-subspace PQ codebook, TRAINED with the
     * same deterministic unrolled Lloyd as q_cluster_kmeans (round 16;
     * the untrained first-K-subvectors codebook measured recall@10 8/10
@@ -126,8 +110,7 @@ object SimOps {
     * ≤ K·M rows; memoized + persisted (training, the encode pass and
     * the query lookup table all read it). */
   private def pqCodebook(s: SparkSession, d: String): DataFrame =
-    simCache.getOrElseUpdate((s, d, "pq_codebook"),
-      graft.MemoLog.built("sim.pq_codebook") {
+    MemoLog.frame(s, d, "sim.pq_codebook") {
       // The training sample is ≤ pqTrain·M rows — O(1) in corpus size
       // BY DESIGN (the classic 32–256×K codebook sizing), so the whole
       // Lloyd loop runs DRIVER-SIDE on one bounded collect: the former
@@ -165,7 +148,7 @@ object SimOps {
       rows
         .toDF("m", "cwid", "cw")
         .persist()
-    })
+    }
 
   /** (vec_id, m, cwid): every vector's PQ code — the argmin encode of
     * the full corpus against the trained codebook. This is the INDEX
@@ -191,8 +174,7 @@ object SimOps {
     * init would have emitted no code row at all. Bit-identical codes
     * on finite input, oracle-identical on non-finite. */
   private[ops] def pqCodes(s: SparkSession, d: String): DataFrame =
-    simCache.getOrElseUpdate((s, d, "pq_codes"),
-      graft.MemoLog.built("sim.pq_codes") {
+    MemoLog.frame(s, d, "sim.pq_codes") {
       val cbLocal: Map[Int, Seq[(Long, Seq[Double])]] =
         pqCodebook(s, d).collect()
           .map(r => (r.getInt(0), r.getLong(1),
@@ -207,7 +189,7 @@ object SimOps {
                       e.getField("_1").as("cwid")))))
         .select(col("vec_id"), col("m"), col("best.cwid").as("cwid"))
         .persist()
-    })
+    }
 
   /** (m, cwid, qd): the ADC lookup table — exact squared-L2 from each
     * of the query's subvectors to every codeword. K·M rows, broadcast
@@ -224,17 +206,16 @@ object SimOps {
     * shipped search WITHOUT re-running the corpus-sized ADC scan per
     * consumer (VERDICT r19 #2: the audit's 100× row paid the scan once
     * for q_sim_search_pq and again inside the audit — persisting the
-    * search frame for the audit's lifetime halves that row; released by
-    * [[clearSimCaches]] like every memoized sim frame). */
+    * search frame for the audit's lifetime halves that row; released
+    * with every other memo by [[graft.MemoLog.release]]). */
   private def pqSearch(s: SparkSession, d: String): DataFrame =
-    simCache.getOrElseUpdate((s, d, "pq_search"),
-      graft.MemoLog.built("sim.pq_search") {
+    MemoLog.frame(s, d, "sim.pq_search") {
       val short = pqCodes(s, d).filter(col("vec_id") =!= 0)
         .join(broadcast(pqQtab(s, d)), Seq("m", "cwid"))
         .groupBy(col("vec_id")).agg(dsum(col("qd")).as("adist"))
         .orderBy(col("adist"), col("vec_id")).limit(pqShortlist)
       pqRerank(s, d, short).persist()
-    })
+    }
 
   /** Probe-width ceiling: the widest nprobe any consumer evaluates
     * (the sensitivity sweep's {1, 2, 4}). The ranked candidate pool and
@@ -253,8 +234,7 @@ object SimOps {
     * body). The ≤ pqNprobeMax-row ranked probe rides a broadcast; the
     * window that ranks it runs on those ≤ 8 centroid rows only. */
   private def ivfCandRanked(s: SparkSession, d: String): DataFrame =
-    simCache.getOrElseUpdate((s, d, "ivf_cand_ranked"),
-      graft.MemoLog.built("sim.ivf_cand_ranked") {
+    MemoLog.frame(s, d, "sim.ivf_cand_ranked") {
       val q = table(s, d, "embeddings").filter(col("vec_id") === 0)
         .select(transform(col("embedding"), x => x.cast("double"))
           .as("qv")).limit(1)
@@ -283,7 +263,7 @@ object SimOps {
         .filter(col("vec_id") =!= 0)
         .select(col("vec_id"), col("cid"), col("crank"))
         .persist()
-    })
+    }
 
   /** The probed-cell candidate pool (vec_id, cid) at `nprobe` — a
     * crank filter over [[ivfCandRanked]] (row-identical to the former
@@ -307,23 +287,21 @@ object SimOps {
     * the vector's codes, never on the probe width, so a width's
     * shortlist is a crank filter + top-k over this frame). */
   private def adcScored(s: SparkSession, d: String): DataFrame =
-    simCache.getOrElseUpdate((s, d, "ivfpq_adc_scored"),
-      graft.MemoLog.built("sim.ivfpq_adc_scored") {
+    MemoLog.frame(s, d, "sim.ivfpq_adc_scored") {
       pqCodes(s, d)
         .join(broadcast(pqQtab(s, d)), Seq("m", "cwid"))
         .join(ivfCandRanked(s, d), Seq("vec_id"))
         .groupBy(col("vec_id"), col("cid"), col("crank"))
         .agg(dsum(col("qd")).as("adist"))
         .persist()
-    })
+    }
 
   /** The exact brute-force top-10 ids — the recall audits' ground
     * truth. Memoized + persisted: one corpus scan serves every audit
     * branch (the former spelling re-evaluated the brute-force pass in
     * each hit-count join — ADVICE r15). */
   private def annExact10(s: SparkSession, d: String): DataFrame =
-    simCache.getOrElseUpdate((s, d, "ann_exact10"),
-      graft.MemoLog.built("sim.ann_exact10") {
+    MemoLog.frame(s, d, "sim.ann_exact10") {
       val n = vectors(s, d)
       val q = n.filter(col("vec_id") === 0)
         .select(col("v").as("qv"), col("nrm").as("qn")).limit(1)
@@ -334,7 +312,7 @@ object SimOps {
         .orderBy(desc("cos"), asc("vec_id")).limit(10)
         .select(col("vec_id"))
         .persist()
-    })
+    }
 
   /** The q_sim_search_ivfpq result frame (see [[pqSearch]]); wider
     * probes feed the sensitivity sweep. */
@@ -345,9 +323,8 @@ object SimOps {
     // sensitivity sweep's matching branch — without the cache each
     // consumer re-ran the corpus-sized ADC scan (the ivfCandidates
     // rebuild ADVICE r15 flagged, one level up).
-    simCache.getOrElseUpdate((s, d, s"ivfpq_search_$nprobe"),
-      graft.MemoLog.built(s"sim.ivfpq_search_$nprobe")(
-        ivfpqSearchBuild(s, d, nprobe).persist()))
+    MemoLog.frame(s, d, s"sim.ivfpq_search_$nprobe")(
+      ivfpqSearchBuild(s, d, nprobe).persist())
 
   private def ivfpqSearchBuild(s: SparkSession, d: String,
                                nprobe: Int): DataFrame = {
@@ -599,13 +576,12 @@ object SimOps {
     // (a broadcast probe over the vectors) and memoized + PERSISTED for
     // the audit's lifetime (VERDICT r19 #2: Catalyst has no
     // cross-branch reuse, so the five eval branches each re-derived the
-    // corpus scan — five narrow scans per audit run); released by
-    // [[clearSimCaches]] like every memoized sim frame.
+    // corpus scan — five narrow scans per audit run); released with
+    // every other memo by [[graft.MemoLog.release]].
     // The eval joins are on ≤10-row frames; one-row aggregates attach
     // via the structurally certified 1-row broadcast cross join.
     "q_ann_eval" -> ((s, d) => {
-      val scored = simCache.getOrElseUpdate((s, d, "ann_eval_scored"),
-        graft.MemoLog.built("sim.ann_eval_scored") {
+      val scored = MemoLog.frame(s, d, "sim.ann_eval_scored") {
         val n = vectors(s, d)
         val q = n.filter(col("vec_id") === 0)
           .select(col("v").as("qv"), col("nrm").as("qn"),
@@ -622,7 +598,7 @@ object SimOps {
             r6(cosine(col("qv"), col("v"), col("qn"), col("nrm")))
               .as("cos"))
           .persist()
-      })
+      }
       def top10(df: DataFrame) =
         df.orderBy(desc("cos"), asc("vec_id")).limit(10).select(col("vec_id"))
       val exact10 = top10(scored)
@@ -708,32 +684,24 @@ object SimOps {
     * (vec_id, cid, dist) — shared by q_cluster_kmeans (per-cell
     * rollup) and DedupOps' q_dedup_semantic (which joins it on BOTH
     * pair endpoints), so all consumers see bit-identical cells.
-    * Memoized per (session, dir) + persisted — the
-    * [[graft.ops.DedupOps.clearPairsCache]] pattern: without it the
-    * 3-iteration Lloyd lineage re-executes once per consumer (twice
-    * inside q_dedup_semantic alone). The carried vector is dropped
-    * before the persist, so the cached frame is 3 narrow columns ×
-    * corpus rows. Release via [[clearSimCaches]] (Bench's
-    * between-pass hook). Mirrors the oracle's [[kmeansSql]] CTE chain
-    * exactly. */
-  private[ops] def kmeansCells(s: SparkSession, d: String): DataFrame = {
-    ensureKmeans(s, d); simCache((s, d, "kmeans_cells"))
-  }
+    * Memoized per (session, dir) + persisted in [[graft.MemoLog]]:
+    * without it the 3-iteration Lloyd lineage re-executes once per
+    * consumer (twice inside q_dedup_semantic alone). The carried vector
+    * is dropped before the persist, so the cached frame is 3 narrow
+    * columns × corpus rows. Mirrors the oracle's [[kmeansSql]] CTE
+    * chain exactly. */
+  private[ops] def kmeansCells(s: SparkSession, d: String): DataFrame =
+    kmeans(s, d)._1
 
   /** The converged coarse-quantizer centroids (cid, c) — the c2 frame
     * a3 was assigned against, i.e. exactly the centroids the cell ids
-    * in [[kmeansCells]] refer to. Persisted via the shared cache; the
+    * in [[kmeansCells]] refer to. Memoized with the cells; the
     * `.limit(8)` re-wrap restores the PROVABLE maxRows bound
     * PlanShapeSpec's structural BNLJ certification reads (an
     * InMemoryRelation does not carry one), and is value-neutral —
     * the frame has ≤ 8 rows by construction. */
-  private[ops] def kmeansCents(s: SparkSession, d: String): DataFrame = {
-    ensureKmeans(s, d); simCache((s, d, "kmeans_cents")).limit(8)
-  }
-
-  private val simCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, String),
-                                            DataFrame]
+  private[ops] def kmeansCents(s: SparkSession, d: String): DataFrame =
+    kmeans(s, d)._2.limit(8)
 
   /** Build + materialize the memoized similarity-index frames that more
     * than one suite query consumes (DedupOps.prebuildShared's pattern —
@@ -765,18 +733,14 @@ object SimOps {
     ()
   }
 
-  /** Drop every memoized similarity-index frame (k-means cells and
-    * centroids, PQ codes) and release their storage. */
-  def clearSimCaches(): Unit = {
-    simCache.values.foreach(df =>
-      try df.unpersist() catch { case _: Exception => () })
-    simCache.clear()
-  }
+  /** [[graft.MemoLog.release]], under the name the benchmark harness
+    * calls. */
+  def clearSimCaches(): Unit = MemoLog.release()
 
-  /** Populate the k-means cache entries: one Lloyd run yields BOTH the
-    * assignment frame and its centroids, with c2 persisted so the a3
-    * assignment pass reuses the cached centroids instead of re-running
-    * two more corpus passes.
+  /** The memoized k-means (cells, centroids): one Lloyd run yields BOTH
+    * the assignment frame and its centroids, with c2 persisted so the
+    * a3 assignment pass reuses the cached centroids instead of
+    * re-running two more corpus passes.
     *
     * Size-gated driver-side Lloyd (round 22): under the [[DriverLocal]]
     * bound — the working set is vec_ids + vector elements × 8 B, from
@@ -791,30 +755,26 @@ object SimOps {
     * test: KmeansLawSpec asserts local == distributed cells AND
     * centroids on the real fixtures and on ragged/overflowing
     * synthetic vectors. */
-  private def ensureKmeans(s: SparkSession, d: String): Unit =
-    if (!simCache.contains((s, d, "kmeans_cells"))) simCache.synchronized {
-      if (!simCache.contains((s, d, "kmeans_cells")))
-        graft.MemoLog.timed("sim.kmeans") {
-          val local = DriverLocal.admit(s, "kmeans",
-            DriverLocal.footerBytes(s, s"$d/embeddings.parquet",
-              rowBytes = 8, listCol = "embedding", elemBytes = 8))
-          val (cells0, c2) =
-            if (local) lloydLocalFrames(s, d)
-            else {
-              val (a3, c2d) = lloydFrames(s, d)
-              (a3.select(col("vec_id"), col("cid"), col("dist")), c2d)
-            }
-          simCache((s, d, "kmeans_cents")) = c2
-          val cells = cells0.persist()
-          simCache((s, d, "kmeans_cells")) = cells
-          // materialize inside the charged window (MemoLog.built's
-          // contract, spelled out here because two entries are stored)
-          cells.count()
+  private def kmeans(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    MemoLog.value(s, d, "sim.kmeans") {
+      val local = DriverLocal.admit(s, "kmeans",
+        DriverLocal.footerBytes(s, s"$d/embeddings.parquet",
+          rowBytes = 8, listCol = "embedding", elemBytes = 8))
+      val (cells0, c2) =
+        if (local) lloydLocalFrames(s, d)
+        else {
+          val (a3, c2d) = lloydFrames(s, d)
+          (a3.select(col("vec_id"), col("cid"), col("dist")), c2d)
         }
+      val cells = cells0.persist()
+      // materialize inside the charged window (MemoLog.frame's
+      // contract, spelled out here because the build yields two frames)
+      cells.count()
+      (cells, c2)
     }
 
   /** Driver-side 3-iteration Lloyd — the bounded-collect twin of
-    * [[lloydFrames]] (see [[ensureKmeans]] for the gate). Returns
+    * [[lloydFrames]] (see [[kmeans]] for the gate). Returns
     * (cells (vec_id, cid, dist), cents (cid, c)) as local relations
     * with the same schemas the distributed frames carry. */
   private def lloydLocalFrames(s: SparkSession, d: String)

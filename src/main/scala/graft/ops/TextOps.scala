@@ -576,25 +576,9 @@ object TextOps {
     split(trim(applied), " +")
   }
 
-  /** Memoized trainer results per (session, dir) — the corpus-sized
-    * word count + bounded collect runs ONCE for the q_bpe_merges /
-    * q_bpe_apply pair (and any suite that drives both), the
-    * GraphOps.baseCache pattern; driver-side Seq only, no storage to
-    * unpersist. Bench builds it in the shared-prebuild step
-    * ([[prebuildShared]]) so BOTH consumers' official rows measure the
-    * query against a warm trainer with the build cost itemized in the
-    * shared_builds/memo ledger — without the prebuild, alphabetical
-    * order would make q_bpe_apply absorb the trainer while
-    * q_bpe_merges benched a cache hit. Released by [[clearBpeCache]]
-    * (Bench between-pass / ScaleStress+Profile per-run hooks; the
-    * sweep's per-query isolation therefore charges each row the full
-    * trainer, like the graph rows and their shared edge base). */
-  private val bpeCache =
-    new scala.collection.concurrent.TrieMap[
-      (org.apache.spark.sql.SparkSession, String),
-      Seq[(Long, String, String, Long)]]
-
-  def clearBpeCache(): Unit = bpeCache.clear()
+  /** [[graft.MemoLog.release]], under the name the benchmark harness
+    * calls. */
+  def clearBpeCache(): Unit = graft.MemoLog.release()
 
   /** Build the memoized trainer result ahead of the per-query rows —
     * the Bench shared-prebuild hook (the GraphOps.prebuildShared
@@ -607,11 +591,23 @@ object TextOps {
     * token-keyed count capped to the top-4096 types, then 3 driver-side
     * merge rounds over that bounded table — see the q_bpe_merges
     * builder comment for the counting/merge/tiebreak contract. Returns
-    * (round, left, right, weighted pair count). */
+    * (round, left, right, weighted pair count).
+    *
+    * Memoized per (session, dir) in [[graft.MemoLog]] (a driver-side
+    * Seq, no storage to unpersist): the corpus-sized word count +
+    * bounded collect runs ONCE for the q_bpe_merges / q_bpe_apply pair.
+    * Bench builds it in the shared-prebuild step ([[prebuildShared]])
+    * so BOTH consumers' official rows measure the query against a warm
+    * trainer with the build cost itemized in the shared_builds/memo
+    * ledger — without the prebuild, alphabetical order would make
+    * q_bpe_apply absorb the trainer while q_bpe_merges benched a cache
+    * hit. The harnesses release it with every other memo (Bench between
+    * passes, ScaleStress and Profile per run; the sweep's per-query
+    * isolation therefore charges each row the full trainer, like the
+    * graph rows and their shared edge base). */
   private[graft] def bpeTrain(s: org.apache.spark.sql.SparkSession,
                               d: String): Seq[(Long, String, String, Long)] =
-    bpeCache.getOrElseUpdate((s, d),
-      graft.MemoLog.timed("text.bpe_train") { bpeTrainUncached(s, d) })
+    graft.MemoLog.value(s, d, "text.bpe_train") { bpeTrainUncached(s, d) }
 
   private def bpeTrainUncached(s: org.apache.spark.sql.SparkSession,
                                d: String): Seq[(Long, String, String, Long)] = {

@@ -126,9 +126,6 @@ package object ops {
     }
   }
 
-  /** Back-compat alias for the events-specific call sites (StreamOps). */
-  def normalizeEventsTs(df: DataFrame): DataFrame = normalizeTs(df, "ts")
-
   /** Exact, summation-order-independent sum of a double column.
     * Casting each value to DECIMAL(18,6) is a per-row deterministic op; the
     * decimal sum is exact, so partial/final aggregation order (Spark) vs

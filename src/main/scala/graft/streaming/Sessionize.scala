@@ -274,7 +274,7 @@ object Sessionize {
         val s = open.get()
         // emit ONLY if this timer is the one armed for the current
         // session — a stale expiry must not close a live session early
-        if (expiredTimerInfo.getExpiryTimeInMs == timerFor(s)) {
+        if (expiredTimerInfo.getExpiryTimeInMs() == timerFor(s)) {
           open.clear()
           Iterator.single(FunnelSession(userId, s.start, s.end, s.n,
                                         s.stage))

@@ -57,7 +57,7 @@ object StreamOps {
 
   /** events schema for streaming reads, shaped to the fixture's physical
     * ts type ([[eventsTsType]]); the source normalizes ts to session-TZ
-    * µs timestamps via graft.ops.normalizeEventsTs, matching the batch
+    * µs timestamps via graft.ops.normalizeTs, matching the batch
     * reader. */
   def eventsRawSchema(tsType: DataType): StructType = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", tsType),
@@ -328,7 +328,7 @@ object StreamOps {
         // its own final batch (FileStreamSource takes files oldest-first)
         .option("maxFilesPerTrigger", filesPerTrigger.toString)
         .parquet(dir.toString)
-      if (tableName == "events") graft.ops.normalizeEventsTs(raw) else raw
+      if (tableName == "events") graft.ops.normalizeTs(raw, "ts") else raw
     }
     val qname =
       s"graft_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -674,7 +674,7 @@ object StreamOps {
                         "cast(c as long) c")
         .collect()
         .foreach(row => cells(row.getInt(0))(row.getInt(1)) = row.getLong(2))
-      val wArrs = (0 until 4).map(r => array(cells(r).map(lit): _*))
+      val wArrs = (0 until 4).map(r => array(cells(r).toSeq.map(lit): _*))
       val est = least((0 until 4).map(r =>
         element_at(wArrs(r),
           element_at(col("bk"), r + 1).cast("int") + 1)): _*)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit over the full inventory: prints the physical operators each
   * query uses so shuffle/join/pushdown regressions are visible at a
   * glance. Usage: runMain graft.tools.PlanAudit [sfDir] */
@@ -11,7 +9,8 @@ object PlanAudit {
     // the bench/verify session config — including the injected optimizer
     // rules; a plain builder would audit plans the engine never runs
     // (e.g. q_join_range_auto without RangeJoinBinning)
-    val spark = graft.SessionDefaults.builder("8").getOrCreate()
+    val spark = graft.SessionDefaults.builder(graft.SessionDefaults.cpus)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // q_stream_* builders RUN their micro-batch harness on build — the
     // gated per-query teardown keeps an all-queries audit from

@@ -2,8 +2,8 @@ package graft.tools
 
 /** Ad-hoc profiler: runs one query N times under the bench session
   * config, noop-sink executed (count() lets Catalyst prune unreferenced
-  * projections), clearing per-query caches between runs, then prints the
-  * formatted physical plan.
+  * projections), releasing every session memo between runs, then
+  * prints the formatted physical plan.
   * Usage: runMain graft.tools.Profile <query> [sfDir] [n] */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -11,8 +11,8 @@ object Profile {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val n = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SessionDefaults.builder(cpus).getOrCreate()
+    val spark = graft.SessionDefaults.builder(graft.SessionDefaults.cpus)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // repeated stream-query profiling in one JVM needs the gated
     // per-query teardown (StreamOps runStreamN)
@@ -22,11 +22,7 @@ object Profile {
       sys.error(s"unknown query $name; known: " +
         graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", ")))
     (1 to n).foreach { i =>
-      graft.ops.DedupOps.clearPairsCache()
-      graft.ops.SimOps.clearSimCaches()
-      graft.ops.GraphOps.clearMessageCache()
-      graft.ops.TextOps.clearBpeCache()
-      spark.catalog.clearCache()
+      graft.SessionDefaults.release(spark)
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val tBuild = (System.nanoTime() - t0) / 1e9
@@ -40,11 +36,7 @@ object Profile {
     if (sys.env.get("PROFILE_EXPLAIN").contains("1"))
       fn(spark, sfDir).explain("formatted")
     if (sys.env.get("PROFILE_MS_STAGES").contains("1")) {
-      graft.ops.DedupOps.clearPairsCache()
-      graft.ops.SimOps.clearSimCaches()
-      graft.ops.GraphOps.clearMessageCache()
-      graft.ops.TextOps.clearBpeCache()
-      spark.catalog.clearCache()
+      graft.SessionDefaults.release(spark)
       graft.ops.DedupOps.profileMultiSignalStages(spark, sfDir)
     }
     spark.stop()

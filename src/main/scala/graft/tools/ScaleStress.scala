@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** 10×/100× scale stress: derives a ~sf1 (or ~sf10) dataset from sf0.1
@@ -52,7 +52,7 @@ object ScaleStress {
     val out = s"/tmp/graft_scale_x$copies"
     // engine session config (incl. injected optimizer rules — the auto
     // range join must rewrite here too), with wider shuffles for 10×
-    val spark = graft.SessionDefaults.builder("32")
+    val spark = graft.SessionDefaults.builder(graft.SessionDefaults.cpus)
       .config("spark.sql.shuffle.partitions", "64")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -196,13 +196,7 @@ object ScaleStress {
             f"peak cached ${peak / 1048576.0}%.0f MiB)")
         case Some(m) => println(s"[stress] $name FAILED: $m")
       }
-      graft.ops.DedupOps.clearPairsCache()
-      graft.ops.GraphOps.clearMessageCache()
-      graft.ops.SimOps.clearSimCaches()
-      graft.ops.TextOps.clearBpeCache()
-      graft.ops.JoinOps.clearHotKeyCache()
-      graft.streaming.StreamOps.clearStreamSinks()
-      spark.catalog.clearCache()
+      graft.SessionDefaults.release(spark)
       import graft.Yardstick.jnum
       val memo = graft.MemoLog.drain().filter(_.selfSec >= 0.05)
       val memoJs =

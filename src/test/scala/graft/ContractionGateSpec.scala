@@ -38,7 +38,7 @@ class ContractionGateSpec extends SparkTestBase {
 
   private def rows(name: String, dir: String, path: String)
       : Seq[String] = {
-    graft.ops.DedupOps.clearPairsCache()
+    MemoLog.release()
     System.setProperty("graft.dedup.contract", path)
     try {
       val df = SparkEntry.queries(name)(spark, dir)
@@ -47,7 +47,7 @@ class ContractionGateSpec extends SparkTestBase {
         .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
     } finally {
       System.clearProperty("graft.dedup.contract")
-      graft.ops.DedupOps.clearPairsCache()
+      MemoLog.release()
     }
   }
 
@@ -66,7 +66,7 @@ class ContractionGateSpec extends SparkTestBase {
     // The measured gate itself (no override): exercised through a query
     // whose two paths differ in plan but not rows — the stderr marker is
     // not asserted, the decision is, via the memoized dup-frac math.
-    graft.ops.DedupOps.clearPairsCache()
+    MemoLog.release()
     val distinctFrac = {
       val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       val r = docs.agg(count(lit(1)), countDistinct(md5(col("text")))).head

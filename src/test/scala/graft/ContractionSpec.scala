@@ -94,7 +94,7 @@ class ContractionSpec extends SparkTestBase {
       .select($"doc_id", $"cluster", $"keep")
       .as[(Long, Long, Long)].collect().toSeq
     assert(got == want)
-    graft.ops.DedupOps.clearPairsCache()
+    MemoLog.release()
   }
 
   // ---- raw-key soundness on a case/whitespace-variant corpus ----------
@@ -237,6 +237,6 @@ class ContractionSpec extends SparkTestBase {
       .select($"doc_id", $"cluster", $"keep")
       .as[(Long, Long, Long)].collect().toSeq
     assert(got == want)
-    graft.ops.DedupOps.clearPairsCache()
+    MemoLog.release()
   }
 }

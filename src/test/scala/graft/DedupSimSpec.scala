@@ -353,7 +353,7 @@ class DedupSimSpec extends SparkTestBase {
         .withColumn("lang", lit("en")).withColumn("source", lit("s0"))
         .withColumn("n_chars", length($"text").cast("long"))
         .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      graft.ops.DedupOps.clearPairsCache()
+      MemoLog.release()
       try {
         val out = SparkEntry.queries("q_split_leakage")(spark, tmp)
           .select($"split_lo".as[String], $"split_hi".as[String],
@@ -362,7 +362,7 @@ class DedupSimSpec extends SparkTestBase {
         assert(leak.exists(r => Set(r._1, r._2) == Set("test", "train") &&
                                 r._3 >= 1),
           s"engineered train/test near-dup not reported: ${out.toSeq}")
-      } finally graft.ops.DedupOps.clearPairsCache()
+      } finally MemoLog.release()
     }
   }
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions.{col, size}
 class KmeansLawSpec extends graft.SparkTestBase {
   private def cellsAndCents(d: String, forceDistributed: Boolean)
       : (Seq[(Long, Long, Double)], Seq[(Long, Seq[Double])]) = {
-    SimOps.clearSimCaches()
+    graft.MemoLog.release()
     def run = {
       val cells = SimOps.kmeansCells(spark, d)
         .orderBy("vec_id").collect()
@@ -26,7 +26,7 @@ class KmeansLawSpec extends graft.SparkTestBase {
       (cells, cents)
     }
     try if (forceDistributed) withPlain(run) else run
-    finally SimOps.clearSimCaches()
+    finally graft.MemoLog.release()
   }
 
   for (d <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {

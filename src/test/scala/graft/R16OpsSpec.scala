@@ -137,7 +137,7 @@ class R16OpsSpec extends SparkTestBase {
       assert(expect.map(p => (p._1, p._2)).toSet ==
         Set((1000L, 1001L), (1001L, 1000L)))
       for (path <- Seq("never", "always")) {
-        graft.ops.DedupOps.clearPairsCache()
+        MemoLog.release()
         System.setProperty("graft.dedup.contract", path)
         try {
           val got = ops.DedupOps.queries("q_dedup_containment")(spark, tmp)
@@ -146,7 +146,7 @@ class R16OpsSpec extends SparkTestBase {
           assert(got == expect, s"path=$path")
         } finally {
           System.clearProperty("graft.dedup.contract")
-          graft.ops.DedupOps.clearPairsCache()
+          MemoLog.release()
         }
       }
     }
@@ -241,14 +241,14 @@ class R16OpsSpec extends SparkTestBase {
     // frame when present, band within cells otherwise) must be a cost
     // decision, never a semantic one
     def rows(preBuildGlobal: Boolean): Seq[String] = {
-      ops.DedupOps.clearPairsCache()
+      MemoLog.release()
       if (preBuildGlobal)
         ops.DedupOps.queries("q_dedup_embed")(spark, sf0001)
           .write.format("noop").mode("overwrite").save()
       val df = ops.DedupOps.queries("q_dedup_semantic")(spark, sf0001)
       val out = df.select(df.columns.sorted.map(col): _*).collect()
         .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
-      ops.DedupOps.clearPairsCache()
+      MemoLog.release()
       out
     }
     val fresh = rows(preBuildGlobal = false)
