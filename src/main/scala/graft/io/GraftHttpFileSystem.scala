@@ -1,8 +1,11 @@
 package graft.io
 
-import java.io.{EOFException, InputStream}
+import java.io.{EOFException, IOException, InputStream}
 import java.net.{HttpURLConnection, URI, URL}
+import java.nio.ByteBuffer
+import java.util.concurrent.CompletableFuture
 import java.util.concurrent.atomic.AtomicLong
+import java.util.function.IntFunction
 
 import org.apache.hadoop.fs._
 import org.apache.hadoop.fs.permission.FsPermission
@@ -24,8 +27,9 @@ import org.apache.hadoop.util.Progressable
   * breaks the current position closes the connection and the next read
   * issues one `Range: bytes=pos-` GET — so sequential scans cost one op
   * per reopened region, exactly how the reference's byte-range reads
-  * count (runner.cc:109–117). `readFully(pos, …)` (parquet footer +
-  * column chunks) issues one bounded-range GET per call. Reads that start
+  * count (runner.cc:109–117). `readFully(pos, …)` (the parquet footer)
+  * issues one bounded-range GET per call, and `readVectored` (parquet's
+  * column chunks) one per run of nearby ranges. Reads that start
   * in an object's last 64 KiB — the parquet footer and its length tail —
   * go to the wire once per JVM ([[GraftHttpFileSystem.tailMemo]]): the
   * runner's driver reads each footer for the schema, then the scan task
@@ -372,6 +376,34 @@ object GraftHttpFileSystem {
     }
     override def readFully(position: Long, buffer: Array[Byte]): Unit =
       readFully(position, buffer, 0, buffer.length)
+
+    // Parquet asks for a row group's column chunks in one vectored call.
+    // Hadoop's default makes one positioned GET per range; here ranges
+    // closer than `minSeekForVectorReads` merge (up to
+    // `maxReadSizeForVectorReads`) and each merged range is one counted
+    // positioned read, so a row group whose read columns lie together is
+    // one GET, and the gaps between merged ranges are bytes off the wire.
+    override def readVectored(ranges: java.util.List[_ <: FileRange],
+                              allocate: IntFunction[ByteBuffer]): Unit = {
+      val sorted = VectoredReadUtils.validateAndSortRanges(
+        ranges, java.util.Optional.of(len))
+      VectoredReadUtils.mergeSortedRanges(sorted, 1, minSeekForVectorReads,
+          maxReadSizeForVectorReads).forEach { merged =>
+        val parts = merged.getUnderlying
+        try {
+          val bytes = new Array[Byte](merged.getLength)
+          readFully(merged.getOffset, bytes, 0, bytes.length)
+          parts.forEach { r =>
+            val buf = allocate(r.getLength)
+            buf.put(bytes, (r.getOffset - merged.getOffset).toInt, r.getLength)
+            buf.flip()
+            r.setData(CompletableFuture.completedFuture(buf))
+          }
+        } catch { case e: IOException =>
+          parts.forEach(r => r.setData(CompletableFuture.failedFuture(e)))
+        }
+      }
+    }
 
     override def close(): Unit = { endRun(); closeCurrent() }
   }

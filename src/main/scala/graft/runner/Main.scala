@@ -19,16 +19,21 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters,
   FileSourceOptions, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+  BoundReference, Predicate}
+import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.execution.{FileSourceScanExec,
   PartitionedFileUtil, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   ResultQueryStageExec}
 import org.apache.spark.sql.execution.datasources.{FileFormat,
-  FilePartition, InMemoryFileIndex, PartitionedFile}
+  FilePartition, PartitionDirectory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.graftshim.Partitions
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
@@ -164,21 +169,32 @@ object Main {
     }
   }
 
-  /** The roots `path` names — itself, or a glob's matches — and the
-    * schema Spark's (non-merging) parquet inference gives it, read from
-    * ONE footer on the driver instead of inference's schema job.
-    * Inference touches the first of `_common_metadata`, `_metadata` and
-    * the data files, each by path order (ParquetUtils.inferSchema), and
-    * honours the Spark-schema key-value metadata; the same file and
-    * converter are used here. */
+  /** A source's roots (itself, or a glob's matches), every leaf under
+    * them that the file index would list, and its footer schema; every
+    * path is qualified. */
+  private[graft] final case class Listing(roots: Seq[FileStatus],
+                                          files: Seq[FileStatus],
+                                          schema: StructType)
+
+  /** The [[Listing]] of `path`, with the schema Spark's (non-merging)
+    * parquet inference gives it, read from ONE footer on the driver
+    * instead of inference's schema job. Inference touches the first of
+    * `_common_metadata`, `_metadata` and the data files, each by path
+    * order (ParquetUtils.inferSchema), and honours the Spark-schema
+    * key-value metadata; the same file and converter are used here. */
   private[graft] def footerSchema(spark: SparkSession, conf: Configuration,
-                                  path: String): (Seq[Path], StructType) = {
+                                  path: String): Listing = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
+    def qualified(st: FileStatus): FileStatus = {
+      val q = fs.makeQualified(st.getPath)
+      if (q == st.getPath) st
+      else { val c = new FileStatus(st); c.setPath(q); c }
+    }
     val roots =
-      if (path.exists("{}[]*?\\".contains(_)))
-        Option(fs.globStatus(p)).toSeq.flatten
-      else Seq(fs.getFileStatus(p))
+      (if (path.exists("{}[]*?\\".contains(_)))
+         Option(fs.globStatus(p)).toSeq.flatten
+       else Seq(fs.getFileStatus(p))).map(qualified)
     val summaries = Seq("_common_metadata", "_metadata")
     // the file index's listing filter: hidden and `_` names are skipped,
     // parquet's summary files are kept
@@ -188,7 +204,7 @@ object Main {
     def leaves(st: FileStatus): Seq[FileStatus] =
       if (!st.isDirectory) Seq(st)
       else fs.listStatus(st.getPath).toSeq
-        .filter(c => listed(c.getPath.getName)).flatMap(leaves)
+        .filter(c => listed(c.getPath.getName)).map(qualified).flatMap(leaves)
     val files = roots.flatMap(leaves).sortBy(_.getPath.toString)
     val leaf = (summaries.flatMap(n => files.find(_.getPath.getName == n)) ++
         files.filterNot(f => summaries.contains(f.getPath.getName)))
@@ -196,17 +212,45 @@ object Main {
         s"no parquet file under $path"))
     val footer = ParquetFooterReader.readFooter(
       HadoopInputFile.fromStatus(leaf, conf), SKIP_ROW_GROUPS)
-    (roots.map(r => fs.makeQualified(r.getPath)),
-     ParquetFileFormat.readSchemaFromFooter(
-       new Footer(leaf.getPath, footer),
-       new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    Listing(roots, files, ParquetFileFormat.readSchemaFromFooter(
+      new Footer(leaf.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
   }
 
   /** `path` scanned under its [[footerSchema]]: no schema job. */
   private[graft] def scan(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(
-      footerSchema(spark, spark.sessionState.newHadoopConf(), path)._2)
+      footerSchema(spark, spark.sessionState.newHadoopConf(), path).schema)
       .parquet(path)
+
+  /** A [[Listing]]'s partition schema and its non-empty data files by
+    * partition, as the scan's `InMemoryFileIndex` would list them under
+    * the footer schema: `_` and `.` names are not data; the partition
+    * columns and values are Spark's own inference
+    * (`PartitioningUtils.parsePartitions`, through [[Partitions]]) over the directories that hold
+    * data, below the roots (a file root's directory); and unpartitioned,
+    * only the roots' own files and a directory root's direct children
+    * are read. */
+  private[graft] def partitions(spark: SparkSession, l: Listing)
+      : (StructType, Seq[PartitionDirectory]) = {
+    def data(f: FileStatus): Boolean = {
+      val n = f.getPath.getName
+      !(n.startsWith("_") && !n.contains("=") || n.startsWith("."))
+    }
+    val byDir = l.files.filter(data).groupBy(_.getPath.getParent)
+    val spec = Partitions.parse(spark, byDir.keys.toSeq,
+      l.roots.map(r => if (r.isDirectory) r.getPath else r.getPath.getParent)
+        .toSet, l.schema)
+    def read(fs: Seq[FileStatus]) = fs.filter(f => data(f) && f.getLen > 0)
+    val dirs =
+      if (spec.partitionColumns.isEmpty)
+        Seq(PartitionDirectory(InternalRow.empty, read(l.roots.flatMap(r =>
+          if (r.isDirectory) byDir.getOrElse(r.getPath, Nil) else Seq(r)))
+          .toArray))
+      else spec.partitions.map(pp => PartitionDirectory(pp.values,
+        read(byDir.getOrElse(pp.path, Nil)).toArray))
+    (spec.partitionColumns, dirs)
+  }
 
   /** One source's flagship in one partition: `coalesce(1)` makes the
     * scan report a single partition, so the partial/final aggregate and
@@ -228,16 +272,17 @@ object Main {
     * cleaned once. A template is built by one thread; other sources of
     * its schema wait for it, and a failed build is retried by the next.
     *
-    * Each source then lists its own files (a fresh `InMemoryFileIndex`),
-    * cuts them into splits as the scan would, and runs the chain on the
-    * calling thread as an executor runs a task ([[InThread]]), with those
-    * splits set on the chain's [[SplitsRDD]] leaf: no Spark job, SQL
-    * execution, task binary or result serialization. Operators keep
-    * per-run state in their plan nodes, so concurrent runs never share a
-    * chain: each takes a copy from its template's free list, deserialized
-    * once from the chain serialized at the build, and returns it after a
-    * run that succeeded (a failed run's copy is dropped). Nothing per file
-    * is planned, copied, generated, cleaned or broadcast.
+    * Each source then cuts the files its footer read listed
+    * ([[partitions]]) into splits as the scan would, and runs the chain
+    * on the calling thread as an executor runs a task ([[InThread]]),
+    * with those splits set on the chain's [[SplitsRDD]] leaf: no Spark
+    * job, SQL execution, task binary or result serialization. Operators
+    * keep per-run state in their plan nodes, so concurrent runs never
+    * share a chain: each takes a copy from its template's free list,
+    * deserialized once from the chain serialized at the build, and
+    * returns it after a run that succeeded (a failed run's copy is
+    * dropped). Nothing per file is listed twice, planned, copied,
+    * generated, cleaned or broadcast.
     *
     * A template serves sources whose footer schema (with its metadata)
     * and partition schema equal its own; any other source builds its own
@@ -254,6 +299,14 @@ object Main {
       val props = new Properties
       for ((k, v) <- spark.sessionState.conf.getAllConfs
            if k.startsWith("spark")) props.setProperty(k, v)
+      // Runs only: the projections and orderings an operator builds per
+      // run (the aggregate's hash map and empty buffer, the sort's
+      // sorter) are interpreted instead of generated and compiled for
+      // every file. The per-row filter and aggregate stay in the
+      // whole-stage code, compiled once at the template build, which
+      // like every other session keeps code generation.
+      props.setProperty(SQLConf.CODEGEN_FACTORY_MODE.key,
+                        CodegenObjectFactoryMode.NO_CODEGEN.toString)
       new InThread(props, m => metrics.add(m.inputMetrics))
     }
 
@@ -344,10 +397,28 @@ object Main {
         out
       }
 
-      /** `index`'s files cut into splits as the template's scan cuts
+      /** Whether a partition's values pass the scan's partition filters,
+        * evaluated as the file index prunes partitions. */
+      private val keep: InternalRow => Boolean =
+        scan.partitionFilters.reduceOption(And) match {
+          case None => _ => true
+          case Some(f) =>
+            val cols = relation.partitionSchema
+            val p = Predicate.createInterpreted(f.transform {
+              case a: AttributeReference =>
+                val i = cols.indexWhere(_.name == a.name)
+                BoundReference(i, cols(i).dataType, nullable = true)
+            })
+            // runs of one template share it; its subexpression cache is
+            // per row
+            values => p.synchronized(p.eval(values))
+        }
+
+      /** `partitions`' files cut into splits as the template's scan cuts
         * them, in the order the scan's one coalesced task reads them. */
-      def splits(index: InMemoryFileIndex): Array[PartitionedFile] = {
-        val dirs = index.listFiles(scan.partitionFilters, scan.dataFilters)
+      def splits(partitions: Seq[PartitionDirectory])
+          : Array[PartitionedFile] = {
+        val dirs = partitions.filter(d => keep(d.values))
         val maxSplitBytes = FilePartition.maxSplitBytes(spark, dirs)
         val files = dirs.flatMap { dir =>
           dir.files.flatMap { f =>
@@ -366,11 +437,11 @@ object Main {
     /** Runs the flagship on `path`; `consume` gets the result schema and
       * the rows inside the file's run, on the calling thread. */
     def run[A](path: String)(consume: (StructType, Iterator[Row]) => A): A = {
-      val (roots, schema) = footerSchema(spark, conf, path)
-      val index = new InMemoryFileIndex(spark, roots, Map.empty, Some(schema))
-      val t = templates.computeIfAbsent((schema, index.partitionSchema),
+      val listing = footerSchema(spark, conf, path)
+      val (partitionSchema, dirs) = partitions(spark, listing)
+      val t = templates.computeIfAbsent((listing.schema, partitionSchema),
                                         _ => new Slot).get(path)
-      t.run(t.splits(index)) { rows =>
+      t.run(t.splits(dirs)) { rows =>
         consume(t.schema, rows.map(t.toRow(_).asInstanceOf[Row]))
       }
     }

@@ -332,7 +332,7 @@ object ScaleStress {
         case (n, js) if js.contains("\"error\":") => jstr(n) }
       val json =
         s"""{"copies":$copies,"src":${jstr(src)},"fixture":${jstr(out)},""" +
-        s""""cpus":${Runtime.getRuntime.availableProcessors()},""" +
+        s""""cpus":${graft.SessionDefaults.cpus},""" +
         s""""shuffle_partitions":64,""" +
         s""""heap_max_bytes":${Runtime.getRuntime.maxMemory()},""" +
         s""""total_s":${jstrNum("%.1f", totalS)},""" +

@@ -4,6 +4,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.io.GraftHttpFileSystem
 
 /** Minimal HTTP object server shared by the filesystem and runner-CLI
@@ -183,6 +185,51 @@ class HttpFsSpec extends SparkTestBase {
         Files.copy(Paths.get(sf0001, "orders.parquet"), obj,
                    java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         assert(delta(footerRead()) == (2L, 2L), "new length served stale")
+      } finally server.stop(0)
+    }
+  }
+
+  test("vectored read: adjacent ranges are one GET, ranges past the minimum seek two") {
+    withTempDir("graft_vectored_") { dir =>
+      val size = 1 << 20
+      Files.write(Paths.get(dir, "obj.bin"),
+                  Array.tabulate[Byte](size)(i => (i * 31 + i / 251).toByte))
+      val gets = new java.util.concurrent.atomic.AtomicLong
+      val server = serve(dir, getsServed = Some(gets))
+      try {
+        val uri = java.net.URI.create(
+          s"ghttp://127.0.0.1:${server.getAddress.getPort}/")
+        val conf = new org.apache.hadoop.conf.Configuration(false)
+        conf.set("fs.ghttp.impl", "graft.io.GraftHttpFileSystem")
+        val fs = org.apache.hadoop.fs.FileSystem.newInstance(uri, conf)
+        val in = fs.open(new org.apache.hadoop.fs.Path(uri.resolve("obj.bin")))
+        try {
+          val gap = in.minSeekForVectorReads
+          // (GETs the stream counted, GETs the server answered), per
+          // vectored read of `ranges` (given out of order), whose buffers
+          // must equal positioned reads of the same ranges
+          def vectored(ranges: Seq[(Long, Int)]): (Long, Long) = {
+            val want = ranges.map { case (at, n) =>
+              val b = new Array[Byte](n); in.readFully(at, b); b.toSeq }
+            val asked = ranges.map { case (at, n) =>
+              org.apache.hadoop.fs.FileRange.createFileRange(at, n) }
+            val (ops0, _, _) = GraftHttpFileSystem.snapshot
+            val g0 = gets.get
+            in.readVectored(asked.asJava, n => java.nio.ByteBuffer.allocate(n))
+            val (ops1, _, _) = GraftHttpFileSystem.snapshot
+            for ((r, w) <- asked.zip(want)) {
+              val buf = r.getData.get()
+              val got = new Array[Byte](buf.remaining)
+              buf.get(got)
+              assert(got.toSeq == w, s"range ${r.getOffset}+${r.getLength}")
+            }
+            (ops1 - ops0, gets.get - g0)
+          }
+          assert(vectored(Seq(6000L -> 3000, 1000L -> 5000, 9000L -> 100)) ==
+                   (1L, 1L), "adjacent ranges")
+          assert(vectored(Seq(100000L -> 700, 100700L + gap + 1 -> 900)) ==
+                   (2L, 2L), "ranges past the minimum seek")
+        } finally { in.close(); fs.close() }
       } finally server.stop(0)
     }
   }

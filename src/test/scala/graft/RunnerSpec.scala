@@ -12,10 +12,13 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.{ExecutionMemory, ListenerBusDrain, TaskContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.runner.Main
 
@@ -294,6 +297,42 @@ class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // lineitem, Laghos (its directory and glob share one) and the two
     // variants
     assert(prepared.planned == 4, s"${prepared.planned} templates")
+  }
+
+  test("prepared: k=v partitioned directories give the unprepared plan's rows, and two of one shape share a template") {
+    withTempDir("graft_partitioned_") { dir =>
+      // two Laghos sources partitioned by a column the flagship never
+      // reads, and lineitem partitioned by a column it filters on (so the
+      // scan prunes partitions)
+      val base = spark.read.parquet(laghos).withColumn("k", col("vertex_id") % 3)
+      base.filter(col("vertex_id") % 2 === 0).write.partitionBy("k")
+        .parquet(s"$dir/even")
+      base.filter(col("vertex_id") % 2 === 1).write.partitionBy("k")
+        .parquet(s"$dir/odd")
+      spark.read.parquet(lineitem).write.partitionBy("l_tax")
+        .parquet(s"$dir/bytax")
+      val prepared = new Main.Prepared(spark)
+      for (p <- Seq("even", "odd", "bytax").map(n => s"$dir/$n")) {
+        val got = prepared.run(p)((_, rows) => rows.map(key).toVector)
+        val want = Main.fileQuery(spark, p).collect().toSeq.map(key)
+        assert(got.nonEmpty && got.sorted == want.sorted, p)
+      }
+      assert(prepared.planned == 2, s"${prepared.planned} templates")
+    }
+  }
+
+  test("prepared: a run generates no code, the template keeps whole-stage code") {
+    val prepared = new Main.Prepared(spark)
+    val mode = prepared.run(lineitem) { (_, rows) =>
+      rows.foreach(_ => ())
+      SQLConf.get.codegenFactoryMode.toString
+    }
+    assert(mode == CodegenObjectFactoryMode.NO_CODEGEN.toString)
+    assert(SQLConf.get.codegenFactoryMode.toString != mode,
+           "the session lost codegen")
+    for (plan <- prepared.plans)
+      assert(collect(plan) { case w: WholeStageCodegenExec => w }.nonEmpty,
+             plan)
   }
 
   /** Spawn the runner CLI as a child JVM with the given flags + stdin,

@@ -42,6 +42,10 @@ import sys
 FRAMES = {"ClosureCleaner": "ClosureCleaner", "doCodeGen": "doCodeGen",
           "buildReaderWithPartitionValues": "buildReaderWithPartitionValues",
           "InMemoryFileIndex": "InMemoryFileIndex",
+          "GenerateUnsafeProjection": "GenerateUnsafeProjection",
+          "Configuration.<init>": r"Configuration\.<init>$",
+          "SerializationUtil": "SerializationUtil",
+          "HttpURLConnection": "HttpURLConnection",
           "Prepared.template": r"Prepared\.template(\.<init>)?$"}
 TEMPLATE = "Prepared.template"
 
