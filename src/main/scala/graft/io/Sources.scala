@@ -11,7 +11,10 @@ import org.apache.spark.sql.types.StructType
   * extra full pass over the data before the real read (at 100 TB that is
   * the whole job twice) and silently changes types when a partition's
   * sample differs — both unacceptable at scale. Callers declare the
-  * schema; malformed rows are quarantined, not inferred around.
+  * schema; malformed rows are quarantined, not inferred around. The
+  * contract holds for parquet too: parquet describes itself, so its
+  * explicit schema is the one footer [[ParquetSource]] reads, and no
+  * parquet read in the engine runs Spark's schema-inference job.
   *
   * Caveat: Spark refuses a query whose only referenced column is the
   * corrupt-record column of a raw file scan — materialize (cache/write)

@@ -10,6 +10,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 
+import graft.io.ParquetSource
+
 /** Bounded driver-local execution: the one gate for every "small
   * input runs on the driver" twin — the connected-components
   * union-find ([[DedupOps.propagateMinLabels]]), the k-means Lloyd
@@ -53,34 +55,22 @@ object DriverLocal {
     local
   }
 
-  /** Σ over the parquet footers of `path` (a file or a one-level
-    * directory of part files) of rows × `rowBytes` + elements of the
-    * list column `listCol` × `elemBytes`. Metadata only. None when any
-    * footer is unreadable, so [[admit]] fails closed. */
+  /** Σ over the parquet footers of `path`'s data files
+    * ([[graft.io.ParquetSource]]: a file, a directory, a glob or a
+    * `k=v` partitioned tree) of rows × `rowBytes` + elements of the list
+    * column `listCol` × `elemBytes`. Metadata only. None when the source
+    * or any footer is unreadable, so [[admit]] fails closed. */
   def footerBytes(s: SparkSession, path: String, rowBytes: Long,
                   listCol: String = "", elemBytes: Long = 0L)
       : Option[Long] = try {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = s.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val st = fs.getFileStatus(p)
-    val files =
-      if (st.isDirectory) fs.listStatus(p).toSeq.filter { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      } else Seq(st)
-    Some(files.map { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-      try r.getFooter.getBlocks.asScala.map { b =>
-        val elems = if (listCol.isEmpty) 0L else b.getColumns.asScala
-          .filter(_.getPath.toDotString.startsWith(listCol + "."))
-          .map(_.getValueCount).sum
-        b.getRowCount * rowBytes + elems * elemBytes
-      }.sum
-      finally r.close()
+    val conf = s.sessionState.newHadoopConf()
+    val blocks = ParquetSource.footers(conf,
+      ParquetSource.footerSchema(s, conf, path)).flatMap(_.getBlocks.asScala)
+    Some(blocks.map { b =>
+      val elems = if (listCol.isEmpty) 0L else b.getColumns.asScala
+        .filter(_.getPath.toDotString.startsWith(listCol + "."))
+        .map(_.getValueCount).sum
+      b.getRowCount * rowBytes + elems * elemBytes
     }.sum)
   } catch { case NonFatal(_) => None }
 

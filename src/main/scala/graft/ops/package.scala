@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.ParquetSource
+
 /** Shared helpers for the oracle-matched operator inventory (SURVEY.md §2.3).
   *
   * Determinism policy (SURVEY.md §7.3) — every oracle-matched query:
@@ -20,35 +22,37 @@ package object ops {
 
   /** Fixture columns that are time-typed and therefore subject to the
     * generator's precision choice; each is normalized on read. */
-  private val tsColumns: Map[String, Seq[String]] = Map(
+  private[graft] val tsColumns: Map[String, Seq[String]] = Map(
     "events" -> Seq("ts"),
     "orders" -> Seq("o_orderdate"),
     "lineitem" -> Seq("l_shipdate"))
 
-  def table(s: SparkSession, dir: String, name: String): DataFrame = {
-    tsColumns.get(name) match {
-      case Some(cols) =>
-        // Schema-on-read for time-typed fixture columns — the physical type
-        // is the generator's choice, not ours (the reference delegates
-        // schema to the engine's parquet footer read, runner.cc:178; DuckDB
-        // reads any timestamp precision transparently). Dispatch on the
-        // footer type:
-        //   - TIMESTAMP(NANOS): Spark's vectorized reader rejects it, so
-        //     read the raw int64 (nanosAsLong) and truncate ns→µs — exactly
-        //     what DuckDB does on read (SURVEY.md §7.3);
-        //   - timestamp NTZ: cast to session-TZ timestamp — the session is
-        //     pinned UTC (SessionDefaults), so the cast is value-identity
-        //     and downstream unix_micros/date_trunc see the same µs values;
-        //   - timestamp (UTC-adjusted): already TimestampType, pass through.
-        // The conf set is session-global but idempotent (always true, set
-        // before every read that could see a NANOS footer) — it only
-        // changes how NANOS columns surface, never µs/ms ones.
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val raw = s.read.parquet(s"$dir/$name.parquet")
-        cols.foldLeft(raw)((df, c) => normalizeTs(df, c))
-      case None => s.read.parquet(s"$dir/$name.parquet")
-    }
-  }
+  def table(s: SparkSession, dir: String, name: String): DataFrame =
+    read(s, dir, name, listing(s, dir, name))
+
+  /** The fixture table `name`'s one listing and footer schema. */
+  private def listing(s: SparkSession, dir: String, name: String)
+      : ParquetSource.Listing = ParquetSource.footerSchema(s,
+    s.sessionState.newHadoopConf(), s"$dir/$name.parquet")
+
+  /** The fixture read under its footer schema (the reference delegates
+    * schema to the engine's parquet footer read, runner.cc:178), with
+    * each time-typed column normalized: its physical type is the
+    * generator's choice, not ours, and DuckDB reads any timestamp
+    * precision transparently. [[normalizeTs]] dispatches on the footer
+    * type:
+    *   - TIMESTAMP(NANOS): Spark's vectorized reader rejects it, so the
+    *     footer schema holds the raw int64 (nanosAsLong, set by
+    *     [[ParquetSource.footerSchema]]), truncated ns→µs — exactly what
+    *     DuckDB does on read (SURVEY.md §7.3);
+    *   - timestamp NTZ: cast to session-TZ timestamp — the session is
+    *     pinned UTC (SessionDefaults), so the cast is value-identity and
+    *     downstream unix_micros/date_trunc see the same µs values;
+    *   - timestamp (UTC-adjusted): already TimestampType, pass through. */
+  private def read(s: SparkSession, dir: String, name: String,
+                   l: ParquetSource.Listing): DataFrame =
+    tsColumns.getOrElse(name, Nil).foldLeft(
+      ParquetSource.read(s, s"$dir/$name.parquet", l))(normalizeTs)
 
   /** Size-gated post-scan spread (round 21; guide §2.5 "input skew" /
     * §1.2 step 1): the bench fixtures are single-row-group parquet
@@ -83,8 +87,9 @@ package object ops {
                   // multi-task-adjacent and the extra exchange measured
                   // ~2× slower at the 100× sweep) passes a lower gate.
                   maxBytes: Long = 256L << 20): DataFrame = {
-    val df = table(s, dir, name)
-    if (!graft.Plain(s) && inputBytes(s"$dir/$name.parquet") <= maxBytes &&
+    val l = listing(s, dir, name)
+    val df = read(s, dir, name, l)
+    if (!graft.Plain(s) && l.bytes <= maxBytes &&
         s.sparkContext.defaultParallelism > 1)
       // HASH repartition on a caller-named high-cardinality content
       // key — NOT round-robin: repartition(n) pays a full local sort
@@ -96,18 +101,6 @@ package object ops {
       df.repartition(s.sparkContext.defaultParallelism, key)
     else df
   }
-
-  /** On-disk bytes of a parquet path (file or one-level directory);
-    * Long.MaxValue when unreadable so the caller's gate fails closed
-    * (no spread) rather than shuffling an unknown-size input. */
-  private[ops] def inputBytes(path: String): Long = try {
-    val f = new java.io.File(path)
-    if (f.isFile) f.length
-    else if (f.isDirectory)
-      Option(f.listFiles()).map(_.map(_.length).sum)
-        .getOrElse(Long.MaxValue)
-    else Long.MaxValue
-  } catch { case _: Exception => Long.MaxValue }
 
   /** Normalize one time column to session-TZ TimestampType (µs), whatever
     * physical representation the fixture carried. Shared by the batch

@@ -8,11 +8,7 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.{Failure, Random, Success, Try}
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
-import org.apache.parquet.hadoop.Footer
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.{Partition, SparkEnv}
 import org.apache.spark.graftshim.InThread
 import org.apache.spark.rdd.RDD
@@ -30,14 +26,13 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
 import org.apache.spark.sql.execution.datasources.{FileFormat,
   FilePartition, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.graftshim.Partitions
-import org.apache.spark.sql.execution.datasources.parquet.{
-  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
 import graft.io.Metrics
+import graft.io.ParquetSource.{Listing, footerSchema, isData, scan}
 
 /** CLI-parity runner (SURVEY.md §2.1 A12–A18, §3.1): the reference harness's
   * behavior — per-file parallel query fan-out over parquet objects listed on
@@ -169,60 +164,6 @@ object Main {
     }
   }
 
-  /** A source's roots (itself, or a glob's matches), every leaf under
-    * them that the file index would list, and its footer schema; every
-    * path is qualified. */
-  private[graft] final case class Listing(roots: Seq[FileStatus],
-                                          files: Seq[FileStatus],
-                                          schema: StructType)
-
-  /** The [[Listing]] of `path`, with the schema Spark's (non-merging)
-    * parquet inference gives it, read from ONE footer on the driver
-    * instead of inference's schema job. Inference touches the first of
-    * `_common_metadata`, `_metadata` and the data files, each by path
-    * order (ParquetUtils.inferSchema), and honours the Spark-schema
-    * key-value metadata; the same file and converter are used here. */
-  private[graft] def footerSchema(spark: SparkSession, conf: Configuration,
-                                  path: String): Listing = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    def qualified(st: FileStatus): FileStatus = {
-      val q = fs.makeQualified(st.getPath)
-      if (q == st.getPath) st
-      else { val c = new FileStatus(st); c.setPath(q); c }
-    }
-    val roots =
-      (if (path.exists("{}[]*?\\".contains(_)))
-         Option(fs.globStatus(p)).toSeq.flatten
-       else Seq(fs.getFileStatus(p))).map(qualified)
-    val summaries = Seq("_common_metadata", "_metadata")
-    // the file index's listing filter: hidden and `_` names are skipped,
-    // parquet's summary files are kept
-    def listed(n: String): Boolean = summaries.exists(n.startsWith) ||
-      !(n.startsWith("_") && !n.contains("=") || n.startsWith(".") ||
-        n.endsWith("._COPYING_"))
-    def leaves(st: FileStatus): Seq[FileStatus] =
-      if (!st.isDirectory) Seq(st)
-      else fs.listStatus(st.getPath).toSeq
-        .filter(c => listed(c.getPath.getName)).map(qualified).flatMap(leaves)
-    val files = roots.flatMap(leaves).sortBy(_.getPath.toString)
-    val leaf = (summaries.flatMap(n => files.find(_.getPath.getName == n)) ++
-        files.filterNot(f => summaries.contains(f.getPath.getName)))
-      .headOption.getOrElse(throw new java.io.FileNotFoundException(
-        s"no parquet file under $path"))
-    val footer = ParquetFooterReader.readFooter(
-      HadoopInputFile.fromStatus(leaf, conf), SKIP_ROW_GROUPS)
-    Listing(roots, files, ParquetFileFormat.readSchemaFromFooter(
-      new Footer(leaf.getPath, footer),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
-  }
-
-  /** `path` scanned under its [[footerSchema]]: no schema job. */
-  private[graft] def scan(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(
-      footerSchema(spark, spark.sessionState.newHadoopConf(), path).schema)
-      .parquet(path)
-
   /** A [[Listing]]'s partition schema and its non-empty data files by
     * partition, as the scan's `InMemoryFileIndex` would list them under
     * the footer schema: `_` and `.` names are not data; the partition
@@ -233,15 +174,11 @@ object Main {
     * are read. */
   private[graft] def partitions(spark: SparkSession, l: Listing)
       : (StructType, Seq[PartitionDirectory]) = {
-    def data(f: FileStatus): Boolean = {
-      val n = f.getPath.getName
-      !(n.startsWith("_") && !n.contains("=") || n.startsWith("."))
-    }
-    val byDir = l.files.filter(data).groupBy(_.getPath.getParent)
+    val byDir = l.files.filter(isData).groupBy(_.getPath.getParent)
     val spec = Partitions.parse(spark, byDir.keys.toSeq,
       l.roots.map(r => if (r.isDirectory) r.getPath else r.getPath.getParent)
         .toSet, l.schema)
-    def read(fs: Seq[FileStatus]) = fs.filter(f => data(f) && f.getLen > 0)
+    def read(fs: Seq[FileStatus]) = fs.filter(f => isData(f) && f.getLen > 0)
     val dirs =
       if (spec.partitionColumns.isEmpty)
         Seq(PartitionDirectory(InternalRow.empty, read(l.roots.flatMap(r =>

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.io.ParquetSource
 import graft.ops._
 
 /** Streaming surface (SURVEY.md §2.3 Streaming / §7.5).
@@ -25,44 +26,15 @@ import graft.ops._
   */
 object StreamOps {
 
-  /** (path, total bytes, newest mtime) fingerprint of a fixture — a file
-    * or a directory of part files. Keying the memo caches below on it
-    * makes an in-place fixture rewrite invalidate automatically (the r12
-    * ADVICE hazard: a path-keyed cache served a stale sniffed schema
-    * after a mid-session regeneration while the batch reader re-sniffed
-    * every call — silent batch/stream divergence). */
-  private def fixtureStamp(path: String): (String, Long, Long) = {
-    val f = new java.io.File(path)
-    val kids = Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-    if (f.isDirectory)
-      (path, kids.map(_.length).sum,
-       kids.foldLeft(f.lastModified)((m, k) => math.max(m, k.lastModified)))
-    else (path, f.length, f.lastModified)
-  }
-
-  /** Physical type of events.ts in the fixture at `d` (footer sniff,
-    * memoized per fixture fingerprint): LongType for TIMESTAMP(NANOS)
-    * fixtures (the nanosAsLong read), TimestampNTZType for µs wall-clock
-    * fixtures. FileStreamSource needs the schema up front, so the batch
-    * reader's schema-on-read dispatch (graft.ops.table) becomes a
-    * one-time sniff here. A fixture rewrite changes the fingerprint and
-    * re-sniffs; [[clearStagedFixtures]] also drops the memo. */
-  private val tsTypeCache =
-    new scala.collection.concurrent.TrieMap[(String, Long, Long), DataType]
-  def eventsTsType(s: SparkSession, d: String): DataType =
-    tsTypeCache.getOrElseUpdate(fixtureStamp(s"$d/events.parquet"), {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s.read.parquet(s"$d/events.parquet").schema("ts").dataType
-    })
-
-  /** events schema for streaming reads, shaped to the fixture's physical
-    * ts type ([[eventsTsType]]); the source normalizes ts to session-TZ
-    * µs timestamps via graft.ops.normalizeTs, matching the batch
-    * reader. */
-  def eventsRawSchema(tsType: DataType): StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", tsType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
+  /** The fixture `tableName` under `d`: its one listing and footer
+    * schema ([[ParquetSource]]). The stream reads under that schema
+    * (FileStreamSource needs one up front), so a stream sees the columns
+    * and time type the batch read sees — events.ts included, whose raw
+    * footer type (TIMESTAMP(NANOS) as long, or µs) the source normalizes
+    * through graft.ops.normalizeTs like the batch reader. */
+  private[graft] def fixture(s: SparkSession, d: String, tableName: String)
+      : ParquetSource.Listing = ParquetSource.footerSchema(s,
+    s.sessionState.newHadoopConf(), s"$d/$tableName.parquet")
 
   /** Tumbling 1-hour aggregation as a streaming transform (shared by the
     * query entry and tests). */
@@ -72,13 +44,6 @@ object StreamOps {
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
       .select(unix_micros(col("window.start")).as("bucket"),
               col("event_type"), col("n"), col("total"))
-
-  /** documents schema for streaming reads (all plain types — no
-    * timestamp repair needed). */
-  val documentsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType), StructField("source", StringType),
-    StructField("n_chars", LongType)))
 
   /** Run a streaming transform over a staged table fixture to
     * completion and return the drained memory-sink contents.
@@ -90,15 +55,17 @@ object StreamOps {
   private def runStream(s: SparkSession, d: String, mode: String,
                         copies: Int = 1,
                         tableName: String = "events",
-                        schema: Option[StructType] = None,
                         bigState: Boolean = false)
                        (transform: DataFrame => DataFrame): DataFrame =
-    runStreamN(s, d, mode, copies, tableName, schema, nSources = 1,
+    runStreamN(s, d, mode, copies, tableName, nSources = 1,
                sentinelNs = None, bigState = bigState)(
       srcs => transform(srcs.head))
 
-  /** Staged fixture directories, memoized per
-    * (session, fixture fingerprint, copies, sentinel): staging copies the
+  /** Staged fixture directories, memoized per (session, fixture
+    * fingerprint, copies, sentinel). The fingerprint is the fixture's
+    * path, data bytes and newest mtime from its listing, so an in-place
+    * fixture rewrite invalidates the memo (a path-keyed cache would serve
+    * a stale staging after a mid-session regeneration). Staging copies the
     * fixture and — for sentinel queries — runs two one-row parquet WRITE
     * JOBS; repeated builds in one session (Bench's cold + N warm passes)
     * were paying that staging per query per pass. The staged directory
@@ -142,7 +109,6 @@ object StreamOps {
       graft.Scratch.deleteRecursively(dir)
     }
     stagedCache.clear()
-    tsTypeCache.clear()
     clearStreamSinks()
   }
 
@@ -204,9 +170,11 @@ object StreamOps {
 
   private def stageFixture(s: SparkSession, d: String, copies: Int,
                            tableName: String, sentinelNs: Option[Long],
-                           tsType: DataType): (java.nio.file.Path, Int) =
+                           l: ParquetSource.Listing)
+      : (java.nio.file.Path, Int) =
     stagedCache.getOrElseUpdate(
-      (s, fixtureStamp(s"$d/$tableName.parquet"), copies, sentinelNs), {
+      (s, (s"$d/$tableName.parquet", l.bytes, l.newest), copies,
+       sentinelNs), {
       val dir = mkScratchDir("graft_stream_")
       dir.toFile.deleteOnExit()
       // driver fixtures are single parquet FILES; generated scale fixtures
@@ -218,13 +186,7 @@ object StreamOps {
       // parts after the first batch and (correctly, per streaming
       // semantics) drop most of the fixture as late data — a harness
       // artifact, not the contract under test.
-      val fixture = java.nio.file.Paths.get(s"$d/$tableName.parquet")
-      val parts: Seq[java.nio.file.Path] =
-        if (java.nio.file.Files.isDirectory(fixture))
-          fixture.toFile.listFiles().toSeq
-            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-            .map(_.toPath)
-        else Seq(fixture)
+      val parts = l.dataFiles.map(f => java.nio.file.Paths.get(f.getPath.toUri))
       // Sentinel queries (always copies=1): the FIRST sentinel rides the
       // data batch — the watermark is computed at batch COMPLETION, so
       // "data + far-future sentinel" in one batch leaves in-batch
@@ -252,10 +214,11 @@ object StreamOps {
       // emissions (outer-join null rows, final window flushes) actually
       // reach the sink — the watermark computed in batch N gates emission
       // in batch N+1. Sentinel ts is written in the SAME
-      // physical representation the fixture carries (tsType), so one read
-      // schema covers fixture copies and sentinels alike.
+      // physical representation the fixture carries (its footer type), so
+      // one read schema covers fixture copies and sentinels alike.
       sentinelNs.foreach { ns =>
         import s.implicits._
+        val tsType = l.schema("ts").dataType
         for (k <- 1 to 2) {
           val tmp = java.nio.file.Files.createTempDirectory("graft_sentinel_")
           val base =
@@ -294,7 +257,6 @@ object StreamOps {
     * append-mode windows finalize and flush. */
   private def runStreamN(s: SparkSession, d: String, mode: String,
                          copies: Int, tableName: String,
-                         schema: Option[StructType],
                          nSources: Int, sentinelNs: Option[Long],
                          bigState: Boolean = false,
                          // transformWithState REQUIRES the RocksDB
@@ -306,22 +268,11 @@ object StreamOps {
                          // the operator at any scale.
                          forceRocks: Boolean = false)
                         (transform: Seq[DataFrame] => DataFrame): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // events: read schema follows the fixture's physical ts type (footer
-    // sniff — a passed schema would be ignored, so events callers pass
-    // None); other tables stream under the caller's schema, required
-    // because FileStreamSource cannot infer one.
-    val tsType: DataType =
-      if (tableName == "events") eventsTsType(s, d) else null
-    val effSchema =
-      if (tableName == "events") eventsRawSchema(tsType)
-      else schema.getOrElse(throw new IllegalArgumentException(
-        s"runStreamN($tableName): a read schema is required for " +
-        "non-events fixtures (FileStreamSource cannot infer one)"))
+    val l = fixture(s, d, tableName)
     val (dir, filesPerTrigger) =
-      stageFixture(s, d, copies, tableName, sentinelNs, tsType)
+      stageFixture(s, d, copies, tableName, sentinelNs, l)
     def source(): DataFrame = {
-      val raw = s.readStream.schema(effSchema)
+      val raw = s.readStream.schema(l.schema)
         // one COPY per micro-batch: replayed copies arrive as separate
         // batches (dedup state is actually exercised), watermarks advance
         // between batches, and the sentinel (later mtime) always lands in
@@ -335,12 +286,8 @@ object StreamOps {
     // Staged replay volume — the scale signal for the two adaptive
     // choices below (shuffle width, state-store provider). The
     // threshold semantics are defined over the STAGED source (what the
-    // stream actually replays = copies × the raw fixture).
-    def dirBytes(p: java.io.File): Long =
-      if (p.isFile) p.length()
-      else Option(p.listFiles()).map(_.map(dirBytes).sum).getOrElse(0L)
-    val stagedBytes = copies.toLong *
-      dirBytes(new java.io.File(s"$d/$tableName.parquet"))
+    // stream actually replays = copies × the raw fixture's data bytes).
+    val stagedBytes = copies.toLong * l.bytes
     // Run the micro-batches at a narrow shuffle width: every stateful
     // operator opens one state-store instance PER SHUFFLE PARTITION per
     // micro-batch, so the session's 32-wide default pays 32 store
@@ -620,8 +567,8 @@ object StreamOps {
     // no watermark — nothing aggregates). One code path and one oracle
     // for batch and stream, so parity is by construction, not by test.
     "q_stream_quality" -> ((s, d) =>
-      runStream(s, d, "append", tableName = "documents",
-                schema = Some(documentsSchema))(graft.ops.TextOps.qualityVerdict)
+      runStream(s, d, "append", tableName = "documents")(
+        graft.ops.TextOps.qualityVerdict)
         .orderBy("doc_id")),
 
     // Streaming Count-Min sketch — the O(1)-state contrast to the
@@ -706,7 +653,7 @@ object StreamOps {
     // oracle is the equivalent batch interval self-join.
     "q_stream_join" -> ((s, d) =>
       runStreamN(s, d, "append", copies = 1, tableName = "events",
-                 schema = None, nSources = 2, sentinelNs = None) {
+                 nSources = 2, sentinelNs = None) {
         case Seq(sa, sb) =>
           val views = sa.filter(col("event_type") === "view")
             .select(col("user_id"), col("event_id").as("view_id"),
@@ -742,7 +689,7 @@ object StreamOps {
     // bound: O(watermark horizon), as for the inner join.
     "q_stream_join_left" -> ((s, d) =>
       runStreamN(s, d, "append", copies = 1, tableName = "events",
-                 schema = None, nSources = 2,
+                 nSources = 2,
                  sentinelNs = Some(4102444800000000000L)) {
         case Seq(sa, sb) =>
           val views = sa
@@ -777,7 +724,7 @@ object StreamOps {
     // fixture and shares q_stream_tumbling's oracle.
     "q_stream_tumbling_append" -> ((s, d) =>
       runStreamN(s, d, "append", copies = 1, tableName = "events",
-                 schema = None, nSources = 1,
+                 nSources = 1,
                  // 2100-01-01 in ns — later than any fixture event
                  sentinelNs = Some(4102444800000000000L)) {
         case Seq(src) =>
@@ -810,7 +757,7 @@ object StreamOps {
     // appears.
     "q_stream_session" -> ((s, d) =>
       runStreamN(s, d, "append", copies = 1, tableName = "events",
-                 schema = None, nSources = 1,
+                 nSources = 1,
                  // 2100-01-01 in ns — later than any fixture event
                  sentinelNs = Some(4102444800000000000L),
                  bigState = true) {
@@ -866,7 +813,7 @@ object StreamOps {
     // executor count at 100 TB.
     "q_stream_funnel_state" -> ((s, d) =>
       runStreamN(s, d, "append", copies = 1, tableName = "events",
-                 schema = None, nSources = 1,
+                 nSources = 1,
                  // 2100-01-01 in ns — later than any fixture event
                  sentinelNs = Some(4102444800000000000L)) {
         case Seq(src) =>
@@ -890,7 +837,7 @@ object StreamOps {
     // greedy chained-min replay.
     "q_stream_funnel_tws" -> ((s, d) =>
       runStreamN(s, d, "append", copies = 1, tableName = "events",
-                 schema = None, nSources = 1,
+                 nSources = 1,
                  sentinelNs = Some(4102444800000000000L),
                  forceRocks = true) {
         case Seq(src) =>

@@ -43,7 +43,7 @@ class ContractionGateSpec extends SparkTestBase {
     try {
       val df = SparkEntry.queries(name)(spark, dir)
       val cols = df.columns.sorted.map(col)
-      df.select(cols: _*).collect()
+      df.select(cols.toIndexedSeq: _*).collect()
         .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
     } finally {
       System.clearProperty("graft.dedup.contract")
@@ -69,7 +69,7 @@ class ContractionGateSpec extends SparkTestBase {
     MemoLog.release()
     val distinctFrac = {
       val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-      val r = docs.agg(count(lit(1)), countDistinct(md5(col("text")))).head
+      val r = docs.agg(count(lit(1)), countDistinct(md5(col("text")))).head()
       1.0 - r.getLong(1).toDouble / r.getLong(0)
     }
     assert(distinctFrac < graft.ops.DedupOps.ContractionGate,

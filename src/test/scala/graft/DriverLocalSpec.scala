@@ -27,9 +27,18 @@ class DriverLocalSpec extends graft.SparkTestBase {
     val path = s"$sf001/embeddings.parquet"
     val df = spark.read.parquet(path)
     val rows = df.count()
-    val elems = df.selectExpr("sum(size(embedding))").head.getLong(0)
-    assert(DriverLocal.footerBytes(spark, path, rowBytes = 8,
-      listCol = "embedding", elemBytes = 8).contains((rows + elems) * 8))
+    val elems = df.selectExpr("sum(size(embedding))").head().getLong(0)
+    withTempDir("graft_part_emb_") { dir =>
+      // a k=v partitioned copy holds the same rows and elements
+      val parted = s"$dir/embeddings.parquet"
+      df.selectExpr("*", "vec_id % 3 AS k").write.partitionBy("k")
+        .parquet(parted)
+      assert(new java.io.File(parted).list().count(_.startsWith("k=")) == 3)
+      for (p <- Seq(path, parted))
+        assert(DriverLocal.footerBytes(spark, p, rowBytes = 8,
+          listCol = "embedding", elemBytes = 8)
+          .contains((rows + elems) * 8), p)
+    }
   }
 
   test("an unreadable input has no estimate and takes the distributed path") {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.functions.TextFunctions.fasttextBuckets
 
 /** The native FastTextBuckets expression must agree with an in-memory

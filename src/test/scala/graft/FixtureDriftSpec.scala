@@ -19,11 +19,12 @@ class FixtureDriftSpec extends SparkTestBase {
       s"else this round:\n  ${drift.mkString("\n  ")}")
   }
 
-  test("streaming sniff agrees with the batch read") {
-    val sniffed = graft.streaming.StreamOps.eventsTsType(spark, sf0001)
-    val raw = spark.read.parquet(s"$sf0001/events.parquet")
-      .schema("ts").dataType
-    assert(sniffed == raw, s"stream sniff $sniffed != batch raw $raw")
+  test("the stream's read schema agrees with the batch read") {
+    for (t <- Seq("events", "documents")) {
+      val stream = graft.streaming.StreamOps.fixture(spark, sf0001, t).schema
+      val raw = spark.read.parquet(s"$sf0001/$t.parquet").schema
+      assert(stream == raw, s"$t: stream reads $stream, batch $raw")
+    }
   }
 
   test("a missing fixture dir is not drift — the preamble must let " +

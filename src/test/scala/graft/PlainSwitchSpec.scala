@@ -43,15 +43,18 @@ class PlainSwitchSpec extends SparkTestBase {
   }
 
   test("spread: a hash repartition by default, the bare read under plain") {
-    def spread = ops.spreadTable(spark, sf0001, "orders", $"o_orderkey")
+    def spread(d: String) = ops.spreadTable(spark, d, "orders", $"o_orderkey")
       .select($"o_orderkey", $"o_totalprice")
     def repartitions(df: DataFrame) = df.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.catalyst.plans.logical
         .RepartitionByExpression => r
     }
-    bothWays(spread)
-    assert(repartitions(spread).size == 1)
-    assert(withPlain(repartitions(spread)).isEmpty)
+    bothWays(spread(sf0001))
+    // a file: URI names the same fixture and gets the same gate decision
+    for (d <- Seq(sf0001, s"file:$sf0001")) {
+      assert(repartitions(spread(d)).size == 1, d)
+      assert(withPlain(repartitions(spread(d))).isEmpty, d)
+    }
   }
 
   test("range join: binned by default, the nested-loop plan under plain") {

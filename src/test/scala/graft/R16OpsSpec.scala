@@ -246,7 +246,8 @@ class R16OpsSpec extends SparkTestBase {
         ops.DedupOps.queries("q_dedup_embed")(spark, sf0001)
           .write.format("noop").mode("overwrite").save()
       val df = ops.DedupOps.queries("q_dedup_semantic")(spark, sf0001)
-      val out = df.select(df.columns.sorted.map(col): _*).collect()
+      val out = df.select(df.columns.sorted.map(col).toIndexedSeq: _*)
+        .collect()
         .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
       MemoLog.release()
       out

@@ -57,7 +57,7 @@ class R17OpsSpec extends SparkTestBase {
     withTempDir("graft_empty_stream_") { tmp =>
       spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
-        graft.streaming.StreamOps.documentsSchema)
+        ops.table(spark, sf0001, "documents").schema)
         .repartition(1)
         .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
       val got = graft.streaming.StreamOps

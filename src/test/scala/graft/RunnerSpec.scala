@@ -79,11 +79,6 @@ class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("footer schema equals inference for a file, a directory and a glob") {
-    for (p <- Seq(lineitem, laghos, s"$laghos/*.parquet"))
-      assert(Main.scan(spark, p).schema == spark.read.parquet(p).schema, p)
-  }
-
   /** Laghos-schema variants that must not share the Laghos template: an
     * extra column, and `x` stored as FLOAT. */
   private lazy val laghosVariants: Seq[String] =
@@ -456,7 +451,8 @@ class RunnerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       val cols = rg.getColumns.asScala
         .map(c => c.getPath.toDotString -> c).toMap
       val survives = box.forall { case (name, (lo, hi)) =>
-        val st = cols(name).getStatistics
+        val st: org.apache.parquet.column.statistics.Statistics[_] =
+          cols(name).getStatistics
         st.isEmpty || !st.hasNonNullValue ||
           (st.genericGetMax.asInstanceOf[java.lang.Double] > lo &&
            st.genericGetMin.asInstanceOf[java.lang.Double] < hi)

@@ -132,7 +132,7 @@ class SemanticPqSpec extends SparkTestBase {
       var cents: Seq[(Long, Array[Double])] = vecs.filter(_._1 < K)
         .map { case (id, _, v) => (id, subs(unit(v))(m)) }.toSeq
       for (_ <- 1 to ITERS) {
-        val asg = train.map { case (id, _, v) =>
+        val asg = train.map { case (_, _, v) =>
           val sv = subs(unit(v))(m)
           val cw = cents.minBy { case (c, w) => (sqDist(sv, w), c) }._1
           (cw, sv)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.io.Sources
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Round-trip + quarantine laws for the non-parquet sources. */
