@@ -1,27 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import Yardstick.{jnum, jstr, median}
 object Bench {
-  /** Per-window scheduler telemetry: job count and summed executor task
-    * run time since the last snapshot. Listener events post
-    * asynchronously (millisecond-scale lag after an action returns), so
-    * a window's numbers can shed/absorb a trailing stage — fine for
-    * attribution, which compares seconds, not milliseconds. */
-  private final class SchedStats
-      extends org.apache.spark.scheduler.SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    override def onJobStart(
-        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      jobs.incrementAndGet(); ()
-    }
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = e.stageInfo.taskMetrics
-      if (m != null) { taskMs.addAndGet(m.executorRunTime); () }
-    }
-    def snap(): (Long, Long) = (jobs.get, taskMs.get)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SessionDefaults.builder(SessionDefaults.cpus).getOrCreate()
@@ -68,16 +48,8 @@ object Bench {
     }
     // JVM GC time spent INSIDE the most recent once() timed window
     // (after the deliberate between-query collection) — per-sample
-    // attribution for the flagship tail below. lastRunJobs/lastRunTaskSec
-    // carry the scheduler-side view of the same window (SchedStats): an
-    // official row far above its standalone number decomposes from the
-    // artifact alone — same jobs + same task_sec + bigger wall = the
-    // host/scheduler window was slow; more jobs = plan-side drift.
+    // attribution for the flagship tail below.
     var lastRunGcMs = 0L
-    var lastRunJobs = 0L
-    var lastRunTaskSec = 0.0
-    val sched = new SchedStats
-    spark.sparkContext.addSparkListener(sched)
     def once(name: String,
              fn: (SparkSession, String) => DataFrame): Double = {
       // Collect cross-query garbage (shuffle bookkeeping, freed page-cache
@@ -91,10 +63,7 @@ object Bench {
       // reset BEFORE the try: a failed run's early return must not leave
       // the previous sample's GC delta to be stamped on this one
       lastRunGcMs = 0L
-      lastRunJobs = 0L
-      lastRunTaskSec = 0.0
       val g0 = gcMillis()
-      val (j0, tm0) = sched.snap()
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable =>
@@ -106,9 +75,6 @@ object Bench {
       }
       val dt = (System.nanoTime() - t0) / 1e9
       lastRunGcMs = gcMillis() - g0
-      val (j1, tm1) = sched.snap()
-      lastRunJobs = j1 - j0
-      lastRunTaskSec = (tm1 - tm0) / 1e3
       graft.streaming.StreamOps.takeStateMetrics()
         .foreach(m => streamState(name) = m)
       dt
@@ -132,26 +98,6 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Per-FAMILY host yardstick (r12 postmortem): one calibration pair
-    // bracketing a 32-minute suite cannot say how fast the host was when
-    // a given family ran — that round benched two dedup queries at 13×
-    // their true cost because the host's slow window covered the early
-    // alphabet only (calib 1.416 at start, 0.116 at end). The suite runs
-    // alphabetically, so a single ~0.5 s probe at each family-prefix
-    // boundary stamps every family with the host speed of ITS OWN
-    // window; the judge normalizes per family from the artifact alone
-    // instead of re-running outliers.
-    def family(n: String): String = n.stripPrefix("q_").split("_")(0)
-    def calibQuick(): Double = Yardstick.calibQuick(spark)
-    // IO-side host yardstick (r16 postmortem; see graft.Yardstick): the
-    // CPU-bound calibration cannot see disk/page-cache degradation, and
-    // that blind spot cost two rounds of analysis — q_dedup_incremental's
-    // official r16 row read 41.9 s warm against 3.0 s re-measured at
-    // HEAD, and the artifact could not say whether the plan or the
-    // host's IO was at fault. One probe per family boundary, per pass.
-    val ioProbeFile = Yardstick.probeFileFor(sfDir)
-    type IoProbe = Yardstick.IoProbe
-    def ioProbe(): IoProbe = Yardstick.ioProbe(ioProbeFile)
     // Shared-infrastructure prebuild, once per pass (VERDICT r17 #1):
     // the suite memoizes big shared frames (shingle sets, band pairs,
     // the CC fixpoint, PQ index, k-means cells) and used to charge each
@@ -179,244 +125,35 @@ object Bench {
         }
         (System.nanoTime() - t0) / 1e9
       }
-    // Hot-row attribution (VERDICT r18 #3): the family calib is stamped
-    // once at the family-prefix boundary, but a family like dedup spans
-    // minutes — it cannot say how fast the host was when a given
-    // multi-second query ran, which left q_dedup_incremental's official
-    // 10.6 s vs the builder's 3.2 s unattributed for three rounds. The
-    // hottest rows (top-6 by cold time — the contested set) get the
-    // flagship-tail treatment IN the warm passes: a throughput
-    // mini-calibration immediately before and after the query, plus the
-    // per-window GC/jobs/task_sec every query now carries. ~0.5 s × 12
-    // brackets × passes of overhead, outside every timed window.
-    case class HotSample(sec: Double, calibBefore: Double,
-                         calibAfter: Double, gcMs: Long, jobs: Long,
-                         taskSec: Double)
-    val hotDetail =
-      scala.collection.mutable.Map[String,
-        scala.collection.mutable.ArrayBuffer[HotSample]]()
-    def runPass(label: String, hot: Set[String] = Set.empty):
-        (Seq[(String, Double)], Double,
-         Seq[(String, Double)], Seq[(String, IoProbe)]) = {
+    def runPass(label: String): (Seq[(String, Double)], Double) = {
       val shared = sharedBuilds(s"shared:$label")
-      val fams = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-      val ios = scala.collection.mutable.ArrayBuffer[(String, IoProbe)]()
-      var lastFam = ""
-      val p = named.map { case (n, fn) =>
-        val f = family(n)
-        if (f != lastFam) {
-          lastFam = f; fams += f -> calibQuick(); ios += f -> ioProbe()
-        }
-        if (hot(n)) {
-          val cb = calibQuick()
-          val sec = once(n, fn)
-          val ca = calibQuick()
-          hotDetail.getOrElseUpdate(n,
-            scala.collection.mutable.ArrayBuffer()) +=
-            HotSample(sec, cb, ca, lastRunGcMs, lastRunJobs, lastRunTaskSec)
-          n -> sec
-        } else n -> once(n, fn)
-      }
-      (p, shared, fams.toSeq, ios.toSeq)
+      (named.map { case (n, fn) => n -> once(n, fn) }, shared)
     }
-    val (cold, sharedCold, famCold, ioCold) = runPass("cold")
-    // top-10 (was top-6): VERDICT r19 #1 grades the calib gate below on
-    // "any top-10 warm row", so the bracket coverage must reach that far.
-    val hotSet = cold.filter(_._2 >= 0).sortBy(-_._2).take(10)
-      .map(_._1).toSet
-    def releaseCaches(): Unit = {
-      // (called BEFORE each warm pass, not after: the last pass's frames
-      // stay warm so the IO-gate retries below measure queries, not
-      // shared-frame rebuilds; the post-everything release is explicit)
-      // Release every frame a pass persisted (session memos, per-query
-      // persist()s, completed stream runs' sink dirs): carrying them
-      // into the next pass doubles cached storage in the bench heap and
-      // the resulting GC pressure distorts warm timings far more than
-      // the cache reuse helps them.
-      SessionDefaults.release(spark)
-    }
+    val (cold, sharedCold) = runPass("cold")
     // Warm passes: codegen/JIT/page-cache warm — the steady-state number a
     // long-lived cluster session sees. Per-query local[*] timings swing up
     // to 1.5x run-to-run (GC pauses, page-cache state), so a single warm
-    // pass is not a trustworthy round-over-round comparator: run N warm
-    // passes and report the per-query MEDIAN.
+    // pass is not a trustworthy comparator: run N warm passes and report
+    // the per-query MEDIAN.
     val warmN = sys.env.getOrElse("SPARK_GRAFT_WARM_PASSES", "3").toInt
     // One calibration PER WARM PASS: the host can drift ~2x WITHIN a
     // bench run (measured calib 0.30 -> 0.16 across one round-9 run), so
     // a start/end pair cannot say how fast the host was when a given
-    // pass ran. Per-pass yardsticks let the gate ratio normalize each
-    // flagship sample against the host speed of ITS OWN pass.
+    // pass ran.
     val warmPasses = (1 to warmN).map { i =>
-      releaseCaches()
-      val (p, shared, fams, ios) = runPass(s"warm$i", hotSet)
-      (p, calibrate(), fams, ios, shared)
+      // Release every frame the previous pass persisted (session memos,
+      // per-query persist()s, completed stream runs' sink dirs):
+      // carrying them into the next pass doubles cached storage in the
+      // bench heap and the resulting GC pressure distorts warm timings
+      // far more than the cache reuse helps them.
+      SessionDefaults.release(spark)
+      val (p, shared) = runPass(s"warm$i")
+      (p, calibrate(), shared)
     }
     val calibPasses = warmPasses.map(_._2)
-    val sharedWarm = warmPasses.map(_._5)
-    def median(xs: Seq[Double]): Double = {
-      val ok = xs.filter(_ >= 0).sorted
-      if (ok.isEmpty) -1.0
-      else ok(ok.size / 2) // odd N -> true median; even N -> upper median
-    }
-    val famNames = famCold.map(_._1)
-    val ioWarmSeries = famNames.map { f =>
-      f -> warmPasses.map(_._4.toMap.apply(f))
-    }
-    // ---- IO quality gate (VERDICT r17 task 5) ----
-    // The IO probes existed since r17 but nothing ACTED on them: a pass
-    // whose family window shows fsync > 3× the run median (writeback /
-    // compaction contention) or reread < 1/3 of it (page cache evicted,
-    // disk contended) still landed its samples in the official medians,
-    // and the round burned judge+builder time re-measuring. Now such a
-    // family is re-run once on a PROBE-VERIFIED clean window (bounded:
-    // ≤ 3 families, ≤ 2 extra probe attempts each) and the flagged
-    // passes' samples are replaced for that family; the artifact records
-    // what was retried and why (no silent substitution).
-    val allIo = ioCold.map(_._2) ++ ioWarmSeries.flatMap(_._2)
-    val medFsync = median(allIo.map(_.fsyncMs).filter(_ > 0))
-    val medReread = median(allIo.map(_.rereadMbps).filter(_ > 0))
-    def ioFlagged(p: IoProbe): Boolean =
-      Yardstick.ioFlagged(p, medFsync, medReread)
-    val ioWarmMap = ioWarmSeries.toMap
-    val flaggedFams: Seq[(String, Seq[Int])] = famNames.map { f =>
-      f -> ioWarmMap(f).zipWithIndex.collect {
-        case (p, i) if ioFlagged(p) => i
-      }
-    }.filter(_._2.nonEmpty)
-    val retries: Map[String, (Seq[Int], Map[String, Double], IoProbe)] =
-      flaggedFams.take(3).flatMap { case (f, passes) =>
-        var attempt = 0
-        var probe = ioProbe()
-        while (ioFlagged(probe) && attempt < 2) {
-          Thread.sleep(2000); probe = ioProbe(); attempt += 1
-        }
-        if (ioFlagged(probe)) {
-          System.err.println(s"[bench] io-gate: family $f flagged in " +
-            s"warm passes ${passes.mkString(",")} but no clean retry " +
-            "window found; medians keep all samples")
-          None
-        } else {
-          System.err.println(s"[bench] io-gate: re-running family $f " +
-            s"(flagged warm passes ${passes.mkString(",")})")
-          val times = named.filter { case (n, _) => family(n) == f }
-            .map { case (n, fn) => n -> once(n, fn) }.toMap
-          Some(f -> ((passes, times, probe)))
-        }
-      }.toMap
-    // ---- Hot-row calib gate (VERDICT r19 #1) ----
-    // The io_gate above acts on FAMILY-level IO probes; hot rows
-    // additionally carry per-sample CPU calib brackets (HotSample). For
-    // three rounds running, q_dedup_incremental's official row was 3-4×
-    // its clean-window number, and the hot_rows telemetry could PROVE
-    // the host contention (calib_after 4-5× calib_before mid-sample)
-    // but nothing ACTED on it — the judge still had to do forensics.
-    // Now a hot sample whose bracket shows the host slowing mid-query
-    // (max/min > 1.5) or running entirely inside a slow window
-    // (min > 2× the run's median quick-calib) is dropped from the
-    // median, and the row re-runs once on a CALIB-VERIFIED clean window
-    // (bounded: ≤ 4 rows, ≤ 2 wait attempts, ≤ 2 run attempts each);
-    // the artifact records what was dropped/retried and why — no
-    // silent substitution, same contract as the io_gate.
-    val runCalibMed = median(warmPasses.flatMap(_._3.map(_._2)))
-    def calibDirty(cb: Double, ca: Double): Boolean = {
-      val hi = math.max(cb, ca); val lo = math.max(math.min(cb, ca), 1e-9)
-      hi / lo > 1.5 || (runCalibMed > 0 && lo > 2.0 * runCalibMed)
-    }
-    case class HotRetry(sec: Double, calibBefore: Double,
-                        calibAfter: Double, used: Boolean)
-    case class HotGate(dirtyIdx: Seq[Int], retriesRun: Seq[HotRetry])
-    val hotGate: Map[String, HotGate] = {
-      val flagged = hotDetail.toSeq.map { case (n, ss) =>
-        n -> ss.zipWithIndex.collect {
-          case (s, i) if s.sec >= 0 &&
-            calibDirty(s.calibBefore, s.calibAfter) => i
-        }.toSeq
-      }.filter(_._2.nonEmpty)
-      // worst contamination first: rows with the most dirty samples,
-      // then the slowest
-      val ordered = flagged.sortBy { case (n, idx) =>
-        (-idx.size, -hotDetail(n).map(_.sec).max)
-      }.take(4)
-      val fnByName = named.toMap
-      ordered.map { case (n, dirtyIdx) =>
-        val rs = scala.collection.mutable.ArrayBuffer[HotRetry]()
-        var accepted = false
-        var runAttempt = 0
-        while (!accepted && runAttempt < 2) {
-          // wait (bounded) for a clean window before burning a run
-          var waitAttempt = 0
-          var cb = calibQuick()
-          while (runCalibMed > 0 && cb > 1.5 * runCalibMed &&
-                 waitAttempt < 2) {
-            Thread.sleep(2000); cb = calibQuick(); waitAttempt += 1
-          }
-          val sec = once(n, fnByName(n))
-          val ca = calibQuick()
-          val clean = sec >= 0 && !calibDirty(cb, ca)
-          rs += HotRetry(sec, cb, ca, clean)
-          accepted = clean
-          runAttempt += 1
-        }
-        if (!accepted)
-          System.err.println(s"[bench] calib-gate: $n dirty samples " +
-            s"${dirtyIdx.mkString(",")} but no clean retry achieved; " +
-            "medians keep all samples")
-        else
-          System.err.println(s"[bench] calib-gate: $n replaced dirty " +
-            s"samples ${dirtyIdx.mkString(",")} with a clean-window rerun")
-        n -> HotGate(dirtyIdx, rs.toSeq)
-      }.toMap
-    }
+    val sharedWarm = warmPasses.map(_._3)
     val warm = named.map { case (n, _) =>
-      val samples = warmPasses.map(_._1.toMap.apply(n))
-      val famFlagged = retries.get(family(n)).map(_._1).getOrElse(Nil)
-      val famTimes = retries.get(family(n))
-        .flatMap(_._2.get(n)).toSeq
-      // calib-dirty samples are only EXCLUDED when a clean retry exists
-      // to stand in — a gate that could not find a clean window keeps
-      // the original samples (loudly, above) rather than thinning the
-      // median to nothing.
-      val g = hotGate.get(n).filter(_.retriesRun.exists(_.used))
-      val calibDirtyIdx = g.map(_.dirtyIdx).getOrElse(Nil)
-      val calibTimes = g.map(_.retriesRun.filter(_.used).map(_.sec))
-        .getOrElse(Nil)
-      val kept = samples.zipWithIndex.collect {
-        case (v, i) if !famFlagged.contains(i) &&
-          !calibDirtyIdx.contains(i) => v
-      }
-      val all = kept ++ famTimes ++ calibTimes
-      n -> (if (all.exists(_ >= 0)) median(all) else median(samples))
-    }
-    // Machine-readable dirty-median tagging (VERDICT r20 #2): a hot row
-    // whose calib gate found dirty samples but NO clean retry window
-    // keeps the contaminated median as official (above) — r20's
-    // q_dedup_incremental published 37.6 s that way while its own
-    // hot_rows bracket proved a 25× host stall, and the judge had to do
-    // forensics. Emit, per such row, the dirty verdict plus the minimum
-    // across its CLEAN samples and all retry attempts (the best
-    // host-noise-free estimate the run holds) in a SIBLING map —
-    // queries_warm itself stays a flat name→seconds map (driver parse
-    // contract).
-    val warmDirty: Seq[(String, Double)] = hotGate.toSeq.collect {
-      case (n, g) if !g.retriesRun.exists(_.used) =>
-        val ss = hotDetail(n)
-        val cleanSamples = ss.zipWithIndex.collect {
-          case (s, i) if s.sec >= 0 && !g.dirtyIdx.contains(i) => s.sec
-        }
-        val candidates =
-          cleanSamples ++ g.retriesRun.filter(_.sec >= 0).map(_.sec)
-        n -> (if (candidates.nonEmpty) candidates.min
-              else ss.map(_.sec).filter(_ >= 0)
-                     .minOption.getOrElse(-1.0))
-    }.sortBy(_._1)
-    // Family yardsticks: cold pass raw; warm = per-family median across
-    // passes (and the full per-pass series, so a judge can line any
-    // pass's outlier up against the host speed of that same window).
-    val famWarm = famNames.map { f =>
-      f -> median(warmPasses.map(_._3.toMap.apply(f)))
-    }
-    val famWarmSeries = famNames.map { f =>
-      f -> warmPasses.map(_._3.toMap.apply(f))
+      n -> median(warmPasses.map(_._1.toMap.apply(n)))
     }
     def js(rs: Seq[(String, Double)]) =
       rs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -459,13 +196,12 @@ object Bench {
     def calibrateSingle(): Double =
       (1 to 3).map(_ => calibSingleOne()).sorted.apply(1)
     val flagshipFn = named.toMap.get("q_scan_flagship")
-    // Release the last warm pass's caches (kept through the io-gate
-    // retries above so retried rows measured queries, not rebuilds)
-    // BEFORE the tail: every prior round's gate samples ran against an
-    // empty block manager, and a heap full of persisted frames would
-    // shift the tail's GC regime — the 2× gate is compared round over
-    // round, so its measurement conditions must not drift.
-    releaseCaches()
+    // Release the last warm pass's caches BEFORE the tail: every prior
+    // round's gate samples ran against an empty block manager, and a heap
+    // full of persisted frames would shift the tail's GC regime — the 2×
+    // gate is compared round over round, so its measurement conditions
+    // must not drift.
+    SessionDefaults.release(spark)
     val calibSingleA = calibrateSingle()
     // Per-SAMPLE attribution (VERDICT r17 task 2): official tail samples
     // swung 0.27–0.46 s within one run whose bracket calibrations looked
@@ -482,8 +218,7 @@ object Bench {
           (sec, calibSingleOne(), lastRunGcMs)
         })
     val tailFirst = tailBatch()
-    // Tail gate (round 20 — the hot_gate standard applied to the GATE
-    // SAMPLES themselves): on a host that oscillates between windows, a
+    // Tail gate (round 20): on a host that oscillates between windows, a
     // 7-sample tail can land half its samples on a dirty window and the
     // official gate median inherits it (observed same-HEAD gates of
     // 0.91 and 1.55 hours apart, the difference fully explained by
@@ -496,22 +231,16 @@ object Bench {
     // of clean samples (all samples kept in the artifact; fallback to
     // the all-sample median if under 3 clean exist, recorded in
     // tail_gate).
-    def cleanOf(batch: Seq[(Double, Double, Long)])
-        : Seq[(Double, Double, Long)] = {
-      val floor = (calibSingleA +: batch.map(_._2)).filter(_ > 0).min
-      batch.filter(t => t._2 <= 1.5 * floor &&
-                        t._3 <= 0.15 * t._1 * 1000)
-    }
+    def cleanOf(batch: Seq[(Double, Double, Long)]) =
+      Yardstick.tailClean(calibSingleA, batch)
     val (flagshipTailDetail, tailResampled) =
       if (cleanOf(tailFirst).size >= 4) (tailFirst, false)
       else (tailFirst ++ tailBatch(), true)
     val tailClean = cleanOf(flagshipTailDetail)
     val flagshipTailSamples = flagshipTailDetail.map(_._1)
     val calibSingleB = calibrateSingle()
-    val tailFallback = tailClean.size < 3
-    val flagshipTail =
-      if (!tailFallback) median(tailClean.map(_._1))
-      else median(flagshipTailSamples)
+    val (flagshipTail, tailFallback) =
+      Yardstick.tailMedian(tailClean.map(_._1), flagshipTailSamples)
     // The all-sample median rides beside the clean median (ADVICE r20):
     // the clean filter only ever drops SLOW samples, so a widening
     // clean-vs-all gap is the signal that a plan-side regression is
@@ -521,7 +250,7 @@ object Bench {
       s"""{"clean_used":${tailClean.size},""" +
       s""""dropped":${flagshipTailSamples.size - tailClean.size},""" +
       s""""resampled":$tailResampled,"fallback_all":$tailFallback,""" +
-      s""""median_all":${Yardstick.jnum("%.3f", tailMedianAll)}}"""
+      s""""median_all":${jnum("%.3f", tailMedianAll)}}"""
     val vsRaw =
       if (flagshipTail > 0) flagshipTail / baselineSec
       else if (flagshipWarm > 0) flagshipWarm / baselineSec else -1.0
@@ -550,77 +279,18 @@ object Bench {
     // misattribution signal the r17 verdict asked the artifact to
     // expose (e.g. a frame the prebuild list misses).
     val memoBuilds = MemoLog.drain()
-    def jq(s: String): String = Yardstick.jstr(s)
     val memoJs = memoBuilds.map { b =>
-      s"""{"tag":${jq(b.tag)},"sec":${Yardstick.jnum("%.3f", b.selfSec)}""" +
-      s""","total_sec":${Yardstick.jnum("%.3f", b.totalSec)}""" +
-      s""","by":${jq(b.by)}}"""
+      s"""{"tag":${jstr(b.tag)},"sec":${jnum("%.3f", b.selfSec)}""" +
+      s""","total_sec":${jnum("%.3f", b.totalSec)}""" +
+      s""","by":${jstr(b.by)}}"""
     }.mkString("[", ",", "]")
     val sharedJs =
-      s"""{"cold":${Yardstick.jnum("%.3f", sharedCold)},"warm":${
-        sharedWarm.map(Yardstick.jnum("%.3f", _)).mkString("[", ",", "]")}}"""
-    val retriedJs = retries.toSeq.sortBy(_._1).map {
-      case (f, (passes, times, probe)) =>
-        s"""${jq(f)}:{"flagged_passes":${passes.mkString("[", ",", "]")}""" +
-        s""","probe":${probe.js},"times":${js(times.toSeq.sortBy(_._1))}}"""
-    }.mkString("{", ",", "}")
-    // families_retried counts retried FAMILIES; passes_retried counts
-    // the (family, pass) WINDOWS whose samples the retry replaced — the
-    // substitution volume a reader audits (the first artifact conflated
-    // the two under one name).
-    val ioGateJs =
-      s"""{"med_fsync_ms":${Yardstick.jnum("%.2f", medFsync)}""" +
-      s""","med_reread_mbps":${Yardstick.jnum("%.1f", medReread)}""" +
-      s""","families_retried":${retries.size}""" +
-      s""","passes_retried":${retries.valuesIterator.map(_._1.size).sum}""" +
-      s""","retried":$retriedJs}"""
-    val tailCalibJs = flagshipTailDetail.map(t => Yardstick.jnum("%.3f", t._2))
+      s"""{"cold":${jnum("%.3f", sharedCold)},"warm":${
+        sharedWarm.map(jnum("%.3f", _)).mkString("[", ",", "]")}}"""
+    val tailCalibJs = flagshipTailDetail.map(t => jnum("%.3f", t._2))
       .mkString("[", ",", "]")
     val tailGcJs = flagshipTailDetail.map(_._3).mkString("[", ",", "]")
-    val famSeriesJs = famWarmSeries.map { case (f, xs) =>
-      s"\"$f\":${xs.mkString("[", ",", "]")}"
-    }.mkString("{", ",", "}")
-    // Per-warm-pass bracket detail for the hottest rows: a judge reads
-    // an outlier row against the host speed of ITS OWN seconds-wide
-    // window (calib_before/after), its in-window GC, and the scheduler
-    // view (jobs must match across passes — a run where they don't is
-    // plan drift, not noise; task_sec ≈ constant with wall swinging =
-    // host window; both swinging = real).
-    val hotJs = hotDetail.toSeq.sortBy(_._1).map { case (n, ss) =>
-      def arr(f: HotSample => String) =
-        ss.map(f).mkString("[", ",", "]")
-      s"""${jq(n)}:{"warm_samples":${arr(s => Yardstick.jnum("%.3f", s.sec))}""" +
-      s""","calib_before":${arr(s => Yardstick.jnum("%.3f", s.calibBefore))}""" +
-      s""","calib_after":${arr(s => Yardstick.jnum("%.3f", s.calibAfter))}""" +
-      s""","gc_ms":${arr(_.gcMs.toString)}""" +
-      s""","jobs":${arr(_.jobs.toString)}""" +
-      s""","task_sec":${arr(s => Yardstick.jnum("%.2f", s.taskSec))}}"""
-    }.mkString("{", ",", "}")
-    // The calib gate's audit trail: which samples were dropped and the
-    // bracket of every rerun, so a reader can re-derive the official
-    // median from hot_rows + this block alone.
-    val hotGateJs = {
-      val rows = hotGate.toSeq.sortBy(_._1).map { case (n, g) =>
-        val rjs = g.retriesRun.map(r =>
-          s"""{"sec":${Yardstick.jnum("%.3f", r.sec)}""" +
-          s""","calib_before":${Yardstick.jnum("%.3f", r.calibBefore)}""" +
-          s""","calib_after":${Yardstick.jnum("%.3f", r.calibAfter)}""" +
-          s""","used":${r.used}}""").mkString("[", ",", "]")
-        s"""${jq(n)}:{"dirty_idx":${g.dirtyIdx.mkString("[", ",", "]")}""" +
-        s""","retries":$rjs}"""
-      }.mkString("{", ",", "}")
-      s"""{"calib_med":${Yardstick.jnum("%.3f", runCalibMed)}""" +
-      s""","rows_gated":${hotGate.size},"rows":$rows}"""
-    }
-    val ioColdJs = ioCold.map { case (f, p) => s"\"$f\":${p.js}" }
-      .mkString("{", ",", "}")
-    val ioSeriesJs = ioWarmSeries.map { case (f, ps) =>
-      s"\"$f\":${ps.map(_.js).mkString("[", ",", "]")}"
-    }.mkString("{", ",", "}")
-    val warmDirtyJs = warmDirty.map { case (n, m) =>
-      s"""${jq(n)}:{"dirty":true,"clean_min":${Yardstick.jnum("%.3f", m)}}"""
-    }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${js(cold)},"queries_warm":${js(warm)},"queries_warm_dirty":$warmDirtyJs,"total_warm":$totalWarm,"warm_passes":$warmN,"calib_start":$calibStart,"calib_end":$calibEnd,"calib_passes":${calibPasses.mkString("[", ",", "]")},"calib_family_cold":${js(famCold)},"calib_family_warm":${js(famWarm)},"calib_family_warm_passes":$famSeriesJs,"io_family_cold":$ioColdJs,"io_family_warm_passes":$ioSeriesJs,"flagship_vs_baseline_raw":$vsRaw,"flagship_gate_calib":$vsCalib,"calib_single_ref":$calibSingleRef,"flagship_warm_tail":$flagshipTail,"flagship_tail_samples":${flagshipTailSamples.mkString("[", ",", "]")},"flagship_tail_calib":$tailCalibJs,"flagship_tail_gc_ms":$tailGcJs,"tail_gate":$tailGateJs,"calib_single":[$calibSingleA,$calibSingleB],"io_gate":$ioGateJs,"hot_rows":$hotJs,"hot_gate":$hotGateJs,"stream_state":$stateJs,"shared_builds_sec":$sharedJs,"memo_builds":$memoJs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${js(cold)},"queries_warm":${js(warm)},"total_warm":$totalWarm,"warm_passes":$warmN,"calib_start":$calibStart,"calib_end":$calibEnd,"calib_passes":${calibPasses.mkString("[", ",", "]")},"flagship_vs_baseline_raw":$vsRaw,"flagship_gate_calib":$vsCalib,"calib_single_ref":$calibSingleRef,"flagship_warm_tail":$flagshipTail,"flagship_tail_samples":${flagshipTailSamples.mkString("[", ",", "]")},"flagship_tail_calib":$tailCalibJs,"flagship_tail_gc_ms":$tailGcJs,"tail_gate":$tailGateJs,"calib_single":[$calibSingleA,$calibSingleB],"stream_state":$stateJs,"shared_builds_sec":$sharedJs,"memo_builds":$memoJs,"sf":"$sfDir"}"""
     println(line)
     // The driver keeps only the tail of stdout, which truncates the
     // per-query map (everything alphabetically early vanished from three

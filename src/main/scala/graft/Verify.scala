@@ -35,20 +35,11 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // Yardstick.jstr escapes every control char: a tab or CR in a
+    // query's oracle SQL would otherwise make every JSON reader of
+    // oracle_sql.json (tools/check.py among them) fail.
+    val json = SparkEntry.oracleSql.map { case (k, v) =>
+      s"${Yardstick.jstr(k)}: ${Yardstick.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Staged stream fixtures are memoized in RAM-backed scratch for the
     // session; release them at end-of-run so repeated Verify invocations

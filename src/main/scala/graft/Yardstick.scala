@@ -2,35 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Host-speed yardsticks shared by the measurement harnesses (Bench's
-  * per-family boundaries, ScaleStress's per-query rows). Two axes,
-  * because they demonstrably diverge on this infrastructure:
-  *
-  *  - [[calibQuick]] — CPU: one codegen'd range-sum across all cores
-  *    (~0.12–0.15 s on the nominal host; 2–5× that on degraded
-  *    windows).
-  *  - [[ioProbe]] — IO: the r16 postmortem's blind spot. A CPU-normal
-  *    window can still carry an evicted page cache or a contended
-  *    disk, which is invisible to the range-sum and made a 41.9 s-vs-
-  *    3.0 s bench row unattributable for a full round. Three
-  *    sub-probes, each attributing a distinct degradation mode:
-  *      reread_mbps — 16 MiB sequential re-read of a DEDICATED scratch
-  *        file on the same tmp disk: RAM-speed (GB/s) while the page
-  *        cache holds it, raw-disk speed when memory pressure evicted
-  *        it or the disk is contended. Deliberately NOT a fixture
-  *        part: rereading the fixture immediately before a timed query
-  *        warms exactly the page-cache state the probe is meant to
-  *        attribute, biasing every timed row toward warm-cache reads
-  *        (ADVICE r17) — the scratch file sees the same eviction
-  *        pressure without touching what the queries read;
-  *      shm_mbps — 32 MiB write+read in /dev/shm: RAM bandwidth and
-  *        allocation contention (the stream scratch lives there);
-  *      fsync_ms — 4 MiB durable write (FileChannel.force) on the tmp
-  *        disk: the latency shuffle spills and checkpoint commits pay.
-  *
-  * A probe must never kill its harness: any IO error degrades to -1
-  * fields, not a lost artifact.
-  */
+/** The measurement harnesses' shared pieces: the CPU host-speed
+  * yardstick [[calibQuick]] (one codegen'd range-sum across all cores,
+  * ~0.12–0.15 s on the nominal host; 2–5× that on degraded windows), the
+  * flagship tail's clean-sample gate, and the JSON formatting of every
+  * artifact writer (Bench, ScaleStress, Verify). */
 object Yardstick {
 
   /** CPU yardstick: median-free single sample (callers that want a
@@ -41,6 +17,32 @@ object Yardstick {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Median of the successful (≥ 0) samples, -1 when there are none:
+    * odd N takes the true median, even N the upper median. */
+  def median(xs: Seq[Double]): Double = {
+    val ok = xs.filter(_ >= 0).sorted
+    if (ok.isEmpty) -1.0
+    else ok(ok.size / 2) // odd N -> true median; even N -> upper median
+  }
+
+  /** The flagship tail's clean samples, each (wall s, single-thread
+    * mini-calib s, in-window GC ms): a sample is clean when its
+    * mini-calib is within 1.5× the fastest single-thread calib seen
+    * (`bracketCalib` or any sample's) and its GC stays under 15 % of
+    * its wall. */
+  def tailClean(bracketCalib: Double, batch: Seq[(Double, Double, Long)])
+      : Seq[(Double, Double, Long)] = {
+    val floor = (bracketCalib +: batch.map(_._2)).filter(_ > 0).min
+    batch.filter(t => t._2 <= 1.5 * floor &&
+                      t._3 <= 0.15 * t._1 * 1000)
+  }
+
+  /** The flagship tail's gate median: the clean samples' median, or the
+    * all-sample median when fewer than 3 are clean (the second field
+    * says it fell back). */
+  def tailMedian(clean: Seq[Double], all: Seq[Double]): (Double, Boolean) =
+    if (clean.size >= 3) (median(clean), false) else (median(all), true)
+
   /** Locale-pinned numeric formatting for artifact JSON: the f""
     * interpolator uses the JVM default locale, which renders comma
     * decimal separators (invalid JSON) on e.g. a de_DE JVM. */
@@ -48,7 +50,7 @@ object Yardstick {
     String.format(java.util.Locale.ROOT, fmt, Double.box(v))
 
   /** JSON string literal with full control-character escaping — the ONE
-    * escaper for every artifact writer (Bench, ScaleStress): two
+    * escaper for every artifact writer (Bench, ScaleStress, Verify): two
     * spellings had diverged, and the weaker one would have emitted raw
     * control bytes the first time a tag or error text carried one. */
   def jstr(s: String): String = {
@@ -63,100 +65,5 @@ object Yardstick {
       case c    => b.append(c)
     }
     b.append("\"").toString
-  }
-
-  case class IoProbe(rereadMbps: Double, shmMbps: Double,
-                     fsyncMs: Double) {
-    def js: String = "{\"reread_mbps\":" + jnum("%.1f", rereadMbps) +
-      ",\"shm_mbps\":" + jnum("%.1f", shmMbps) +
-      ",\"fsync_ms\":" + jnum("%.2f", fsyncMs) + "}"
-  }
-
-  /** The re-read probe target: a dedicated 16 MiB scratch file on the
-    * tmp disk, created once per JVM and shared by every probe. Its page
-    * cache residency tracks the run's memory pressure the same way the
-    * fixture's does, but probing it never pre-warms the bytes the timed
-    * queries actually read (the r17 bias). `sfDir` is accepted for call
-    * compatibility and ignored — the probe measures the HOST, not a
-    * fixture. */
-  def probeFileFor(sfDir: String): Option[java.io.File] =
-    probeScratch
-
-  private lazy val probeScratch: Option[java.io.File] =
-    try {
-      val p = java.nio.file.Files.createTempFile("graft_ioprobe_", ".bin")
-      val buf = new Array[Byte](1 << 20)
-      // deterministic non-zero fill; content is irrelevant to the timing
-      java.util.Arrays.fill(buf, 0x5a.toByte)
-      val out = new java.io.FileOutputStream(p.toFile)
-      try (0 until 16).foreach(_ => out.write(buf)) finally out.close()
-      p.toFile.deleteOnExit()
-      Some(p.toFile)
-    } catch { case _: Throwable => None }
-
-  /** The bench IO-gate predicate: a probe window is flagged when its
-    * fsync latency is > 3× the run median (writeback/compaction
-    * contention) or its reread bandwidth is < ⅓ of the run median (page
-    * cache evicted / disk contended). Invalid sub-probes (≤ 0 — the
-    * degraded -1 fields) never flag: a probe that could not measure
-    * must not trigger a retry. Kept here (pure, beside the probe) so
-    * the thresholds are spec-locked instead of living inline in
-    * Bench's pass loop. */
-  def ioFlagged(p: IoProbe, medFsync: Double, medReread: Double): Boolean =
-    (medFsync > 0 && p.fsyncMs > 3 * medFsync) ||
-    (medReread > 0 && p.rereadMbps > 0 && p.rereadMbps < medReread / 3)
-
-  def ioProbe(probeFile: Option[java.io.File]): IoProbe =
-    try ioProbeUnsafe(probeFile) catch {
-      case _: Throwable => IoProbe(-1.0, -1.0, -1.0)
-    }
-
-  private def ioProbeUnsafe(probeFile: Option[java.io.File]): IoProbe = {
-    val buf = new Array[Byte](1 << 20)
-    val reread = probeFile.filter(_.isFile).map { f =>
-      val n = math.min(f.length, 16L << 20)
-      val t0 = System.nanoTime()
-      val in = new java.io.FileInputStream(f)
-      try {
-        var left = n
-        while (left > 0) {
-          val r = in.read(buf, 0, math.min(buf.length.toLong, left).toInt)
-          if (r < 0) left = 0 else left -= r
-        }
-      } finally in.close()
-      (n / 1048576.0) / ((System.nanoTime() - t0) / 1e9)
-    }.getOrElse(-1.0)
-    val shmRoot = java.nio.file.Paths.get("/dev/shm")
-    val shm =
-      if (java.nio.file.Files.isWritable(shmRoot)) {
-        val p = java.nio.file.Files
-          .createTempFile(shmRoot, "graft_io_", ".bin")
-        try {
-          val mb = 32
-          val t0 = System.nanoTime()
-          val out = new java.io.FileOutputStream(p.toFile)
-          try (0 until mb).foreach(_ => out.write(buf))
-          finally out.close()
-          val in = new java.io.FileInputStream(p.toFile)
-          try { var r = 0; while (r >= 0) r = in.read(buf) }
-          finally in.close()
-          (2.0 * mb) / ((System.nanoTime() - t0) / 1e9)
-        } finally java.nio.file.Files.deleteIfExists(p)
-      } else -1.0
-    val fsync = {
-      val p = java.nio.file.Files.createTempFile("graft_io_", ".bin")
-      try {
-        val t0 = System.nanoTime()
-        val ch = java.nio.channels.FileChannel.open(p,
-          java.nio.file.StandardOpenOption.WRITE)
-        try {
-          (0 until 4).foreach(_ =>
-            ch.write(java.nio.ByteBuffer.wrap(buf)))
-          ch.force(true)
-        } finally ch.close()
-        (System.nanoTime() - t0) / 1e6
-      } finally java.nio.file.Files.deleteIfExists(p)
-    }
-    IoProbe(reread, shm, fsync)
   }
 }

@@ -37,10 +37,10 @@ object ParquetSource {
 
   /** The file index's data files: `_` and `.` names are not data, except
     * `k=v` partition directories. */
-  def isData(f: FileStatus): Boolean = {
-    val n = f.getPath.getName
+  def isData(f: FileStatus): Boolean = dataName(f.getPath.getName)
+
+  private def dataName(n: String): Boolean =
     !(n.startsWith("_") && !n.contains("=") || n.startsWith("."))
-  }
 
   /** The [[Listing]] of `path`, with the schema Spark's (non-merging)
     * parquet inference gives it, read from ONE footer on the driver
@@ -66,11 +66,10 @@ object ParquetSource {
          Option(fs.globStatus(p)).toSeq.flatten
        else Seq(fs.getFileStatus(p))).map(qualified)
     val summaries = Seq("_common_metadata", "_metadata")
-    // the file index's listing filter: hidden and `_` names are skipped,
-    // parquet's summary files are kept
+    // the file index's listing filter: a summary file, or a data name
+    // that is not a copy in progress
     def listed(n: String): Boolean = summaries.exists(n.startsWith) ||
-      !(n.startsWith("_") && !n.contains("=") || n.startsWith(".") ||
-        n.endsWith("._COPYING_"))
+      dataName(n) && !n.endsWith("._COPYING_")
     def leaves(st: FileStatus): Seq[FileStatus] =
       if (!st.isDirectory) Seq(st)
       else fs.listStatus(st.getPath).toSeq

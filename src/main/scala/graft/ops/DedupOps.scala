@@ -1028,27 +1028,6 @@ object DedupOps {
     (labels, iter)
   }
 
-  /** Stage-by-stage timing of the multi-signal edge pipeline (scale
-    * triage; invoked by tools.Profile with PROFILE_MS_STAGES=1). Each
-    * component is counted in dependency order, so a stage's printed time
-    * is its own marginal cost given its persisted inputs. */
-  private[graft] def profileMultiSignalStages(s: SparkSession, d: String)
-      : Unit = {
-    def t(tag: String)(df: => DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val n = df.count()
-      System.err.println(
-        f"[ms-stage] $tag%-22s ${(System.nanoTime() - t0) / 1e9}%7.2f s ($n rows)")
-    }
-    t("rawDoc2Rep")(rawDoc2Rep(s, d))
-    t("repHashedShingles")(repHashedShingles(s, d))
-    t("repBandPairsAll")(repBandPairsAll(s, d))
-    t("normedVecs")(normedVecs(s, d))
-    t("vec2content")(vec2content(s, d))
-    t("canonEmbedPairs")(canonEmbedPairs(s, d))
-    t("selfCosContents")(selfCosContents(s, d))
-  }
-
   val queries: Map[String, QB] = Map(
     // Exact dedup on normalized text: one representative (min doc_id) per
     // distinct normalized body. The aggregation carries only fixed-width

@@ -35,10 +35,6 @@ object Profile {
     }
     if (sys.env.get("PROFILE_EXPLAIN").contains("1"))
       fn(spark, sfDir).explain("formatted")
-    if (sys.env.get("PROFILE_MS_STAGES").contains("1")) {
-      graft.SessionDefaults.release(spark)
-      graft.ops.DedupOps.profileMultiSignalStages(spark, sfDir)
-    }
     spark.stop()
   }
 }

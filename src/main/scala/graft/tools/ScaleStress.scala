@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Yardstick.{jnum, jstr}
 
 /** 10×/100× scale stress: derives a ~sf1 (or ~sf10) dataset from sf0.1
   * by unioning K key-shifted copies into /tmp parquet, then times the
@@ -36,15 +37,6 @@ object ScaleStress {
       "replay still drives state to the staged key count (see " +
       "stream_state) while the watermark-evicted twin q_stream_dedup_wm " +
       "runs at full scale")))
-
-  /** Locale-pinned JSON number (see Yardstick.jnum). */
-  private def jstrNum(fmt: String, v: Double): String =
-    graft.Yardstick.jnum(fmt, v)
-
-  /** JSON string literal; control chars (Spark errors carry newlines and
-    * tabs) must be escaped or a recorded failure corrupts the artifact.
-    * Shared with Bench via Yardstick (one escaper for one format). */
-  private def jstr(s: String): String = graft.Yardstick.jstr(s)
 
   def main(args: Array[String]): Unit = {
     val copies = if (args.nonEmpty) args(0).toInt else 10
@@ -147,31 +139,11 @@ object ScaleStress {
     def calibrate(): Double =
       (1 to 3).map(_ => graft.Yardstick.calibQuick(spark)).sorted.apply(1)
     val calibStart = calibrate()
-    // Per-QUERY yardstick pair (CPU calib + IO probe, graft.Yardstick):
-    // the sweep's start/end bracket cannot attribute a single row's
-    // swing — q_stream_session repeat-measured 16 → 58 s at 100× across
-    // same-config runs whose brackets looked identical, and the r16
-    // stream chunks carried a 64% same-config spread nobody could
-    // pin to CPU vs page-cache vs disk. The probe costs ~0.3 s/query
-    // against multi-second 100× rows; the IO target is a dedicated
-    // scratch file (same tmp disk, same eviction pressure) — probing
-    // the fixture itself pre-warmed exactly the page-cache state the
-    // probe was meant to attribute (ADVICE r17).
-    val ioProbeFile = graft.Yardstick.probeFileFor(out)
     val sweepT0 = System.nanoTime()
-    // One row = one query run with its own yardstick pair; extracted so
-    // the io-gate below can RE-RUN a row whose pre-probe caught a dirty
-    // IO window (r18: q_graph_triangles' 100× row swung 42.6 → 96.9 s
-    // between same-code sweeps on ledger-attributed memo-build cost —
-    // i.e. the build ran inside a writeback/eviction window the probes
-    // recorded but nothing acted on).
-    case class RowRun(fields: String, pre: graft.Yardstick.IoProbe,
-                      wall: Double, failed: Boolean)
-    def runRow(name: String): RowRun = {
+    // One row = one query run, as its JSON object.
+    def runRow(name: String): String = {
       val cap = fixtureCaps.get(name).filter(_._1 < copies)
       val dir = cap.map(c => cappedDir(c._1)).getOrElse(out)
-      val qCalib = graft.Yardstick.calibQuick(spark)
-      val qIo = graft.Yardstick.ioProbe(ioProbeFile)
       // ScaleStress clears every cache between queries, so each row pays
       // its own shared-frame builds — the ledger itemizes them per row
       graft.MemoLog.setContext(name)
@@ -197,18 +169,15 @@ object ScaleStress {
         case Some(m) => println(s"[stress] $name FAILED: $m")
       }
       graft.SessionDefaults.release(spark)
-      import graft.Yardstick.jnum
       val memo = graft.MemoLog.drain().filter(_.selfSec >= 0.05)
       val memoJs =
         if (memo.isEmpty) None
         else Some("\"memo_builds\":" + memo.map(b =>
           s"""{"tag":${jstr(b.tag)},"sec":${jnum("%.3f", b.selfSec)}}""")
           .mkString("[", ",", "]"))
-      val fields = Seq(
+      Seq(
         Some(s""""wall_s":${jnum("%.3f", wall)}"""),
         nRows.map(r => s""""rows":$r"""),
-        Some(s""""calib":${jnum("%.3f", qCalib)}"""),
-        Some(s""""io":${qIo.js}"""),
         memoJs,
         Some(s""""peak_cached_bytes":$peak"""),
         state.map { case (r, b) =>
@@ -216,67 +185,9 @@ object ScaleStress {
         cap.map { case (c, why) =>
           s""""cap":{"copies":$c,"reason":${jstr(why)}}""" },
         err.map(m => s""""error":${jstr(m)}""")
-      ).flatten.mkString(",")
-      RowRun(fields, qIo, wall, err.isDefined)
+      ).flatten.mkString("{", ",", "}")
     }
-    val firstRuns = heavy.map(name => name -> runRow(name))
-    // ---- IO quality gate (VERDICT r18 #4 — Bench's io_gate, ported to
-    // the sweep): a row whose PRE-probe shows fsync > 3× the sweep
-    // median or reread < 1/3 of it ran (builds included) inside a dirty
-    // IO window; re-run it once on a probe-verified clean window
-    // (bounded: ≤ 3 rows, ≤ 2 probe attempts each) and keep BOTH
-    // results in the artifact — the retry replaces the headline row,
-    // the first run stays under "io_retry" (no silent substitution).
-    def dmedian(xs: Seq[Double]): Double = {
-      val ok = xs.filter(_ > 0).sorted
-      if (ok.isEmpty) -1.0 else ok(ok.size / 2)
-    }
-    val medFsync = dmedian(firstRuns.map(_._2.pre.fsyncMs))
-    val medReread = dmedian(firstRuns.map(_._2.pre.rereadMbps))
-    val flaggedNames = firstRuns.collect {
-      case (n, r) if !r.failed &&
-        graft.Yardstick.ioFlagged(r.pre, medFsync, medReread) => n
-    }
-    val retried: Map[String, RowRun] = flaggedNames.take(3).flatMap { n =>
-      var attempt = 0
-      var probe = graft.Yardstick.ioProbe(ioProbeFile)
-      while (graft.Yardstick.ioFlagged(probe, medFsync, medReread) &&
-             attempt < 2) {
-        Thread.sleep(2000)
-        probe = graft.Yardstick.ioProbe(ioProbeFile)
-        attempt += 1
-      }
-      if (graft.Yardstick.ioFlagged(probe, medFsync, medReread)) {
-        println(s"[stress] io-gate: $n flagged but no clean retry " +
-          "window found; keeping the first run")
-        None
-      } else {
-        println(s"[stress] io-gate: re-running $n on a clean window")
-        Some(n -> runRow(n))
-      }
-    }.toMap
-    val rows = firstRuns.map { case (n, r0) =>
-      retried.get(n) match {
-        // The retry replaces the headline row only if it SUCCEEDED and
-        // ITS OWN pre-probe (taken inside runRow, after the
-        // verification sleep churn) is still clean — a window that
-        // turned dirty between verification and the run could make the
-        // retry WORSE than the first run, and a crashed retry must
-        // never displace a successful measurement (ADVICE r19 + r20
-        // review). Both runs stay in the artifact either way.
-        case Some(r1)
-            if !r1.failed &&
-              !graft.Yardstick.ioFlagged(r1.pre, medFsync, medReread) =>
-          (n, s"{${r1.fields},\"io_retry\":{\"first_wall_s\":" +
-            jstrNum("%.3f", r0.wall) + s",\"first_io\":${r0.pre.js}}}")
-        case Some(r1) =>
-          println(s"[stress] io-gate: $n retry window turned dirty; " +
-            "keeping the first run as headline")
-          (n, s"{${r0.fields},\"io_retry_dirty\":{\"retry_wall_s\":" +
-            jstrNum("%.3f", r1.wall) + s",\"retry_io\":${r1.pre.js}}}")
-        case None => (n, s"{${r0.fields}}")
-      }
-    }
+    val rows = heavy.map(name => name -> runRow(name))
     // total_s stays SWEEP-ONLY (measured before the funnel identity
     // check below) so it remains comparable with prior rounds' sweeps;
     // the check's own cost rides in its JSON block.
@@ -310,7 +221,7 @@ object ScaleStress {
           val sec = (System.nanoTime() - t0) / 1e9
           Some(s""""funnel_xapi":{"rows":$na,"only_state":$onlyA,""" +
             s""""only_tws":$onlyB,"identical":${onlyA == 0 && onlyB == 0},""" +
-            s""""check_s":${jstrNum("%.1f", sec)}}""")
+            s""""check_s":${jnum("%.1f", sec)}}""")
         } catch { case e: Throwable =>
           Some(s""""funnel_xapi":{"error":${jstr(
             Option(e.getMessage).getOrElse(e.getClass.getName).take(160))}}""")
@@ -335,13 +246,9 @@ object ScaleStress {
         s""""cpus":${graft.SessionDefaults.cpus},""" +
         s""""shuffle_partitions":64,""" +
         s""""heap_max_bytes":${Runtime.getRuntime.maxMemory()},""" +
-        s""""total_s":${jstrNum("%.1f", totalS)},""" +
-        s""""calib_start":${jstrNum("%.3f", calibStart)},""" +
-        s""""calib_end":${jstrNum("%.3f", calibEnd)},""" +
-        s""""io_gate":{"med_fsync_ms":${jstrNum("%.2f", medFsync)},""" +
-        s""""med_reread_mbps":${jstrNum("%.1f", medReread)},""" +
-        s""""rows_flagged":${flaggedNames.size},""" +
-        s""""rows_retried":${retried.size}},""" +
+        s""""total_s":${jnum("%.1f", totalS)},""" +
+        s""""calib_start":${jnum("%.3f", calibStart)},""" +
+        s""""calib_end":${jnum("%.3f", calibEnd)},""" +
         funnelIdJs.map(_ + ",").getOrElse("") +
         s""""n_queries":${rows.size},""" +
         s""""n_failed":${failed.size},"failed":${failed.mkString("[", ",", "]")},""" +

@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Laws for the round-18 measurement plumbing — pure JVM, no Spark:
-  * the MemoLog self-time arithmetic the bench artifacts report, and
-  * the IO-gate predicate that decides which family windows re-run. */
+/** Laws for the measurement plumbing — pure JVM, no Spark: the MemoLog
+  * self-time arithmetic the bench artifacts report, the flagship tail
+  * gate that picks the samples the 2× gate is graded on, and the one
+  * JSON string escaper every artifact writer uses. */
 class HarnessSpec extends AnyFunSuite {
 
   test("MemoLog: nested builds report self time, total includes children") {
@@ -39,20 +40,36 @@ class HarnessSpec extends AnyFunSuite {
     assert(math.abs(selfSum - wall) < 0.01, s"$selfSum vs $wall")
   }
 
-  test("io gate: flags 3x fsync or 1/3 reread; invalid probes never flag") {
-    import Yardstick.{IoProbe, ioFlagged}
-    val medF = 12.0
-    val medR = 4000.0
-    val healthy = IoProbe(4100.0, 2800.0, 11.0)
-    assert(!ioFlagged(healthy, medF, medR))
-    // fsync contention window (the r17 q_stream_session signature)
-    assert(ioFlagged(IoProbe(4100.0, 2800.0, 150.0), medF, medR))
-    // page-cache eviction window (the r16 dedup signature)
-    assert(ioFlagged(IoProbe(900.0, 2800.0, 11.0), medF, medR))
-    // exactly-at-threshold is NOT flagged (strict inequalities)
-    assert(!ioFlagged(IoProbe(medR / 3, 2800.0, 3 * medF), medF, medR))
-    // degraded probes (-1 fields) and unmeasurable medians never flag
-    assert(!ioFlagged(IoProbe(-1.0, -1.0, -1.0), medF, medR))
-    assert(!ioFlagged(IoProbe(900.0, 2800.0, 150.0), -1.0, -1.0))
+  test("jstr escapes a quote, a backslash, newline, CR, tab and U+0001") {
+    assert(Yardstick.jstr("a\"b\\c\nd\re\tf\u0001g") ==
+      "\"a\\\"b\\\\c\\nd\\re\\tf\\u0001g\"")
+    assert(Yardstick.jstr("") == "\"\"")
+  }
+
+  // one tail sample: (wall s, single-thread mini-calib s, in-window GC ms)
+  private def sample(sec: Double, calib: Double = 0.15, gcMs: Long = 5L) =
+    (sec, calib, gcMs)
+
+  test("tail gate: a slow mini-calib or GC over 15 % of wall drops a sample") {
+    val ok = sample(0.30)
+    val slowCalib = sample(0.31, calib = 0.15 * 1.5 + 0.01)
+    val gcHeavy = sample(0.32, gcMs = 49L) // 49 ms > 15 % of 0.32 s
+    val atBounds = sample(0.33, calib = 0.15 * 1.5, gcMs = 49L)
+    assert(Yardstick.tailClean(0.15, Seq(ok, slowCalib, gcHeavy, atBounds)) ==
+      Seq(ok, atBounds))
+    // the floor is the fastest calib seen, a sample's or the bracket's
+    assert(Yardstick.tailClean(0.40, Seq(ok, slowCalib)) == Seq(ok))
+  }
+
+  test("tail gate: under 3 clean samples, the all-sample median") {
+    val all = Seq(0.9, 0.1, 0.8, 0.2, 0.7, 0.3, 0.6)
+    assert(Yardstick.tailMedian(Seq(0.1, 0.2), all) == ((0.6, true)))
+    assert(Yardstick.tailMedian(Seq(0.1, 0.2, 0.3), all) == ((0.2, false)))
+  }
+
+  test("median: an even N takes the upper median; failed (-1) runs drop out") {
+    assert(Yardstick.median(Seq(0.4, 0.1, 0.3, 0.2)) == 0.3)
+    assert(Yardstick.median(Seq(0.3, -1.0, 0.1, 0.2)) == 0.2)
+    assert(Yardstick.median(Seq(-1.0)) == -1.0)
   }
 }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** [[Plain]]: on the same inputs each special path takes its own side
   * by default and Spark's plain side under `spark.graft.plain=true`,
   * with the same rows both ways; and the engine reads no other
-  * `spark.graft.*` key. */
+  * `spark.graft.*` key, and no environment variable or system property
+  * beyond nine named ones. */
 class PlainSwitchSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -92,11 +93,22 @@ class PlainSwitchSpec extends SparkTestBase {
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     val src = files(new java.io.File("src/main/scala"))
     assert(src.size > 20, s"${src.size} sources under src/main/scala")
-    val keys = src.flatMap { f =>
+    val texts = src.map { f =>
       val s = scala.io.Source.fromFile(f, "UTF-8")
-      try quoted.findAllMatchIn(s.mkString).map(_.group(1)).toList
-      finally s.close()
-    }.toSet
+      try s.mkString finally s.close()
+    }
+    val keys = texts.flatMap(quoted.findAllMatchIn(_).map(_.group(1))).toSet
     assert(keys == Set(Plain.Key, "spark.graft.stream.teardown"), keys)
+    // and the environment variables and system properties it reads:
+    // every read names its key by a literal
+    val reads = texts.map("sys\\.(env|props)\\b".r.findAllIn(_).size).sum
+    val literal =
+      "sys\\.(?:env|props)(?:\\.getOrElse|\\.get)?\\(\"([^\"]+)\"".r
+    val named = texts.flatMap(literal.findAllMatchIn(_).map(_.group(1)))
+    assert(named.size == reads, s"$reads reads, literal names: $named")
+    assert(named.toSet == Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_ONLY",
+      "SPARK_GRAFT_WARM_PASSES", "SPARK_GRAFT_BENCH_OUT",
+      "SPARK_GRAFT_RAM_LOCAL", "SPARK_GRAFT_CPUS", "SPARK_MASTER",
+      "PROFILE_EXPLAIN", "graft.dedup.contract"), named)
   }
 }

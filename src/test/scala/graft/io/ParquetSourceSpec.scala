@@ -15,12 +15,18 @@ class ParquetSourceSpec extends graft.SparkTestBase {
   private def lineitem = s"$sf0001/lineitem.parquet"
 
   /** A Laghos-schema source as a directory of two part files, as Spark
-    * writes it (with `_SUCCESS` and `.crc` files beside them). */
+    * writes it (with `_SUCCESS` and `.crc` files beside them), plus a
+    * copy in progress, `x.parquet._COPYING_`, holding a part file's
+    * bytes. */
   private lazy val laghos: String =
     withTempDir("graft_laghos_", suite = true) { dir =>
       (0 until 400).map(i => (i % 50, i * 0.5, i * 0.25, i * 0.125, i * 1.0))
         .toDF("vertex_id", "x", "y", "z", "e")
         .repartition(2).write.parquet(s"$dir/laghos")
+      val part = new java.io.File(s"$dir/laghos").listFiles()
+        .find(_.getName.startsWith("part-")).get.toPath
+      java.nio.file.Files.copy(part,
+        java.nio.file.Paths.get(s"$dir/laghos/x.parquet._COPYING_"))
       s"$dir/laghos"
     }
 
@@ -68,7 +74,8 @@ class ParquetSourceSpec extends graft.SparkTestBase {
     val all = new java.io.File(laghos).listFiles().toSeq
     val parts = all.filter(f => f.getName.startsWith("part-"))
     assert(parts.size == 2 && all.exists(_.getName == "_SUCCESS") &&
-      all.exists(_.getName.endsWith(".crc")), all)
+      all.exists(_.getName.endsWith(".crc")) &&
+      all.exists(_.getName == "x.parquet._COPYING_"), all)
     assert(l.dataFiles.map(_.getPath.getName).sorted ==
       parts.map(_.getName).sorted)
     assert(l.bytes == parts.map(_.length).sum)
